@@ -2,8 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -62,7 +64,8 @@ object PolyHash {
   * token array producing `array_distinct(Shingles.shingles(toks, n))`
   * exactly — space-joined windows of n tokens (null tokens skipped by
   * `concatWs`, matching `array_join`'s null handling), de-duplicated in
-  * first-occurrence order, empty array below n tokens.
+  * first-occurrence order, empty array below n tokens or for a null
+  * token array.
   *
   * Why (optimization round 18, guide per-task work / §4.1): the
   * composable form is `transform(sequence(...), i → array_join(slice(
@@ -73,8 +76,8 @@ object PolyHash {
   * family. This expression is one loop with a LinkedHashSet, emitting
   * shingles via `UTF8String.concatWs` with zero intermediate arrays —
   * the same treatment [[PolyHash]] got for the hash itself.
-  * Value-identical by construction; property-pinned against the
-  * composable form in LlmSpec (random unicode/whitespace documents).
+  * Value-identical by construction; pinned against the composable form
+  * in ShingleArraySpec (random unicode/whitespace documents, null text).
   */
 case class ShingleArray(child: Expression, n: Int) extends UnaryExpression {
   require(n >= 1, s"shingle width n=$n must be >= 1")
@@ -86,15 +89,21 @@ case class ShingleArray(child: Expression, n: Int) extends UnaryExpression {
   }
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = false
   override def prettyName: String = "shingle_array"
 
-  override def nullSafeEval(input: Any): Any =
+  override def eval(input: InternalRow): Any =
     ShingleArray.shingle(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], n)
+      child.eval(input).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], n)
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleArray.shingle($c, $n)")
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+      |  graft.functions.ShingleArray.shingle(${c.isNull} ? null : ${c.value}, $n);
+      """.stripMargin, isNull = FalseLiteral)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -103,11 +112,12 @@ case class ShingleArray(child: Expression, n: Int) extends UnaryExpression {
 object ShingleArray {
   private val Space = UTF8String.fromString(" ")
 
-  /** Shared by interpreted eval and generated code. */
+  /** Shared by interpreted eval and generated code. A null token array
+    * gives an empty array, like the composable form's `otherwise`. */
   def shingle(
       toks: org.apache.spark.sql.catalyst.util.ArrayData,
       n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val len = toks.numElements()
+    val len = if (toks == null) 0 else toks.numElements()
     if (len < n)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
     val all = new Array[UTF8String](len)

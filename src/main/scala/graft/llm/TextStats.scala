@@ -46,22 +46,23 @@ object TextStats {
   def markerHits(text: Column, words: Seq[String]): Column =
     markerHitsOfTokens(Shingles.tokens(text), words)
 
-  /** [[langId]] over a MATERIALIZED token-array column. Use this form
-    * in pipelines: the tokenizer subtree would otherwise be re-evaluated
-    * once per marker-list occurrence (the HOF filters are interpreted,
-    * so no codegen subexpression elimination applies). */
+  /** [[langId]] over a materialized token-array column. Each marker
+    * list is counted once; one `greatest` over (hits, rank, lang)
+    * structs then picks the first declared language with the largest
+    * positive count. The ("und", 0) candidate ranks above every
+    * language, so it wins at zero hits, and null counts (null tokens)
+    * sort below it. The expression grows linearly with [[LangMarkers]]. */
   def langIdOfTokens(toks: Column): Column = {
-    val scored = LangMarkers.map { case (lang, words) => lang -> markerHitsOfTokens(toks, words) }
-    val best = scored.map(_._2).reduce((a, b) => greatest(a, b))
-    scored.foldLeft(lit("und")) { case (acc, (lang, score)) =>
-      // first language (in declaration order) achieving the max wins;
-      // later entries only claim strictly when the earlier pick lost
-      when(score === best && score > 0 && acc === "und", lit(lang)).otherwise(acc)
-    }
+    val hits = ("und" -> lit(0)) +:
+      LangMarkers.map { case (lang, words) => lang -> markerHitsOfTokens(toks, words) }
+    greatest(hits.zipWithIndex.map { case ((lang, n), i) =>
+      struct(n.as("hits"), lit(-i).as("rank"), lit(lang).as("lang"))
+    }: _*).getField("lang")
   }
 
   /** Heuristic language ID: argmax over [[LangMarkers]] hit counts,
-    * ties and zero-hit documents resolve to "und" (undetermined). */
+    * ties to the first declared language; zero-hit documents resolve to
+    * "und" (undetermined). */
   def langId(text: Column): Column = langIdOfTokens(Shingles.tokens(text))
 
   /** [[qualityScore]] over a materialized token-array column. */

@@ -13,7 +13,7 @@ import org.scalatest.TagAnnotation;
  * The default {@code sbt test} target excludes suites carrying this
  * annotation (see {@code Test / testOptions} in build.sbt) so the
  * driver's verify gate finishes inside its time budget; run the full
- * surface with {@code sbt slowTest} (alias defined in build.sbt).
+ * surface with {@code sbt slowTest} (command defined in build.sbt).
  * Everything these suites pin end-to-end stays covered by the fast
  * gate's unit specs plus the driver's own 203-query DuckDB oracle.
  */

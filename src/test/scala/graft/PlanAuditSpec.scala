@@ -32,6 +32,17 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("ReusedExchange"), s"no exchange reuse in:\n$p")
   }
 
+  test("curation score plans each language marker list once: at most 8 ArrayFilter nodes") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayFilter
+    // parquet input: a local relation would be constant-folded away
+    val scored = graft.api.CurationPipeline.score(Tables.documents(spark, sf))
+    val filters = scored.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case f: ArrayFilter => f }))
+    assert(filters.size <= 8,
+      s"${filters.size} ArrayFilter nodes — a column builder duplicates subtrees:\n" +
+        scored.queryExecution.optimizedPlan)
+  }
+
   test("pi pairs: fused per-frame aggregate — no join, map-side combine, two exchanges") {
     import graft.tracking._
     import org.apache.spark.sql.execution.SparkPlan
