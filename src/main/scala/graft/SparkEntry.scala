@@ -39,7 +39,17 @@ object SparkEntry {
     * driver's events table ships INT64 TIMESTAMP(MICROS) (read as
     * TIMESTAMP_NTZ); the `nanosAsLong` flag is kept for nanos-typed
     * inputs from other sources — it reads TIMESTAMP(NANOS) columns as
-    * raw longs instead of failing, and has no effect on micros. */
+    * raw longs instead of failing, and has no effect on micros.
+    *
+    * The generated-code cache is an LRU of compiled Janino classes keyed
+    * by (source, context class loader), bounded by a static conf that is
+    * read once per JVM, when codegen is first used. One pass of the match
+    * journey (load → kinematics → possession → keepers → PI, graph
+    * tensors, EFPI) fills 140 entries, most of them projections from its
+    * Window operators; the curation journey fills 72. With Spark's
+    * default bound of 100 the match journey's LRU cycles, every lookup
+    * misses and each repeat recompiles about 135 classes. 1000 holds
+    * both working sets several times over. */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
@@ -47,5 +57,6 @@ object SparkEntry {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
 }

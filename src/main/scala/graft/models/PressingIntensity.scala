@@ -85,7 +85,10 @@ object PressingIntensity {
         val all = if (params.ballMethod == "exclude") !isBall else lit(true)
         (all, all)
     }
-    df.filter(colSide || rowSide)
+    // a row with a null frame key belongs to no frame: the staged
+    // path's frame-key inner join drops it, so it must not form a group
+    val keyed = frameKeys.map(col(_).isNotNull).reduce(_ && _)
+    df.filter(keyed && (colSide || rowSide))
       .groupBy(frameKeys.map(col): _*)
       .agg(graft.functions.PiPairsAgg.piPairs(settings, params,
         col(Timestamp), col(ObjectId), col(TeamId), col(BallOwningTeamId),

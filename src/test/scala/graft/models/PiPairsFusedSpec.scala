@@ -149,4 +149,31 @@ class PiPairsFusedSpec extends AnyFunSuite {
         PressingIntensity.pairsStaged(rows, settings, params))
     }
   }
+
+  test("rows with a null frame key form no frame on either path") {
+    import spark.implicits._
+    val frame = Seq(
+      ("a1", "home", 10.0, 5.0, 1.0, true),
+      ("a2", "home", 20.0, -5.0, 0.5, false),
+      ("d1", "away", 12.0, 6.0, -1.0, false),
+      ("ball", "ball", 10.5, 5.2, 1.0, false))
+    def rows(game: Option[String], period: Option[Int], frameId: Option[Long]) =
+      frame.map { case (id, team, x, y, vx, carrier) =>
+        (game, period, frameId, id, team, x, y, vx, carrier)
+      }
+    val df = (rows(Some("g"), Some(1), Some(7L)) ++ rows(Some("g"), Some(1), None) ++
+      rows(None, Some(1), Some(8L)) ++ rows(Some("g"), None, Some(9L)))
+      .toDF(GameId, PeriodId, FrameId, ObjectId, TeamId, X, Y, Vx, IsBallCarrier)
+      .withColumn(Timestamp, coalesce(col(FrameId), lit(0L)) * 40000L)
+      .withColumn(Z, lit(0.0)).withColumn(Vy, lit(0.0)).withColumn(Vz, lit(0.0))
+      .withColumn(Speed, abs(col(Vx)))
+      .withColumn(BallOwningTeamId, lit("home"))
+    Seq(PressingIntensity.Params(),
+      PressingIntensity.Params(method = "full", ballMethod = "include")).foreach { params =>
+      val fused = PressingIntensity.pairs(df, TrackingSettings(), params)
+      assert(fused.select(GameId, PeriodId, FrameId).distinct().collect().toSeq ===
+        Seq(org.apache.spark.sql.Row("g", 1, 7L)))
+      assertEqual(fused, PressingIntensity.pairsStaged(df, TrackingSettings(), params))
+    }
+  }
 }
