@@ -43,13 +43,14 @@ object SparkEntry {
     *
     * The generated-code cache is an LRU of compiled Janino classes keyed
     * by (source, context class loader), bounded by a static conf that is
-    * read once per JVM, when codegen is first used. One pass of the match
-    * journey (load → kinematics → possession → keepers → PI, graph
-    * tensors, EFPI) fills 140 entries, most of them projections from its
-    * Window operators; the curation journey fills 72. With Spark's
-    * default bound of 100 the match journey's LRU cycles, every lookup
-    * misses and each repeat recompiles about 135 classes. 1000 holds
-    * both working sets several times over. */
+    * read once per JVM, when codegen is first used. One cold pass of the
+    * match journey (load → kinematics → possession → keepers → PI, graph
+    * tensors, EFPI) fills 62 entries, and a new SparkContext recompiles
+    * 52 of them on the task side; the curation journey fills 72. With
+    * the Window operators the tracking chain used to plan, the match
+    * pass filled 140, so Spark's default bound of 100 made its LRU
+    * cycle and every repeat recompile. 1000 holds both working sets
+    * several times over. */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")

@@ -7,12 +7,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Engine extension entry point — the supported Spark hook for custom
   * Catalyst surface (`spark.sql.extensions=graft.functions.GraftExtensions`).
   * Registers the native expressions with the function registry so SQL
-  * users get them too: `SELECT vector_dot(a, b) FROM embeddings`.
+  * users get them too: `SELECT vector_dot(a, b) FROM embeddings`, and
+  * plans the group-local node ([[GroupLocal]]).
   * Installed by `SparkEntry.configure`, so every session (Verify,
   * Bench, tests) carries the same SQL surface. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectResolutionRule(_ => GroupLocalDedup)
+    ext.injectPlannerStrategy(_ => GroupLocalStrategy)
     ext.injectFunction((
       new FunctionIdentifier("vector_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "vector_dot"),

@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * is per-frame-local: one aggregate keyed on the frame does the whole
   * conversion in compiled Scala with zero caches, zero self-joins and —
   * when the input is already frame-partitioned (it always is: the
-  * possession window runs right upstream) — zero additional exchanges.
+  * possession stage runs right upstream) — zero additional exchanges.
   *
   * Faithfulness: `eval` transcribes the padFrames/withNodeIndex/
   * Features/pairs column expressions operation-for-operation, including

@@ -47,7 +47,10 @@ private[graft] abstract class OrderedBufferAgg
   override def children: Seq[Expression] = entryFields
   protected def entryFields: Seq[Expression]
 
-  private lazy val numFields = entryFields.length
+  // evaluated per input row: an array built once, not the `Seq` that
+  // subclasses rebuild on every `entryFields` call
+  @transient private lazy val fields: Array[Expression] = entryFields.toArray
+  private lazy val numFields = fields.length
   private lazy val entryType = StructType(entryFields.zipWithIndex.map {
     case (e, i) => StructField(s"_$i", e.dataType, nullable = true)
   })
@@ -62,7 +65,7 @@ private[graft] abstract class OrderedBufferAgg
     val vals = new Array[Any](numFields)
     var i = 0
     while (i < numFields) {
-      vals(i) = InternalRow.copyValue(entryFields(i).eval(input))
+      vals(i) = InternalRow.copyValue(fields(i).eval(input))
       i += 1
     }
     buffer += new GenericInternalRow(vals)

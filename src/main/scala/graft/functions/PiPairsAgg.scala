@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the ball merge, masking and the orientation transpose in compiled
   * Scala: zero self-joins, zero windows, and no exchange beyond the one
   * that clusters rows by frame (none at all when the upstream
-  * possession window already established it — it always does in the
+  * possession stage already established it — it always does in the
   * declared queries).
   *
   * Faithfulness: `eval` transcribes the staged Column tree

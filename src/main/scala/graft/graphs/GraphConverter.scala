@@ -280,7 +280,7 @@ object GraphConverter {
     // frame does it in compiled Scala ([[graft.functions.GraphTensorAgg]]),
     // with zero caches, zero self-joins and zero exchanges beyond the
     // one that clusters the input by frame (none at all when the
-    // upstream possession window already did). The staged path below
+    // upstream possession stage already did). The staged path below
     // remains for Delaunay (needs the per-frame geometric edge table)
     // and as the `nativeAgg = false` generic A/B; output is
     // bit-identical (q_graph_frames oracle hash + GraphTensorAggSpec).

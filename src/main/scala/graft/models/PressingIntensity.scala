@@ -62,7 +62,7 @@ object PressingIntensity {
     * ([[graft.functions.PiPairsAgg]]) replaces the staged
     * window → repartition → self-join → window chain — the plan is the
     * upstream lineage plus one ObjectHashAggregate and an explode, with
-    * no exchange of its own (the possession window upstream already
+    * no exchange of its own (the possession stage upstream already
     * clusters by the frame key). Output is bit-identical to
     * [[pairsStaged]] (six q_pi_* oracle hashes + PiPairsFusedSpec). */
   def pairs(
@@ -111,11 +111,8 @@ object PressingIntensity {
       params: Params = Params()): DataFrame =
     scorePairs(pairJoin(indexedBase(df, settings, params), params), settings, params)
 
-  /** Stage 1 of [[pairs]] — the indexed base relation (side masks +
-    * the single frame-window index pass). Package-private so
-    * [[graft.tools.PiProfile]] can time each stage under the honest
-    * sink; `pairs` is exactly the three stages composed, so the
-    * profiled plans are the production plans. */
+  /** Stage 1 of [[pairsStaged]] — the indexed base relation (side
+    * masks + the single frame-window index pass). */
   private[graft] def indexedBase(
       df: DataFrame,
       settings: TrackingSettings,

@@ -404,7 +404,7 @@ object Efpi {
       // AppendColumns + Exchange + Sort (Catalyst cannot equate the
       // serialized tuple with the upstream partitioning columns) plus a
       // per-row encoder round-trip; the native grouping reuses the
-      // possession window's frame partitioning — zero detection-side
+      // possession stage's frame partitioning — zero detection-side
       // exchange in "frame" mode — and the detection logic runs
       // unchanged inside the aggregate's eval.
       val df0 = segRows.toDF()

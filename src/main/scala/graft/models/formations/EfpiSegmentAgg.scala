@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the native groupBy does not (plans/r17/q_efpi_frame_before.txt):
   * an `AppendColumns` + `Exchange` + `Sort` on the SERIALIZED lambda
   * key — Catalyst cannot see that the tuple fields equal the upstream
-  * possession window's partitioning columns, so every segment row
+  * possession stage's partitioning columns, so every segment row
   * re-shuffles — and a per-row encoder round-trip (`SegRow` objects in,
   * `OutRow` objects out). Grouping on the NATIVE columns instead lets
   * the aggregation reuse the frame-key partitioning (zero exchange in

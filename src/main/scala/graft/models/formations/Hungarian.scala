@@ -17,12 +17,14 @@ object Hungarian {
     val v = new Array[Double](n + 1)
     val p = new Array[Int](n + 1)    // p(j) = row matched to column j (1-based)
     val way = new Array[Int](n + 1)
+    val minv = new Array[Double](n + 1)
+    val used = new Array[Boolean](n + 1)
     var i = 1
     while (i <= n) {
       p(0) = i
       var j0 = 0
-      val minv = Array.fill(n + 1)(Double.PositiveInfinity)
-      val used = new Array[Boolean](n + 1)
+      java.util.Arrays.fill(minv, Double.PositiveInfinity)
+      java.util.Arrays.fill(used, false)
       var done = false
       while (!done) {
         used(j0) = true

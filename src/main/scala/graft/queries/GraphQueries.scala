@@ -190,8 +190,7 @@ object GraphQueries extends QueryModule {
     val trk = SyntheticTracking.df(s, d, Cols.ByObjectPeriod)
     val kin = Kinematics(trk, TrackingSettings(), None, None)
     // graph features never read acceleration — dropping the 4 columns
-    // lets Catalyst prune the second kinematics window pass entirely
-    // (and keeps them out of the graphFrames persists)
+    // keeps them out of the graphFrames persists
     val dat = Possession.inferBallCarrier(kin, TrackingSettings())
       .drop(Ax, Ay, Az, Acceleration)
     GraphConverter.removeIncompleteFrames(dat)

@@ -28,12 +28,12 @@ object TrackingQueries extends QueryModule {
         "SELECT game_id, period_id, frame_id, id, vx, vy, v, ax, ay, a FROM vel")),
       headline = true),
 
-    // ----- A6: Savitzky-Golay smoothing as native FIR window -----
+    // ----- A6: Savitzky-Golay smoothing (the oracle's FIR window terms) -----
     GraftQuery(
       "q_trk_savgol",
       (s, d) => {
         val trk = SyntheticTracking.df(s, d, Cols.ByObjectPeriod)
-        Kinematics.withVelocity(trk, Some(SavGol.DefaultPlayer), Some(SavGol.DefaultBall))
+        Kinematics(trk, TrackingSettings(), Some(SavGol.DefaultPlayer), Some(SavGol.DefaultBall))
           .select(col(GameId), col(PeriodId), col(FrameId), col(ObjectId).as("id"),
             col(Vx).as("vx_s"))
       },

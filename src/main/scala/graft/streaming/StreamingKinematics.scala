@@ -16,10 +16,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * tracked object (≤23 per match), so a 1000-match stream holds ~23k
   * state entries per executor-partition share — negligible; the
   * shuffle key (game, object, period) is the same partitioning the
-  * batch window uses.
+  * batch series kernel uses.
   *
-  * Arithmetic mirrors `Kinematics.withVelocity` (ms-truncated seconds,
-  * forward diffs, magnitude capped at the settings max) so a replayed
+  * Arithmetic mirrors the unsmoothed `Kinematics` velocity
+  * (ms-truncated seconds, forward diffs, magnitude capped at the
+  * settings max) so a replayed
   * stream converges to the batch result — asserted in
   * StreamingKinematicsSpec.
   */

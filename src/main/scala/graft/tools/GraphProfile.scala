@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
 
 /** Stage profile of the honest q_graph_frames cost (VERDICT r10 #8) —
   * the largest headline entry (~8 s of ~18 s at sf0.1) and the one
-  * without a recorded headroom conclusion. Same method as
-  * [[PiProfile]]: time the REAL production sub-plans (graphFrames was
+  * without a recorded headroom conclusion. Method: time the REAL
+  * production sub-plans (graphFrames was
   * refactored into `nodeTensor`/`pairTensor` stage functions the way
   * PI's `pairs` was — plan-neutral, oracle-verified) under the
   * HonestBench xxhash64-all-columns sink, min-of-3 after a warm-up.

@@ -1,8 +1,11 @@
 package graft.tracking
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.functions.{Group, GroupKernel, GroupLocal}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.PlanShim
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Velocity / acceleration / capping over the canonical long table.
   *
@@ -17,98 +20,116 @@ import org.apache.spark.sql.functions._
   *  - ax = Δvx/Δt with the *same* dt column; a = magnitude;
   *  - only the magnitudes v and a are capped (components untouched).
   *
-  * Everything is expressed over one window spec (game, id, period ordered
-  * by timestamp) so Spark plans a single shuffle + sort for the whole
-  * kinematics chain; all arithmetic stays in whole-stage codegen.
+  * The chain runs as one series kernel on [[GroupLocal]]: one group per
+  * (game, id, period), ordered by timestamp, so the plan is one shuffle
+  * and one sort. The kernel reads each series once, differences it,
+  * smooths the velocity components with [[SavGol.smoothArray]],
+  * differences again and caps the magnitudes. Its arithmetic is the
+  * SQL arithmetic term for term, so the results equal the window form
+  * (`WindowReference` in the tests) bit for bit:
+  *  - a difference with a null operand is null, and a null quotient is
+  *    filled with 0;
+  *  - a zero dt raises Spark's `DIVIDE_BY_ZERO` under ANSI (as `Divide`
+  *    does) when the numerator is not null; without ANSI the quotient
+  *    is null, so 0. The acceleration of a dropped row is never
+  *    computed;
+  *  - a cap applies when the magnitude is greater than the limit in SQL
+  *    order (NaN is greater than every number); a null id is neither
+  *    ball nor player and is not capped.
+  *
+  * Rows with null x and y are dropped after the series is computed, as
+  * the reference drops null-position rows. The timestamp is a BIGINT of
+  * microseconds and the coordinates DOUBLE.
   */
 object Kinematics {
   import Cols._
 
-  private def wObj = Window.partitionBy(ByObjectPeriod.map(col): _*).orderBy(col(Timestamp))
-  private def wObjAll = Window.partitionBy(ByObjectPeriod.map(col): _*)
-
-  private def mag(a: Column, b: Column, c: Column): Column = sqrt(a * a + b * b + c * c)
-
-  def withVelocity(
-      df: DataFrame,
-      playerSmoothing: Option[SavGol] = Some(SavGol.DefaultPlayer),
-      ballSmoothing: Option[SavGol] = Some(SavGol.DefaultBall)): DataFrame = {
-    val w = wObj
-    // Polars dt.total_milliseconds() truncates to ms; replicate exactly.
-    val sec = (col(Timestamp).cast("long") / 1000L).cast("long") / lit(1000.0)
-    // the four lags share one window spec and are mutually independent —
-    // defining them in ONE select plans ONE Window pass (chained
-    // withColumns would interleave Projects and leave four)
-    val raw = df
-      .select(col("*"),
-        lag(sec, 1).over(w).as("__lsec"),
-        lag(col(X), 1).over(w).as("__lx"),
-        lag(col(Y), 1).over(w).as("__ly"),
-        lag(col(Z), 1).over(w).as("__lz"))
-      .withColumn("__dt", sec - col("__lsec"))
-      .withColumn(Vx, coalesce((col(X) - col("__lx")) / col("__dt"), lit(0.0)))
-      .withColumn(Vy, coalesce((col(Y) - col("__ly")) / col("__dt"), lit(0.0)))
-      .withColumn(Vz, coalesce((col(Z) - col("__lz")) / col("__dt"), lit(0.0)))
-      .drop("__lsec", "__lx", "__ly", "__lz")
-
-    val smoothed =
-      if (playerSmoothing.isEmpty && ballSmoothing.isEmpty) raw
-      else {
-        val n = count(lit(1)).over(wObjAll)
-        val rn = row_number().over(wObj)
-        val withIdx = raw.withColumn("__n", n).withColumn("__rn", rn)
-        def smooth(c: String): Column = {
-          val pl = playerSmoothing.map(_.expr(col(c), wObj, col("__n"), col("__rn"))).getOrElse(col(c))
-          val bl = ballSmoothing.map(_.expr(col(c), wObj, col("__n"), col("__rn"))).getOrElse(col(c))
-          when(col(ObjectId) === Ball, bl).otherwise(pl)
-        }
-        Seq(Vx, Vy, Vz).foldLeft(withIdx)((d, c) => d.withColumn(c, smooth(c)))
-          .drop("__n", "__rn")
-      }
-    smoothed.withColumn(Speed, mag(col(Vx), col(Vy), col(Vz)))
-  }
-
-  /** Requires the `__dt` helper column from [[withVelocity]]. */
-  def withAcceleration(df: DataFrame): DataFrame = {
-    val w = wObj
-    // one select = one Window pass for the three velocity lags
-    df.select(col("*"),
-        lag(col(Vx), 1).over(w).as("__lvx"),
-        lag(col(Vy), 1).over(w).as("__lvy"),
-        lag(col(Vz), 1).over(w).as("__lvz"))
-      .withColumn(Ax, coalesce((col(Vx) - col("__lvx")) / col("__dt"), lit(0.0)))
-      .withColumn(Ay, coalesce((col(Vy) - col("__lvy")) / col("__dt"), lit(0.0)))
-      .withColumn(Az, coalesce((col(Vz) - col("__lvz")) / col("__dt"), lit(0.0)))
-      .withColumn(Acceleration, mag(col(Ax), col(Ay), col(Az)))
-      .drop("__lvx", "__lvy", "__lvz")
-  }
-
-  /** Magnitude capping (`soccer/dataset/utils.py:6-39`): ball and player
-    * caps differ; components are left as-is. */
-  def capSpeedAcceleration(df: DataFrame, s: TrackingSettings): DataFrame = {
-    val isBall = col(ObjectId) === Ball
-    df.withColumn(Speed,
-        when(isBall && col(Speed) > s.maxBallSpeed, s.maxBallSpeed)
-          .when(!isBall && col(Speed) > s.maxPlayerSpeed, s.maxPlayerSpeed)
-          .otherwise(col(Speed)))
-      .withColumn(Acceleration,
-        when(isBall && col(Acceleration) > s.maxBallAcceleration, s.maxBallAcceleration)
-          .when(!isBall && col(Acceleration) > s.maxPlayerAcceleration, s.maxPlayerAcceleration)
-          .otherwise(col(Acceleration)))
-  }
-
   /** Full kinematics chain of the reference `load()` steps 5-8
     * (`kloppy_polars.py:882-894`): velocity (+smoothing), acceleration,
-    * caps, drop helper cols and null-position rows. */
+    * caps, and the drop of null-position rows. */
   def apply(
       df: DataFrame,
       settings: TrackingSettings = TrackingSettings(),
       playerSmoothing: Option[SavGol] = Some(SavGol.DefaultPlayer),
-      ballSmoothing: Option[SavGol] = Some(SavGol.DefaultBall)): DataFrame = {
-    val v = withVelocity(df, playerSmoothing, ballSmoothing)
-    val a = withAcceleration(v)
-    capSpeedAcceleration(a, settings)
-      .drop("__dt")
-      .filter(!(col(X).isNull && col(Y).isNull))
+      ballSmoothing: Option[SavGol] = Some(SavGol.DefaultBall)): DataFrame =
+    GroupLocal(df, ByObjectPeriod, Seq(Timestamp),
+      SeriesKernel(settings, playerSmoothing, ballSmoothing, SQLConf.get.ansiEnabled))
+}
+
+/** One object's samples in one period → vx, vy, vz, v, ax, ay, az, a. */
+private final case class SeriesKernel(
+    settings: TrackingSettings,
+    playerSmoothing: Option[SavGol],
+    ballSmoothing: Option[SavGol],
+    ansi: Boolean) extends GroupKernel {
+  import Cols._
+
+  override def inputs: Seq[(String, DataType)] =
+    Seq(ObjectId -> StringType, Timestamp -> LongType, X -> DoubleType, Y -> DoubleType, Z -> DoubleType)
+  override def values: Seq[StructField] =
+    Seq(Vx, Vy, Vz, Speed, Ax, Ay, Az, Acceleration).map(StructField(_, DoubleType, nullable = false))
+
+  private val IdIn = 0; private val TsIn = 1; private val XIn = 2; private val YIn = 3
+  private val ball = UTF8String.fromString(Ball)
+
+  /** `coalesce(num / dt, 0)` for a non-null numerator and dt. */
+  private def quotient(num: Double, dt: Double): Double =
+    if (dt == 0.0) { if (ansi) throw PlanShim.divideByZero() else 0.0 }
+    else num / dt
+
+  /** SQL `a > b` on doubles: NaN is greater than every number. */
+  private def greater(a: Double, b: Double): Boolean =
+    if (a.isNaN) !b.isNaN else !b.isNaN && a > b
+
+  override def run(g: Group): Unit = {
+    val n = g.size
+    val isBall = Option(g.string(0, IdIn)).map(_ == ball)
+    // dt(i) in seconds from ms-truncated timestamps; NaN marks a null dt
+    val dt = new Array[Double](n)
+    var prev = Double.NaN
+    var i = 0
+    while (i < n) {
+      val sec =
+        if (g.isNull(i, TsIn)) Double.NaN
+        else (g.long(i, TsIn).toDouble / 1000.0).toLong.toDouble / 1000.0
+      dt(i) = if (i == 0 || sec.isNaN || prev.isNaN) Double.NaN else sec - prev
+      prev = sec
+      i += 1
+    }
+    val smoothing = if (isBall.contains(true)) ballSmoothing else playerSmoothing
+    val vel = Array.tabulate(3) { c =>
+      val in = XIn + c
+      val raw = new Array[Double](n)
+      var i = 1
+      while (i < n) {
+        if (!dt(i).isNaN && !g.isNull(i, in) && !g.isNull(i - 1, in))
+          raw(i) = quotient(g.double(i, in) - g.double(i - 1, in), dt(i))
+        i += 1
+      }
+      smoothing.fold(raw)(_.smoothArray(raw))
+    }
+    val (vx, vy, vz) = (vel(0), vel(1), vel(2))
+    def cap(x: Double, ballLimit: Double, playerLimit: Double): Double = isBall match {
+      case Some(true) if greater(x, ballLimit) => ballLimit
+      case Some(false) if greater(x, playerLimit) => playerLimit
+      case _ => x
+    }
+    i = 0
+    while (i < n) {
+      if (g.isNull(i, XIn) && g.isNull(i, YIn)) g.drop(i)
+      else {
+        val fromPrev = i > 0 && !dt(i).isNaN
+        val ax = if (fromPrev) quotient(vx(i) - vx(i - 1), dt(i)) else 0.0
+        val ay = if (fromPrev) quotient(vy(i) - vy(i - 1), dt(i)) else 0.0
+        val az = if (fromPrev) quotient(vz(i) - vz(i - 1), dt(i)) else 0.0
+        g.setDouble(i, 0, vx(i)); g.setDouble(i, 1, vy(i)); g.setDouble(i, 2, vz(i))
+        g.setDouble(i, 3, cap(math.sqrt(vx(i) * vx(i) + vy(i) * vy(i) + vz(i) * vz(i)),
+          settings.maxBallSpeed, settings.maxPlayerSpeed))
+        g.setDouble(i, 4, ax); g.setDouble(i, 5, ay); g.setDouble(i, 6, az)
+        g.setDouble(i, 7, cap(math.sqrt(ax * ax + ay * ay + az * az),
+          settings.maxBallAcceleration, settings.maxPlayerAcceleration))
+      }
+      i += 1
+    }
   }
 }

@@ -1,27 +1,27 @@
 package graft.tracking
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
-import org.apache.spark.sql.functions._
-
-/** Savitzky-Golay smoothing as a *native window FIR filter*.
+/** Savitzky-Golay smoothing as a fixed FIR filter.
   *
   * The reference calls `scipy.signal.savgol_filter(values, window_length,
   * polyorder)` per (object, period) group (`kloppy_polars.py:313-380`).
   * For a fixed (window, polyorder) the filter is linear: every output is
   * a fixed linear combination of nearby inputs — including scipy's
   * default `mode="interp"` edges, which fit a degree-p polynomial to the
-  * first/last `window` samples. So the whole thing compiles to Spark
-  * window `lag`/`lead` sums inside whole-stage codegen: no UDF, no
-  * collect_list, no Python. Groups shorter than `window` pass through
-  * unchanged (scipy raises there; the reference pre-checks and passes
-  * through, `kloppy_polars.py:346-347`).
+  * first/last `window` samples. [[smoothArray]] is the one
+  * implementation, run by the kinematics series kernel; [[sql]] writes
+  * the same sums as DuckDB window terms for the oracle. Groups shorter
+  * than `window` pass through unchanged (scipy raises there; the
+  * reference pre-checks and passes through, `kloppy_polars.py:346-347`).
   *
   * Coefficients come from the projection matrix H = A (AᵀA)⁻¹ Aᵀ with
   * A[i][j] = i^j over window positions 0..w-1:
   *  - interior output = H[m] · window values   (m = w/2)
   *  - first m outputs = H[0..m-1] · first w values
   *  - last m outputs  = H[w-m..w-1] · last w values
+  *
+  * Every dot product folds from its first term (`c0*t0 + c1*t1 + …`),
+  * the term order of the SQL form: float addition is not associative,
+  * and the oracle compares exact values (including `-0.0`).
   */
 final case class SavGol(window: Int, polyorder: Int) {
   require(window % 2 == 1 && window > polyorder, s"bad savgol params ($window, $polyorder)")
@@ -46,65 +46,29 @@ final case class SavGol(window: Int, polyorder: Int) {
 
   def centerCoeffs: Array[Double] = projection(m)
 
-  /** Smoothing as a pure reference implementation (tests / small data). */
+  /** The smoothed series (a copy when shorter than the window). */
   def smoothArray(xs: Array[Double]): Array[Double] = {
     val n = xs.length
     if (n < window) return xs.clone()
     val out = new Array[Double](n)
+    /** Σ coeffs(j) · xs(from + j), folded from the first term. */
+    def dot(coeffs: Array[Double], from: Int): Double = {
+      var s = coeffs(0) * xs(from)
+      var j = 1
+      while (j < window) { s += coeffs(j) * xs(from + j); j += 1 }
+      s
+    }
     val c = centerCoeffs
     var i = m
-    while (i < n - m) {
-      var s = 0.0; var j = 0
-      while (j < window) { s += c(j) * xs(i - m + j); j += 1 }
-      out(i) = s; i += 1
-    }
-    for (i <- 0 until m) {
-      var s = 0.0
-      for (j <- 0 until window) s += projection(i)(j) * xs(j)
-      out(i) = s
-    }
-    for (d <- 0 until m) { // d = distance from end (0 = last row)
-      val row = window - 1 - d
-      var s = 0.0
-      for (j <- 0 until window) s += projection(row)(j) * xs(n - window + j)
-      out(n - 1 - d) = s
+    while (i < n - m) { out(i) = dot(c, i - m); i += 1 }
+    i = 0
+    while (i < m) {
+      out(i) = dot(projection(i), 0)
+      // i = distance from the end (0 = last row)
+      out(n - 1 - i) = dot(projection(window - 1 - i), n - window)
+      i += 1
     }
     out
-  }
-
-  /** Value of `v` at partition position (current + offset), offset may be
-    * negative (lag) or positive (lead); 0 is the row itself. */
-  private def at(v: Column, offset: Int): Column =
-    if (offset == 0) v
-    else if (offset < 0) lag(v, -offset)
-    else lead(v, offset)
-
-  private def dot(coeffs: Array[Double], term: Int => Column): Column =
-    coeffs.indices.map(j => lit(coeffs(j)) * term(j)).reduce(_ + _)
-
-  /** The smoothed column. `ordered` must be the partition's ordering
-    * window (partitionBy + orderBy); `n`/`rn` are count-over-partition
-    * and row_number columns the caller computed over the same keys. */
-  def expr(v: Column, ordered: WindowSpec, n: Column, rn: Column): Column = {
-    def atW(offset: Int): Column = at(v, offset) match {
-      case c if offset == 0 => c
-      case c => c.over(ordered)
-    }
-    // interior: offsets -m..m with center coefficients
-    val interior = dot(centerCoeffs, j => atW(j - m))
-    // head branch for 0-based position i: value j is at offset j-i
-    val headCases = (0 until m).map { i =>
-      (rn - 1 === i, dot(projection(i), j => atW(j - i)))
-    }
-    // tail branch for distance-from-end d: value j (of the last w) is at
-    // offset j-(w-1)+d
-    val tailCases = (0 until m).map { d =>
-      (n - rn === d, dot(projection(window - 1 - d), j => atW(j - (window - 1) + d)))
-    }
-    val branched = (headCases ++ tailCases)
-      .foldLeft(when(lit(false), v)) { case (acc, (cond, value)) => acc.when(cond, value) }
-      .otherwise(interior)
-    when(n < window, v).otherwise(branched)
   }
 
   /** DuckDB SQL text for the same computation, with the same term order

@@ -43,6 +43,41 @@ class PlanAuditSpec extends AnyFunSuite {
         scored.queryExecution.optimizedPlan)
   }
 
+  test("tracking chain: load → keepers plans no Window and at most two exchanges") {
+    import graft.tracking.Goalkeepers
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val players = Seq("h1", "h2", "a1", "a2")
+    val dir = java.nio.file.Files.createTempDirectory("graft_chain_audit").toFile
+    val csv = new java.io.File(dir, "g.csv")
+    val w = new java.io.PrintWriter(csv)
+    try {
+      w.println((Seq("game_id", "period_id", "frame_id", "timestamp") ++
+        players.flatMap(id => Seq(s"${id}_x", s"${id}_y")) ++ Seq("ball_x", "ball_y", "ball_z")).mkString(","))
+      for (f <- 0 until 20)
+        w.println((Seq("g", "1", f.toString, (f * 40000L).toString) ++
+          players.indices.flatMap(k => Seq(s"${k * 3.0 + 0.1 * f}", s"${k - 2.0}")) ++
+          Seq(s"${0.1 * f + 0.5}", "-1.7", "0.1")).mkString(","))
+    } finally w.close()
+    val df = Goalkeepers.infer(graft.api.SoccerPipeline.load(spark, csv.getAbsolutePath, players))
+    df.collect()
+    def flatten(p: SparkPlan): Seq[SparkPlan] = {
+      val inner = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => Nil
+      }
+      p +: (p.children ++ inner).flatMap(flatten)
+    }
+    val names = flatten(df.queryExecution.executedPlan).map(_.nodeName)
+    assert(!names.exists(_.contains("Window")),
+      s"the tracking chain still plans Window operators:\n${names.mkString("\n")}")
+    // the object-period key for kinematics and the frame key for
+    // possession, which the keepers stage rides
+    val exchanges = names.count(n => n.contains("Exchange") && !n.contains("Reused"))
+    assert(exchanges <= 2, s"the tracking chain plans $exchanges exchanges:\n${names.mkString("\n")}")
+  }
+
   test("pi pairs: fused per-frame aggregate — no join, map-side combine, two exchanges") {
     import graft.tracking._
     import org.apache.spark.sql.execution.SparkPlan

@@ -7,11 +7,13 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A repeated match journey reuses its generated code. One pass of
-  * load → keepers → PI, graph tensors and EFPI compiles about 130
-  * classes in a fresh JVM, more than Spark's default codegen cache holds
-  * (100): with that bound the second pass recompiled 128 of them. The
-  * cache bound set in `SparkEntry.configure` must hold the whole
-  * working set, so the second pass compiles nothing. */
+  * load → keepers → PI, graph tensors and EFPI compiled about 130
+  * classes in a fresh JVM while the tracking chain planned Window
+  * operators (about 60 since it runs as group kernels), more than
+  * Spark's default codegen cache holds (100): with that bound the
+  * second pass recompiled 128 of them. The cache bound set in
+  * `SparkEntry.configure` must hold the whole working set, so the
+  * second pass compiles nothing. */
 class CodegenCacheSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 

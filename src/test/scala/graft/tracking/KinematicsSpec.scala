@@ -39,7 +39,7 @@ class KinematicsSpec extends AnyFunSuite {
   }
 
   test("savgol smoothing applied per object partition") {
-    val out = Kinematics.withVelocity(trk, Some(SavGol(3, 1)), None)
+    val out = Kinematics(trk, TrackingSettings(), Some(SavGol(3, 1)), None)
       .filter(col(ObjectId) === "p1").orderBy(FrameId).select(Vx).collect().map(_.getDouble(0))
     // raw vx = [0,25,25,25,25]; w3p1: head edge = polyfit of first 3, interior = mean3
     val want = SavGol(3, 1).smoothArray(Array(0.0, 25.0, 25.0, 25.0, 25.0))
