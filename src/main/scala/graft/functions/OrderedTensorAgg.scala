@@ -14,7 +14,8 @@ import org.apache.spark.sql.types._
   *
   * The generic assembly (`collect_list(struct) + array_sort +
   * transform/element_at`, the original
-  * [[graft.graphs.GraphConverter.graphFrames]] shape) is correct but
+  * [[graft.graphs.GraphConverter.graphFrames]] shape, now the test-side
+  * reference `GraphAssemblyReference`) is correct but
   * pays for generality three times per frame: the sort runs a codegen'd
   * struct comparator over full payload structs, the higher-order
   * `transform`/`element_at` rebuild is interpreted (HOFs are

@@ -48,8 +48,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * oracle hashes and by PiPairsFusedSpec (tti bit-exact, pti ≤4 ULP —
   * the exp wobble compounded by the final division — and the round-6
   * projection exact) on every declared parameter combination
-  * plus null/NaN corner frames. The staged path remains as
-  * `PressingIntensity.pairsStaged` for the A/B and the corner specs.
+  * plus null/NaN corner frames. The staged path is the test-side
+  * reference `PiStagedReference.pairs` those specs compare against.
   */
 private[graft] case class PiPairsAgg(
     ts: Expression,
@@ -144,7 +144,7 @@ private[graft] case class PiPairsAgg(
     if (r.isNullAt(10)) null else java.lang.Double.valueOf(r.getDouble(10)),
     if (r.isNullAt(11)) null else java.lang.Double.valueOf(r.getDouble(11)))
 
-  /** Side membership — PressingIntensity.indexedBase transcribed. */
+  /** Side membership — the staged chain's indexed base (`PiStagedReference`) transcribed. */
   private def colSide(nd: Nd): java.lang.Boolean = method match {
     case "teams" => ballMethod match {
       case "exclude" => tAnd(nd.isOwning, tNot(nd.isBall))
@@ -181,7 +181,7 @@ private[graft] case class PiPairsAgg(
     }
   }
 
-  /** TTI (scorePairs transcribed): null iff any of the 12 coordinates
+  /** TTI (`PiStagedReference` scorePairs transcribed): null iff any of the 12 coordinates
     * is null — every coordinate feeds at least one term of the sum and
     * SQL nulls propagate through every arithmetic step. */
   private def ttiOf(r: Nd, c: Nd): java.lang.Double = {
@@ -217,7 +217,7 @@ private[graft] case class PiPairsAgg(
     else if (b == null) a
     else if (java.lang.Double.compare(b.doubleValue(), a.doubleValue()) < 0) b else a
 
-  /** PTI (scorePairs transcribed): greatest/least SKIP a null expArg,
+  /** PTI (`PiStagedReference` scorePairs transcribed): greatest/least SKIP a null expArg,
     * so a null TTI clamps to exp(-700), not null. */
   private def ptiOf(tti: java.lang.Double): Double = {
     val expArg: java.lang.Double =

@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * [[graft.functions.MatVecAffine]] expression (weights baked into
   * the generated Java — one fused double loop per call, no
   * interpreted lambda dispatch, no intermediate arrays); the
-  * equivalent higher-order-function form stays as [[affineFold]] for
-  * bit-parity arbitration.
+  * equivalent higher-order-function form is the test-side reference
+  * `AffineFoldReference.affineFold` for bit-parity arbitration.
   */
 object GnnInference {
 
@@ -46,39 +46,14 @@ object GnnInference {
     * activation ∈ {relu, sigmoid, linear}. */
   final case class DenseLayer(w: Seq[Seq[Double]], b: Seq[Double], activation: String)
 
-  /** out(k) = act( b(k) + Σ_m z(m)·w(m)(k) ) as an array column.
-    * Production path: the codegen'd [[graft.functions.MatVecAffine]]
-    * (literal weights fused into generated Java — the interpreted-HOF
-    * chain below was the last non-codegen hot loop in the engine);
-    * bit-identical to [[affineFold]], which stays as the arbitration
-    * form (MatVecAffineSpec pins element-for-element parity including
-    * the null quirks). */
+  /** out(k) = act( b(k) + Σ_m z(m)·w(m)(k) ) as an array column,
+    * through the codegen'd [[graft.functions.MatVecAffine]] (literal
+    * weights fused into generated Java — the interpreted-HOF chain it
+    * replaced was the last non-codegen hot loop in the engine).
+    * MatVecAffineSpec pins element-for-element parity with that
+    * chain (`AffineFoldReference.affineFold`), null quirks included. */
   private def affine(z: Column, w: Seq[Seq[Double]], b: Seq[Double], act: String): Column =
-    // SPARK_GRAFT_GNN_HOF keeps the generic arm reachable for the
-    // honest A/B (same pattern as the tensor aggregates' nativeAgg
-    // switch) — never set in production
-    if (sys.env.contains("SPARK_GRAFT_GNN_HOF")) affineFold(z, w, b, act)
-    else graft.functions.MatVecAffine.affineNative(z, w, b, act)
-
-  /** The equivalent higher-order-function form (CodegenFallback; kept
-    * for cross-checking the native expression, like Similarity.dotFold). */
-  private[graft] def affineFold(z: Column, w: Seq[Seq[Double]], b: Seq[Double], act: String): Column = {
-    val wl = typedLit(w)
-    val bl = typedLit(b)
-    val raw = transform(sequence(lit(0), lit(b.size - 1)), k =>
-      element_at(bl, k + 1) +
-        aggregate(
-          zip_with(z, transform(wl, row => element_at(row, k + 1)), (zi, wi) => zi * wi),
-          lit(0.0), (acc, x) => acc + x))
-    act match {
-      case "relu" => transform(raw, v => greatest(v, lit(0.0)))
-      case "sigmoid" => transform(raw, v => lit(1.0) / (lit(1.0) + exp(-v)))
-      case "softplus" =>
-        // ln(1+eˣ) with the standard overflow guard max(x,0)+ln(1+e^−|x|)
-        transform(raw, v => greatest(v, lit(0.0)) + log(lit(1.0) + exp(-abs(v))))
-      case _ => raw
-    }
-  }
+    graft.functions.MatVecAffine.affineNative(z, w, b, act)
 
   /** One CGConv message pass over long-form tables.
     * @param nodes  (keys…, `idx`, `x` ARRAY<DOUBLE>)

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *    pair self-join;
   *  - matrices are assembled by direct-to-tensor
   *    `TypedImperativeAggregate`s ([[graft.functions.OrderedTensorAgg]];
-  *    the generic `collect_list` + `array_sort` + `transform` shape is
-  *    retained for the honest A/B), keyed by an explicit node index
+  *    the generic `collect_list` + `array_sort` + `transform` shape
+  *    they replaced is the test-side reference
+  *    `GraphAssemblyReference`), keyed by an explicit node index
   *    that replicates the reference's sort
   *    (`graph_converter.py:214-222`): possession players, then
   *    defenders, then ball, each by object id;
@@ -272,8 +273,7 @@ object GraphConverter {
       df: DataFrame,
       settings: GraphSettings,
       labelCol: String = Label,
-      graphIdCol: String = GraphId,
-      nativeAgg: Boolean = true): DataFrame = {
+      graphIdCol: String = GraphId): DataFrame = {
     // Fast path (optimization round 17): the whole conversion — padding,
     // completeness, node order, node features, adjacency, edge features
     // — is frame-local, so ONE TypedImperativeAggregate keyed on the
@@ -281,10 +281,10 @@ object GraphConverter {
     // with zero caches, zero self-joins and zero exchanges beyond the
     // one that clusters the input by frame (none at all when the
     // upstream possession stage already did). The staged path below
-    // remains for Delaunay (needs the per-frame geometric edge table)
-    // and as the `nativeAgg = false` generic A/B; output is
-    // bit-identical (q_graph_frames oracle hash + GraphTensorAggSpec).
-    if (nativeAgg && settings.adjacencyMatrixType != GraphSettings.Delaunay)
+    // serves Delaunay (needs the per-frame geometric edge table);
+    // output is bit-identical (q_graph_frames oracle hash +
+    // GraphTensorAggSpec).
+    if (settings.adjacencyMatrixType != GraphSettings.Delaunay)
       return graphFramesFused(df, settings, labelCol, graphIdCol)
     // Both persists are load-bearing at scale: padFrames reads its
     // input 4× (counts, frame list, ball check, union) and the
@@ -302,7 +302,7 @@ object GraphConverter {
       if (settings.pad) padFrames(input, labelCol, graphIdCol)
       else removeIncompleteFrames(input))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assembleGraphFrames(prepared, settings, labelCol, graphIdCol, nativeAgg)
+    assembleGraphFrames(prepared, settings, labelCol, graphIdCol)
   }
 
   /** The fused single-aggregation [[graphFrames]] body (non-Delaunay
@@ -367,81 +367,45 @@ object GraphConverter {
 
   /** The node half of the assembly: features + the ordered tensor
     * aggregate → one row per frame with `x` / `object_ids` (plus the
-    * label/graph-id passthrough columns). Public within the package so
-    * [[graft.tools.GraphProfile]] can time the production sub-plan. */
-  private[graft] def nodeTensor(
+    * label/graph-id passthrough columns). The direct-to-tensor
+    * [[graft.functions.OrderedTensorAgg]] is bit-identical to the
+    * generic collect_list + array_sort + transform rebuild it replaced
+    * (q_graph_frames oracle hash; `GraphConverterSpec` against
+    * `GraphAssemblyReference`). */
+  private def nodeTensor(
       prepared: DataFrame,
       settings: GraphSettings,
-      labelCol: String = Label,
-      graphIdCol: String = GraphId,
-      nativeAgg: Boolean = true): DataFrame = {
-    val nodes = withNodeFeatures(prepared, settings)
+      labelCol: String,
+      graphIdCol: String): DataFrame = {
     val optCols = Seq(labelCol, graphIdCol, BallOwningTeamId).filter(prepared.columns.contains)
-    // the direct-to-tensor TypedImperativeAggregate
-    // ([[graft.functions.OrderedTensorAgg]]) replaces the generic
-    // collect_list + array_sort + interpreted transform/element_at
-    // rebuild; `nativeAgg = false` keeps the generic shape for the
-    // honest A/B in graft.tools.BucketedSoak. Output is bit-identical
-    // (q_graph_frames oracle hash unchanged).
-    if (nativeAgg)
-      nodes
-        .groupBy(frameKeys.map(col): _*)
-        .agg(
-          graft.functions.OrderedTensorAgg.orderedNodes(col("node_idx"),
-            col("x_features") -> "x", col(ObjectId) -> "object_ids").as("__nx"),
-          optCols.map(c => first(col(c)).as(c)): _*)
-        .withColumn("x", col("__nx").getField("x"))
-        .withColumn("object_ids", col("__nx").getField("object_ids"))
-        .drop("__nx")
-    else
-      nodes
-        .groupBy(frameKeys.map(col): _*)
-        .agg(
-          array_sort(collect_list(struct(col("node_idx"), col("x_features"), col(ObjectId))))
-            .as("__nodes"),
-          optCols.map(c => first(col(c)).as(c)): _*)
-        .withColumn("x", transform(col("__nodes"), _.getField("x_features")))
-        .withColumn("object_ids", transform(col("__nodes"), _.getField(ObjectId)))
-        .drop("__nodes")
+    withNodeFeatures(prepared, settings)
+      .groupBy(frameKeys.map(col): _*)
+      .agg(
+        graft.functions.OrderedTensorAgg.orderedNodes(col("node_idx"),
+          col("x_features") -> "x", col(ObjectId) -> "object_ids").as("__nx"),
+        optCols.map(c => first(col(c)).as(c)): _*)
+      .withColumn("x", col("__nx").getField("x"))
+      .withColumn("object_ids", col("__nx").getField("object_ids"))
+      .drop("__nx")
   }
 
   /** The pair half of the assembly: the per-frame pair fan-out + the
     * adjacency/edge tensor aggregate → one row per frame with `a` /
     * `e`. */
-  private[graft] def pairTensor(
-      prepared: DataFrame,
-      settings: GraphSettings,
-      nativeAgg: Boolean = true): DataFrame = {
-    if (nativeAgg)
-      pairs(prepared, settings)
-        .groupBy(frameKeys.map(col): _*)
-        .agg(graft.functions.OrderedTensorAgg.adjacencyEdges(
-          col("i_node_idx"), col("j_node_idx"), col("a"), col("e_features")).as("__ae"))
-        .withColumn("a", col("__ae").getField("a"))
-        .withColumn("e", col("__ae").getField("e"))
-        .drop("__ae")
-    else
-      pairs(prepared, settings)
-        .groupBy(frameKeys.map(col): _*)
-        .agg(
-          array_sort(collect_list(struct(col("i_node_idx"), col("j_node_idx"), col("a"))))
-            .as("__a_cells"),
-          array_sort(collect_list(when(col("a") === 1,
-            struct(col("i_node_idx"), col("j_node_idx"), col("e_features"))))).as("__e_cells"))
-        .withColumn("__n", size(array_distinct(transform(col("__a_cells"), _.getField("j_node_idx")))))
-        .withColumn("a", transform(sequence(lit(0), col("__n") - 1), i =>
-          transform(sequence(lit(0), col("__n") - 1), j =>
-            element_at(col("__a_cells"), (i * col("__n") + j + 1).cast("int")).getField("a"))))
-        .withColumn("e", transform(col("__e_cells"), _.getField("e_features")))
-        .drop("__a_cells", "__e_cells", "__n")
-  }
+  private def pairTensor(prepared: DataFrame, settings: GraphSettings): DataFrame =
+    pairs(prepared, settings)
+      .groupBy(frameKeys.map(col): _*)
+      .agg(graft.functions.OrderedTensorAgg.adjacencyEdges(
+        col("i_node_idx"), col("j_node_idx"), col("a"), col("e_features")).as("__ae"))
+      .withColumn("a", col("__ae").getField("a"))
+      .withColumn("e", col("__ae").getField("e"))
+      .drop("__ae")
 
   private[graft] def assembleGraphFrames(
       prepared: DataFrame,
       settings: GraphSettings,
       labelCol: String,
-      graphIdCol: String,
-      nativeAgg: Boolean = true): DataFrame =
-    nodeTensor(prepared, settings, labelCol, graphIdCol, nativeAgg)
-      .join(pairTensor(prepared, settings, nativeAgg), frameKeys)
+      graphIdCol: String): DataFrame =
+    nodeTensor(prepared, settings, labelCol, graphIdCol)
+      .join(pairTensor(prepared, settings), frameKeys)
 }

@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** BM25 keyword relevance over the document corpus — the retrieval
@@ -23,10 +22,10 @@ import org.apache.spark.sql.functions._
   * entries per query, so a query containing one POPULAR term — whose
   * scored relation is posting-list-sized, potentially corpus-sized —
   * never lands on a single rank-window task. The per-query
-  * `row_number` window arm stays behind `nativeTopK = false` as the
-  * A/B shape (its bound is the posting-list size — empirical, not
-  * structural; the exact cliff class [[Similarity]]'s serving ladder
-  * removed).
+  * `row_number` window it replaced (bounded by the posting-list size
+  * — empirical, not structural; the exact cliff class [[Similarity]]'s
+  * serving ladder removed) is the test-side reference
+  * `Bm25Reference.rankTailWindow` that `LlmSpec` compares against.
   *
   * Float determinism: avgdl is an exact DECIMAL mean rounded to 6
   * decimals before entering the per-row formula; each per-term score is
@@ -37,7 +36,7 @@ object Bm25 {
   val K1 = 1.2
   val B = 0.75
 
-  /** The ONE ranking tail both arms end in: a scored relation
+  /** The ONE ranking tail every arm ends in: a scored relation
     * (optional `query_id`, `doc_id`, `n_hit_terms`, `score`) → top-k
     * rows per query as (query_id?, rank, doc_id, n_hit_terms, score).
     *
@@ -49,35 +48,17 @@ object Bm25 {
     * 6-decimal-rounded score doubles are compared, same
     * (score DESC, doc_id ASC) total order, and neither score nor
     * n_hit_terms is ever null here (both are aggregates over ≥ 1 row). */
-  private def rankTail(scored: DataFrame, k: Int, nativeTopK: Boolean): DataFrame = {
+  private def rankTail(scored: DataFrame, k: Int): DataFrame = {
     val keyCols = if (scored.columns.contains("query_id")) Seq(col("query_id")) else Nil
-    val outCols = Seq(col("rank"), col("doc_id"), col("n_hit_terms"), col("score"))
-    if (nativeTopK) {
-      scored.groupBy(keyCols: _*)
-        .agg(graft.functions.BoundedTopK.topKByScorePayload(k,
-          col("score"), col("doc_id"), col("n_hit_terms")).as("__top"))
-        .select(keyCols :+ posexplode(col("__top")).as(Seq("__pos", "__e")): _*)
-        .select(keyCols ++ Seq(
-          (col("__pos") + 1).cast("long").as("rank"),
-          col("__e.id").as("doc_id"),
-          col("__e.p").as("n_hit_terms"),
-          col("__e.s").as("score")): _*)
-        .select(keyCols ++ outCols: _*)
-    } else if (keyCols.isEmpty) {
-      // limit BEFORE the rank window: TakeOrderedAndProject is a
-      // distributed partial top-k; the unpartitioned window then runs
-      // over only k rows, never the full scored relation
-      scored.orderBy(col("score").desc, col("doc_id")).limit(k)
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
-        .select(outCols: _*)
-    } else {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("doc_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .select(keyCols ++ outCols: _*)
-    }
+    scored.groupBy(keyCols: _*)
+      .agg(graft.functions.BoundedTopK.topKByScorePayload(k,
+        col("score"), col("doc_id"), col("n_hit_terms")).as("__top"))
+      .select(keyCols :+ posexplode(col("__top")).as(Seq("__pos", "__e")): _*)
+      .select(keyCols ++ Seq(
+        (col("__pos") + 1).cast("long").as("rank"),
+        col("__e.id").as("doc_id"),
+        col("__e.p").as("n_hit_terms"),
+        col("__e.s").as("score")): _*)
   }
 
   /** Top-k documents by BM25 relevance to `terms`.
@@ -87,14 +68,22 @@ object Bm25 {
       idCol: String,
       textCol: String,
       terms: Seq[String],
-      k: Int,
-      nativeTopK: Boolean = true): DataFrame = {
+      k: Int): DataFrame =
+    rankTail(scored(docs, idCol, textCol, terms), k)
+
+  /** [[topk]]'s scored relation before the ranking tail:
+    * (doc_id, n_hit_terms, score) for every document hitting `terms`. */
+  private[llm] def scored(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      terms: Seq[String]): DataFrame = {
     val t = tokenRelation(docs, idCol, textCol)
     val tk = t.select(col("doc_id"), col("dl"), explode(col("toks")).as("w"))
       .filter(col("w").isin(terms: _*))
     val tf = tk.groupBy(col("doc_id"), col("dl"), col("w"))
       .agg(count(lit(1)).as("tf"))
-    rankTail(perDocScores(scoreCore(tf, statsOf(t)), Nil), k, nativeTopK)
+    perDocScores(scoreCore(tf, statsOf(t)), Nil)
   }
 
   /** (doc_id, toks, dl) over the non-empty documents — the shared
@@ -165,18 +154,25 @@ object Bm25 {
       idCol: String,
       textCol: String,
       queries: Seq[(Long, Seq[String])],
-      k: Int,
-      nativeTopK: Boolean = true): DataFrame = {
+      k: Int): DataFrame =
+    rankTail(scoredPerQuery(docs, idCol, textCol, queries), k)
+
+  /** [[topkPerQuery]]'s scored relation before the ranking tail:
+    * (query_id, doc_id, n_hit_terms, score). */
+  private[llm] def scoredPerQuery(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      queries: Seq[(Long, Seq[String])]): DataFrame = {
     val allTerms = queries.flatMap(_._2).distinct
     val t = tokenRelation(docs, idCol, textCol)
     val tk = t.select(col("doc_id"), col("dl"), explode(col("toks")).as("w"))
       .filter(col("w").isin(allTerms: _*))
     val tf = tk.groupBy(col("doc_id"), col("dl"), col("w"))
       .agg(count(lit(1)).as("tf"))
-    val scored = perDocScores(
+    perDocScores(
       scoreCore(tf, statsOf(t)).join(broadcast(queryTerms(docs, queries)), "w"),
       Seq("query_id"))
-    rankTail(scored, k, nativeTopK)
   }
 
   /** The tiny (query_id, w) membership relation. */
@@ -329,10 +325,9 @@ object Bm25 {
       postings: DataFrame,
       stats: DataFrame,
       terms: Seq[String],
-      k: Int,
-      nativeTopK: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     val tf = postings.filter(col("w").isin(terms: _*))
-    rankTail(perDocScores(scoreCore(tf, servingStats(stats)), Nil), k, nativeTopK)
+    rankTail(perDocScores(scoreCore(tf, servingStats(stats)), Nil), k)
   }
 
   /** [[topkPerQuery]] served from the at-rest index — see
@@ -342,13 +337,12 @@ object Bm25 {
       postings: DataFrame,
       stats: DataFrame,
       queries: Seq[(Long, Seq[String])],
-      k: Int,
-      nativeTopK: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     val allTerms = queries.flatMap(_._2).distinct
     val tf = postings.filter(col("w").isin(allTerms: _*))
     val scored = perDocScores(
       scoreCore(tf, servingStats(stats)).join(broadcast(queryTerms(postings, queries)), "w"),
       Seq("query_id"))
-    rankTail(scored, k, nativeTopK)
+    rankTail(scored, k)
   }
 }

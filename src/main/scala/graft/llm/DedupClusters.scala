@@ -95,10 +95,10 @@ object DedupClusters {
     * pairs) and 0.58 s vs 2.27 s at sf1 (250k pairs, 50k nodes), with
     * 6.6× less shuffle read — Pregel's per-partition routing tables
     * beat the relational loop's per-round join + localCheckpoint
-    * overhead on these clique-ish graphs. GraphX is therefore the
-    * DEFAULT for [[keepTable]]; the relational loop remains as the
-    * label-for-label cross-check (GraphXBridgeSpec) and the fallback
-    * for non-integral node ids.
+    * overhead on these clique-ish graphs. GraphX therefore serves
+    * every integral-id caller ([[componentsOf]]); the relational loop
+    * serves non-integral node ids and stays the label-for-label
+    * cross-check (GraphXBridgeSpec).
     *
     * Requires integral node ids (GraphX VertexId = Long).
     *
@@ -137,18 +137,23 @@ object DedupClusters {
       pairs: DataFrame,
       idCol: String,
       aCol: String = "id_a",
-      bCol: String = "id_b",
-      useGraphX: Boolean = true): DataFrame = {
-    // GraphX by default (CcSoak: 3.4–3.9× faster, ~6× less shuffle on
-    // the real near-dup graphs at both soak scales); the relational
-    // loop serves non-integral ids and stays the cross-check. Labels
-    // are identical either way (GraphXBridgeSpec), so the oracle
-    // replay is implementation-independent.
-    val comps = (if (useGraphX) connectedComponentsGraphX(pairs, aCol, bCol)
-                 else connectedComponents(pairs, aCol, bCol))
-      .withColumnRenamed("node", idCol)
+      bCol: String = "id_b"): DataFrame = {
+    val comps = componentsOf(pairs, aCol, bCol).withColumnRenamed("node", idCol)
     decide(docs, comps, idCol)
   }
+
+  /** Connected components by the pair id type: GraphX for integral ids
+    * (CcSoak: 3.4–3.9× faster, ~6× less shuffle on the real near-dup
+    * graphs at both soak scales), the relational loop for any other
+    * type, whose ids GraphX's `cast("long")` would reject under ANSI
+    * or null out without it. Labels are identical either way
+    * (GraphXBridgeSpec), so the oracle replay is
+    * implementation-independent. */
+  private def componentsOf(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    if (Similarity.isIntegralId(pairs.schema(aCol).dataType) &&
+        Similarity.isIntegralId(pairs.schema(bCol).dataType))
+      connectedComponentsGraphX(pairs, aCol, bCol)
+    else connectedComponents(pairs, aCol, bCol)
 
   /** The keep/drop decision tail shared by [[keepTable]] and
     * [[keepTableIncremental]]: left-join the component labels onto the
@@ -186,8 +191,7 @@ object DedupClusters {
       oldLabels: DataFrame,
       newPairs: DataFrame,
       aCol: String,
-      bCol: String,
-      useGraphX: Boolean): (DataFrame, DataFrame) = {
+      bCol: String): (DataFrame, DataFrame) = {
     // MATERIALIZE the edge relation (eager localCheckpoint): it is
     // increment-sized by contract (safe at any corpus scale) and
     // feeds every downstream branch — endpoints, the contracted
@@ -225,8 +229,7 @@ object DedupClusters {
         coalesce(col("__cb"), col("__dst")).as("__v"))
     // CC over the increment-sized contracted graph (self-loops — both
     // endpoints already in one old component — drop inside)
-    val cc = (if (useGraphX) connectedComponentsGraphX(contracted, "__u", "__v")
-              else connectedComponents(contracted, "__u", "__v"))
+    val cc = componentsOf(contracted, "__u", "__v")
     // contracted node ids partition cleanly: old component labels
     // (values of touched.component) vs previously-unlabeled node ids
     val oldCn = touched.select(col("component").as("node")).distinct()
@@ -281,9 +284,8 @@ object DedupClusters {
       oldLabels: DataFrame,
       newPairs: DataFrame,
       aCol: String = "id_a",
-      bCol: String = "id_b",
-      useGraphX: Boolean = true): DataFrame =
-    labelUpdateOf(oldLabels, newPairs, aCol, bCol, useGraphX).applyTo(oldLabels)
+      bCol: String = "id_b"): DataFrame =
+    labelUpdateOf(oldLabels, newPairs, aCol, bCol).applyTo(oldLabels)
 
   /** The increment's label update as a VALUE — the two increment-sized
     * relations [[incrementalRemap]] computes, with the three ways of
@@ -335,9 +337,8 @@ object DedupClusters {
       oldLabels: DataFrame,
       newPairs: DataFrame,
       aCol: String = "id_a",
-      bCol: String = "id_b",
-      useGraphX: Boolean = true): LabelUpdate = {
-    val (remap, newRows) = incrementalRemap(oldLabels, newPairs, aCol, bCol, useGraphX)
+      bCol: String = "id_b"): LabelUpdate = {
+    val (remap, newRows) = incrementalRemap(oldLabels, newPairs, aCol, bCol)
     LabelUpdate(remap, newRows)
   }
 
@@ -373,9 +374,8 @@ object DedupClusters {
       newPairs: DataFrame,
       newNodes: DataFrame,
       aCol: String = "id_a",
-      bCol: String = "id_b",
-      useGraphX: Boolean = true): (DataFrame, DataFrame) = {
-    val u = labelUpdateOf(oldLabels, newPairs, aCol, bCol, useGraphX)
+      bCol: String = "id_b"): (DataFrame, DataFrame) = {
+    val u = labelUpdateOf(oldLabels, newPairs, aCol, bCol)
     (u.applyTo(oldLabels), u.revoked(newNodes))
   }
 
@@ -389,9 +389,8 @@ object DedupClusters {
       oldLabels: DataFrame,
       newPairs: DataFrame,
       aCol: String = "id_a",
-      bCol: String = "id_b",
-      useGraphX: Boolean = true): DataFrame =
-    labelUpdateOf(oldLabels, newPairs, aCol, bCol, useGraphX).delta(oldLabels)
+      bCol: String = "id_b"): DataFrame =
+    labelUpdateOf(oldLabels, newPairs, aCol, bCol).delta(oldLabels)
 
   /** [[keepTable]] served from the incremental label update: the full
     * keep/drop decision for `docs` after an increment, with the
@@ -404,9 +403,8 @@ object DedupClusters {
       newPairs: DataFrame,
       idCol: String,
       aCol: String = "id_a",
-      bCol: String = "id_b",
-      useGraphX: Boolean = true): DataFrame = {
-    val comps = updateComponents(oldLabels, newPairs, aCol, bCol, useGraphX)
+      bCol: String = "id_b"): DataFrame = {
+    val comps = updateComponents(oldLabels, newPairs, aCol, bCol)
       .withColumnRenamed("node", idCol)
     decide(docs, comps, idCol)
   }

@@ -64,9 +64,8 @@ object Similarity {
     * corpus-rows-in-one-task shape in the serving ladder). Output is
     * bit-identical to the window arm: same exact unrounded doubles
     * compared, same (score DESC, id ASC) total order, rounding on
-    * output. `nativeTopK = false` keeps the generic window arm (the
-    * A/B and the fallback for non-integral id columns, which the
-    * bounded aggregate's BIGINT keep-list cannot carry).
+    * output. Non-integral id columns, which the bounded aggregate's
+    * BIGINT keep-list cannot carry, rank through the window instead.
     *
     * @param corpus  (idCol, vecCol) table — scanned once, never shuffled
     * @param queries (idCol, vecCol) table — must be broadcast-small */
@@ -75,14 +74,12 @@ object Similarity {
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int,
-      nativeTopK: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("__s", cosine(col("__qv"), col("__cv")))
-    rankPerQuery(scored, k, corpus.schema(idCol).dataType, "cos_sim",
-      nativeTopK = nativeTopK)
+    rankPerQuery(scored, k, corpus.schema(idCol).dataType, "cos_sim")
   }
 
   private[llm] def isIntegralId(dt: org.apache.spark.sql.types.DataType): Boolean =
@@ -100,12 +97,13 @@ object Similarity {
     * Default path: the k-bounded partial aggregation
     * ([[graft.functions.BoundedTopK]]) — O(k) state per query per map
     * task, the shuffle carries ≤ |Q|·k·partitions rows, and no task
-    * ever sorts a shortlist. The per-query `row_number` window arm
-    * (behind `nativeTopK = false`, and the fallback for non-integral
-    * id columns) is bounded by the SHORTLIST size by design — but LSH
-    * buckets and IVF cells concentrate on clustered corpora (the r11
-    * MoG measurement), so that bound is empirical, not structural;
-    * the aggregate makes every arm O(k)-state uniformly.
+    * ever sorts a shortlist. Non-integral id columns, which the
+    * aggregate's BIGINT keep-list cannot carry, rank through a
+    * per-query `row_number` window instead; its state is bounded by
+    * the SHORTLIST size, which LSH buckets and IVF cells make empirical
+    * rather than structural on clustered corpora (the r11 MoG
+    * measurement). `BoundedTopKSpec` pins the aggregate against the
+    * window by ranking the same corpus under zero-padded string ids.
     *
     * Bit-parity with the window arm: same exact unrounded doubles
     * compared, same (score best-first, id ASC) total order, rounding
@@ -118,14 +116,13 @@ object Similarity {
     * -NaN = NaN, the greatest double — would rank it first, so the
     * parity claim excludes NaN inputs by contract rather than paying
     * an is-NaN filter on every scored row). */
-  private def rankPerQuery(
+  private[llm] def rankPerQuery(
       scored: DataFrame,
       k: Int,
       idType: org.apache.spark.sql.types.DataType,
       outName: String,
-      ascending: Boolean = false,
-      nativeTopK: Boolean = true): DataFrame = {
-    if (nativeTopK && isIntegralId(idType)) {
+      ascending: Boolean = false): DataFrame = {
+    if (isIntegralId(idType)) {
       val s = if (ascending) -col("__s") else col("__s")
       scored.groupBy(col("query_id"))
         .agg(graft.functions.BoundedTopK
@@ -182,8 +179,7 @@ object Similarity {
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int,
-      nativeTopK: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     val c = withLshBucket(corpus, vecCol)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"), col("bucket"))
     val q = withLshBucket(queries, vecCol)
@@ -191,8 +187,7 @@ object Similarity {
     val scored = c.join(q, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("__s", cosine(col("__qv"), col("__cv")))
-    rankPerQuery(scored, k, corpus.schema(idCol).dataType, "cos_sim",
-      nativeTopK = nativeTopK)
+    rankPerQuery(scored, k, corpus.schema(idCol).dataType, "cos_sim")
   }
 
   /** XOR masks for all buckets within Hamming distance `h` of a
@@ -231,8 +226,7 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int,
-      hamming: Int = 1,
-      nativeTopK: Boolean = true): DataFrame = {
+      hamming: Int = 1): DataFrame = {
     val c = withLshBucket(corpus, vecCol)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"), col("bucket"))
     val q = withLshBucket(queries, vecCol)
@@ -243,8 +237,7 @@ object Similarity {
     val scored = c.join(q, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("__s", cosine(col("__qv"), col("__cv")))
-    rankPerQuery(scored, k, corpus.schema(idCol).dataType, "cos_sim",
-      nativeTopK = nativeTopK)
+    rankPerQuery(scored, k, corpus.schema(idCol).dataType, "cos_sim")
       .withColumn("rank", col("rank").cast("long"))
   }
 
@@ -491,8 +484,7 @@ object Similarity {
       vecCol: String,
       k: Int,
       nCentroids: Int = 8,
-      nProbe: Int = 1,
-      nativeTopK: Boolean = true): DataFrame = {
+      nProbe: Int = 1): DataFrame = {
     val cents = coarseCodebook(corpus, idCol, vecCol, nCentroids)
     val c = assignCells(corpus, cents, idCol, vecCol, "neighbor_id", "__cv")
     // single-probe keeps the original windowless max_by assignment
@@ -504,8 +496,7 @@ object Similarity {
     val scored = c.join(q, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("__s", cosine(col("__qv"), col("__cv")))
-    rankPerQuery(scored, k, corpus.schema(idCol).dataType, "cos_sim",
-      nativeTopK = nativeTopK)
+    rankPerQuery(scored, k, corpus.schema(idCol).dataType, "cos_sim")
   }
 
   /** IVF ANN over an EXTERNALLY TRAINED codebook — the serve half of
@@ -521,15 +512,13 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int,
-      codebook: DataFrame,
-      nativeTopK: Boolean = true): DataFrame = {
+      codebook: DataFrame): DataFrame = {
     val c = assignCells(corpus, codebook, idCol, vecCol, "neighbor_id", "__cv")
     val q = assignCells(queries, codebook, idCol, vecCol, "query_id", "__qv")
     val scored = c.join(q, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("__s", cosine(col("__qv"), col("__cv")))
-    rankPerQuery(scored, k, corpus.schema(idCol).dataType, "cos_sim",
-      nativeTopK = nativeTopK)
+    rankPerQuery(scored, k, corpus.schema(idCol).dataType, "cos_sim")
       .withColumn("rank", col("rank").cast("long"))
   }
 
@@ -643,8 +632,7 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int,
-      metric: String = "cosine",
-      nativeTopK: Boolean = true): DataFrame = {
+      metric: String = "cosine"): DataFrame = {
     require(metric == "cosine" || metric == "l2", s"unknown metric $metric")
     val cand = candidates.select(col("query_id"), col("neighbor_id"))
     val withCv = corpus
@@ -657,7 +645,7 @@ object Similarity {
     val scored = withCv.join(broadcast(q), Seq("query_id"))
       .withColumn("__s", scoreCol)
     rankPerQuery(scored, k, corpus.schema(idCol).dataType, outName,
-      ascending = ascending, nativeTopK = nativeTopK)
+      ascending = ascending)
       .withColumn("rank", col("rank").cast("long"))
   }
 

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: identical to [[Similarity.topKCosine]] — the corpus is
   * scanned once where it lives (codes keep the scan column 4× narrower
   * at rest and on the wire), the query set broadcasts, and the only
-  * shuffle is the per-query top-k window over |Q|·|corpus| scored rows.
+  * shuffle is the per-query k-bounded top-k over |Q|·|corpus| scored rows.
   * At 100 TB the SQ win is scan bandwidth and index residency, not
   * candidate count; compose with IVF cells when pruning is needed.
   *
@@ -60,42 +60,22 @@ object Sq {
 
   /** The index-SERVE half: asymmetric scan of a [[buildIndex]] table
     * (idCol, codes). Same output contract as [[topKCosineSq]]. The
-    * per-query top-k is the same k-bounded partial aggregation as
-    * [[Similarity.topKCosine]]'s (map-side ≤ k entries per query — no
-    * |corpus|-rows-in-one-task window sort); `nativeTopK = false`
-    * keeps the generic window arm for the A/B and non-integral ids. */
+    * per-query top-k is [[Similarity.topKCosine]]'s ranking tail (the
+    * k-bounded partial aggregation for integral ids: map-side ≤ k
+    * entries per query, no |corpus|-rows-in-one-task window sort). */
   def topKCosineCoded(
       codedCorpus: DataFrame,
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int,
-      nativeTopK: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     val c = codedCorpus.select(col(idCol).as("neighbor_id"), col("codes").as("__cc"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
       .filter(exists(col("__qv"), x => x =!= 0.0f))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("__s", Similarity.cosine(col("__qv"), col("__cc")))
-    val idType = codedCorpus.schema(idCol).dataType
-    if (nativeTopK && Similarity.isIntegralId(idType)) {
-      scored.groupBy(col("query_id"))
-        .agg(graft.functions.BoundedTopK
-          .topKByScore(k, col("__s"), col("neighbor_id").cast("long")).as("__top"))
-        .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-        .select(col("query_id"),
-          col("__e.id").cast(idType).as("neighbor_id"),
-          (col("__pos") + 1).cast("long").as("rank"),
-          round(col("__e.s"), 6).as("sq_sim"))
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("__s").desc, col("neighbor_id").asc)
-      scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"),
-          col("rank").cast("long").as("rank"), round(col("__s"), 6).as("sq_sim"))
-    }
+    Similarity.rankPerQuery(scored, k, codedCorpus.schema(idCol).dataType, "sq_sim")
+      .withColumn("rank", col("rank").cast("long"))
   }
 
   /** SQ8 + exact refine (FAISS `IndexRefineFlat` over the SQ scan):

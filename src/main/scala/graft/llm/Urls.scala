@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** URL canonicalization and host-level corpus shaping — the
@@ -81,21 +80,11 @@ object Urls {
     * aggregate (each map task keeps ONE candidate row per URL), so a
     * hotlinked/mirrored canonical URL with millions of crawls — the
     * same Zipf head [[hostCap]] guards against one level up — never
-    * lands all its rows on a single rank-window task. `nativeDedup =
-    * false` keeps the per-URL rank-window arm (the A/B shape; the
-    * single-task cliff under URL skew). */
-  def dedupByUrl(
-      df: DataFrame,
-      idCol: String,
-      urlCol: String,
-      nativeDedup: Boolean = true): DataFrame = {
-    val c = canonicalize(df, urlCol)
-    if (nativeDedup) firstPerUrl(c, idCol)
-    else {
-      val w = Window.partitionBy(col("canonical_url")).orderBy(col(idCol).asc)
-      c.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-    }
-  }
+    * lands all its rows on a single rank-window task. The per-URL
+    * rank window it replaced (the single-task cliff under URL skew) is
+    * the test-side reference `UrlsReference.dedupByUrlWindow`. */
+  def dedupByUrl(df: DataFrame, idCol: String, urlCol: String): DataFrame =
+    firstPerUrl(canonicalize(df, urlCol), idCol)
 
   /** The min_by survivor pick over an already-canonicalized relation —
     * shared by [[dedupByUrl]] and [[dedupByUrlIncremental]]. */
@@ -252,16 +241,15 @@ object Urls {
     *
     * Contract: `idCol` must be integral (it rides the keep-list as
     * BIGINT), non-null, and unique per host — the same
-    * deterministic-survivor premise [[dedupByUrl]] rests on.
-    * `nativeCap = false` keeps the per-host rank-window arm (the A/B
-    * shape the Zipf-head soak measures against — the single-task
-    * cliff). Returns the capped table. */
+    * deterministic-survivor premise [[dedupByUrl]] rests on. The
+    * per-host rank window it replaced (the single-task cliff) is the
+    * test-side reference `UrlsReference.hostCapWindow`. Returns the
+    * capped table. */
   def hostCap(
       df: DataFrame,
       idCol: String,
       urlCol: String,
-      maxPerHost: Int,
-      nativeCap: Boolean = true): DataFrame = {
+      maxPerHost: Int): DataFrame = {
     require(maxPerHost >= 1, s"maxPerHost must be >= 1, got $maxPerHost")
     val idType = df.schema(idCol).dataType
     // type check on the DataType itself (simpleString says "tinyint"/
@@ -269,39 +257,26 @@ object Urls {
     require(Similarity.isIntegralId(idType),
       s"hostCap needs an integral id column, got $idCol: ${idType.simpleString}")
     val c = canonicalize(df, urlCol)
-    if (nativeCap) {
-      // ONE partial-aggregable groupBy computes both the over-cap
-      // filter and each over-cap host's survivor ids (map-side state ≤
-      // cap ids per host per partition). The keep-list is then
-      // cap-bounded — ≤ maxPerHost rows PER over-cap host, a tiny
-      // Zipf-head set — so the survivor semi-join broadcasts it and
-      // the crawl-sized side never shuffles at all; under-cap hosts
-      // pass through the broadcast anti-join as before.
-      val overAgg = c.filter(col("host").isNotNull)
-        .groupBy(col("host"))
-        .agg(count(lit(1)).as("__n"),
-          graft.functions.BoundedTopK
-            .smallestLongs(maxPerHost, col(idCol).cast("long")).as("__keep"))
-        .filter(col("__n") > maxPerHost)
-      val keepIds = overAgg
-        .select(col("host").as("__kh"), explode(col("__keep")).as("__kid"))
-      val under = c.join(broadcast(overAgg.select(col("host"))), Seq("host"), "left_anti")
-      val capped = c.join(broadcast(keepIds),
-        col("host") === col("__kh") && col(idCol).cast("long") === col("__kid"),
-        "left_semi")
-      under.unionByName(capped)
-    } else {
-      val over = c.filter(col("host").isNotNull)
-        .groupBy(col("host")).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > maxPerHost)
-        .select(col("host"))
-      val flagged = c.join(broadcast(over), Seq("host"), "left_semi")
-      val under = c.join(broadcast(over), Seq("host"), "left_anti")
-      val w = Window.partitionBy(col("host")).orderBy(col(idCol).asc)
-      val capped = flagged.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= maxPerHost).drop("__rn")
-      under.unionByName(capped)
-    }
+    // ONE partial-aggregable groupBy computes both the over-cap
+    // filter and each over-cap host's survivor ids (map-side state ≤
+    // cap ids per host per partition). The keep-list is then
+    // cap-bounded — ≤ maxPerHost rows PER over-cap host, a tiny
+    // Zipf-head set — so the survivor semi-join broadcasts it and
+    // the crawl-sized side never shuffles at all; under-cap hosts
+    // pass through the broadcast anti-join as before.
+    val overAgg = c.filter(col("host").isNotNull)
+      .groupBy(col("host"))
+      .agg(count(lit(1)).as("__n"),
+        graft.functions.BoundedTopK
+          .smallestLongs(maxPerHost, col(idCol).cast("long")).as("__keep"))
+      .filter(col("__n") > maxPerHost)
+    val keepIds = overAgg
+      .select(col("host").as("__kh"), explode(col("__keep")).as("__kid"))
+    val under = c.join(broadcast(overAgg.select(col("host"))), Seq("host"), "left_anti")
+    val capped = c.join(broadcast(keepIds),
+      col("host") === col("__kh") && col(idCol).cast("long") === col("__kid"),
+      "left_semi")
+    under.unionByName(capped)
   }
 
   /** Per-host diversity telemetry: document count, docs kept under

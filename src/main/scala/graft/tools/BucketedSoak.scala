@@ -42,9 +42,9 @@ object BucketedSoak {
     }
 
     // the sink hashes every output column: a bare count() over the
-    // nested graph table lets Catalyst strip the collect_list
-    // aggregates (count-over-groupBy keeps only the keys), timing the
-    // exchanges but not the tensor assembly
+    // nested graph table lets Catalyst strip the tensor aggregates
+    // (count-over-groupBy keeps only the keys), timing the exchanges
+    // but not the tensor assembly
     def consumeAll(df: org.apache.spark.sql.DataFrame): Unit = {
       import org.apache.spark.sql.functions.{col, struct, sum, xxhash64}
       df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
@@ -71,21 +71,13 @@ object BucketedSoak {
     val persisted = (1 to 2).map(_ => timed(() =>
       consumeAll(GraphConverter.graphFrames(
         GraphQueries.paddedInput(spark, sfDir), settings)))).min
-    // the round-8 generic assembly (collect_list + array_sort +
-    // interpreted transform/element_at) vs the round-9 direct
-    // TypedImperativeAggregate — same pipeline, same persists, only
-    // the tensor-assembly aggregates differ
-    val generic = (1 to 2).map(_ => timed(() =>
-      consumeAll(GraphConverter.graphFrames(
-        GraphQueries.paddedInput(spark, sfDir), settings,
-        nativeAgg = false)))).min
     val bucketed = (1 to 2).map(_ => timed(() =>
       consumeAll(GraphConverter.graphFramesBucketed(
         spark, GraphQueries.paddedInput(spark, sfDir), settings,
         bucketDir)))).min
 
     println(s"""{"metric":"graph_frames_soak","persisted":$persisted,""" +
-      s""""generic":$generic,"bucketed":$bucketed,"sf":"$sfDir"}""")
+      s""""bucketed":$bucketed,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -84,14 +84,14 @@ object CurationSoak {
       }.write.mode("overwrite").parquet(videoDir)
     }
 
-    // Zipf-head crawl shape for the host-cap A/B, 50 url rows per
+    // Zipf-head crawl shape for the host-cap arm, 50 url rows per
     // corpus document (the cap is a CRAWL-scale operator — the skew
     // cliff only prices in when the head host holds ~10^6 rows): every
     // even id on ONE giant host, odd ids spread over 20011 ordinary
     // hosts so each stays UNDER the cap — the production geometry
     // where exactly the Zipf head ranks and everything else passes
     // through. At sf1 that is a 2.5M-row crawl with a 1.25M-row head
-    // host: the window arm sorts all of it in one task.
+    // host: a per-host rank window would sort all of it in one task.
     def zipfUrls = spark.range(50L * nDocs).select(col("id").as("doc_id"),
       when(col("id") % 2 === 0,
         concat(lit("https://zipfhead.example.com/p/"), col("id").cast("string")))
@@ -115,9 +115,9 @@ object CurationSoak {
       when(col("id") < 44000000L, col("id") % 2000000L)
         .otherwise(col("id")).as("key"))
 
-    // serving-sized synthetic corpus for the ranking A/B: 1M 16-dim
+    // serving-sized synthetic corpus for the ranking arm: 1M 16-dim
     // vectors of deterministic pseudo-random floats (pure projection —
-    // no fixture i/o; identical cost in both arms)
+    // no fixture i/o)
     def bigEmb = spark.range(1000000L).select(col("id").as("vec_id"),
       transform(sequence(lit(1), lit(16)),
         d => (((col("id") * 37 + d * 101) % 997) / lit(997.0) - 0.5).cast("float"))
@@ -461,16 +461,12 @@ object CurationSoak {
       },
       // BM25 under a manufactured skewed term: "common" sits in EVERY
       // one of 20M synthetic docs, so the scored relation for the
-      // query is corpus-sized — the per-query rank window lands it all
-      // on ONE task; the k-bounded payload aggregate ships ≤ k entries
-      // per map partition (generation is inline — both arms pay it)
+      // query is corpus-sized — a per-query rank window would land it
+      // all on ONE task; the k-bounded payload aggregate ships ≤ k
+      // entries per map partition (generation is inline)
       "bm25_skew" -> { () =>
         Bm25.topkPerQuery(skewDocs, "doc_id", "text",
           Seq((0L, Seq("common", "t3"))), 25)
-      },
-      "bm25_skew_window" -> { () =>
-        Bm25.topkPerQuery(skewDocs, "doc_id", "text",
-          Seq((0L, Seq("common", "t3"))), 25, nativeTopK = false)
       },
       // the same query served from the AT-REST inverted index: no
       // corpus tokenize/explode in the per-query path — the absent
@@ -574,43 +570,24 @@ object CurationSoak {
         Sq.topKCosineCoded(spark.read.parquet(sqIndexDir),
           emb.filter(col("vec_id") < 16), "vec_id", "embedding", k = 3)
       },
-      // the flat-scan ranking A/B: the k-bounded partial aggregation
-      // (production default) vs the row_number window it replaced —
-      // the window shuffles the WHOLE scored relation and sorts each
-      // query's |corpus| rows in one task; the heap ships ≤ k entries
-      // per query per map partition
-      "exact_ann_window" -> { () =>
-        Similarity.topKCosine(emb, emb.filter(col("vec_id") < 16),
-          "vec_id", "embedding", k = 3, nativeTopK = false)
-      },
-      // the same A/B at serving-corpus size: 1M synthetic 16-dim
-      // vectors (deterministic hash floats, generated inline — both
-      // arms pay identically), 8 probes. Here the window shape's cost
-      // is undiluted: 8 tasks each receive and sort a FULL 1M-row
-      // scored corpus copy (24 cores idle), while the bounded agg
-      // keeps ≤ k entries per query per map task and never ships the
-      // scored relation anywhere
+      // flat-scan ranking at serving-corpus size: 1M synthetic 16-dim
+      // vectors (deterministic hash floats, generated inline), 8
+      // probes. The k-bounded partial aggregation keeps ≤ k entries
+      // per query per map task and never ships the scored relation
+      // anywhere (the row_number window it replaced had 8 tasks each
+      // receive and sort a FULL 1M-row scored corpus copy)
       "exact_ann_1m" -> { () =>
         Similarity.topKCosine(bigEmb, bigEmb.filter(col("vec_id") < 8),
           "vec_id", "embedding", k = 5)
       },
-      "exact_ann_1m_window" -> { () =>
-        Similarity.topKCosine(bigEmb, bigEmb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 5, nativeTopK = false)
-      },
-      // the SHORTLIST-ranker A/B on the clustered corpus — the regime
+      // the SHORTLIST ranker on the clustered corpus — the regime
       // where per-bucket shortlists concentrate (the r11 MoG
-      // measurement) and the per-query window's empirical bound is
-      // weakest: bounded-agg tail (production default) vs window arm
+      // measurement) and a per-query window's empirical bound is
+      // weakest
       "lsh_ann_mog" -> { () =>
         val mog = ClusteredCorpus.mixtureOfGaussians(emb, "vec_id", "embedding")
         Similarity.topKCosineBucketed(mog, mog.filter(col("vec_id") < 256),
           "vec_id", "embedding", k = 5)
-      },
-      "lsh_ann_mog_window" -> { () =>
-        val mog = ClusteredCorpus.mixtureOfGaussians(emb, "vec_id", "embedding")
-        Similarity.topKCosineBucketed(mog, mog.filter(col("vec_id") < 256),
-          "vec_id", "embedding", k = 5, nativeTopK = false)
       },
       // incremental SemDeDup: the 20% "daily increment" scored against
       // the at-rest cell index (codebook + assignments + keep flags,
@@ -650,15 +627,11 @@ object CurationSoak {
         finally spark.conf.unset(graft.llm.Guards.ConfKey)
       },
       // per-host crawl cap under a manufactured Zipf head (half the
-      // corpus on ONE host): the bounded-agg survivor pick (production
-      // default) vs the per-host rank window, which lands the head
-      // host's every row on a single task — the cliff this A/B prices
+      // corpus on ONE host): the bounded-agg survivor pick, where a
+      // per-host rank window would land the head host's every row on
+      // a single task
       "host_cap_zipf" -> { () =>
         graft.llm.Urls.hostCap(zipfUrls, "doc_id", "url", maxPerHost = 100)
-      },
-      "host_cap_zipf_window" -> { () =>
-        graft.llm.Urls.hostCap(zipfUrls, "doc_id", "url", maxPerHost = 100,
-          nativeCap = false)
       },
       // perceptual image dedup at corpus scale: one synthetic PNG per
       // document (pattern count = corpus/4, so ~4 renders per pattern

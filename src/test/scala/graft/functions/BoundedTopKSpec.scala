@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Bit-parity of the k-bounded top-k aggregation against the generic
   * window arm it replaces, plus the ordering edge cases the comparator
   * must mirror from Spark's sort (NaN-greatest doubles, merge-order
-  * independence). */
+  * independence). The window arm serves non-integral ids, so the specs
+  * reach it with zero-padded string ids: they sort like the numbers,
+  * so both arms must return the same rows once cast back. */
 class BoundedTopKSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -19,12 +21,29 @@ class BoundedTopKSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSet
 
+  /** `vec_id` as a zero-padded string, which routes ranking through
+    * the window arm. */
+  private def padded(df: org.apache.spark.sql.DataFrame) =
+    df.withColumn("vec_id", lpad(col("vec_id").cast("string"), 12, "0"))
+
+  /** A window-arm result with its string ids cast back to BIGINT. */
+  private def unpadded(df: org.apache.spark.sql.DataFrame) = {
+    assert(df.schema("neighbor_id").dataType === org.apache.spark.sql.types.StringType)
+    assert(df.queryExecution.executedPlan.toString.contains("Window"),
+      "string ids must rank through the window arm")
+    df.withColumn("query_id", col("query_id").cast("long"))
+      .withColumn("neighbor_id", col("neighbor_id").cast("long"))
+  }
+
+  private def types(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => (f.name, f.dataType))
+
   test("topKCosine: native bounded agg equals the window arm bit-for-bit") {
     val q = emb.filter(col("vec_id") < 8)
     val native = Similarity.topKCosine(emb, q, "vec_id", "embedding", k = 5)
-    val window = Similarity.topKCosine(emb, q, "vec_id", "embedding", k = 5,
-      nativeTopK = false)
-    assert(native.schema === window.schema)
+    val window = unpadded(
+      Similarity.topKCosine(padded(emb), padded(q), "vec_id", "embedding", k = 5))
+    assert(types(native) === types(window))
     assert(rows(native) === rows(window))
     assert(native.count() === 8 * 5)
   }
@@ -33,10 +52,36 @@ class BoundedTopKSpec extends AnyFunSuite {
     val q = emb.filter(col("vec_id") < 16)
     val idx = Sq.buildIndex(emb, "vec_id", "embedding")
     val native = Sq.topKCosineCoded(idx, q, "vec_id", "embedding", k = 3)
-    val window = Sq.topKCosineCoded(idx, q, "vec_id", "embedding", k = 3,
-      nativeTopK = false)
-    assert(native.schema === window.schema)
+    val window = unpadded(
+      Sq.topKCosineCoded(padded(idx), padded(q), "vec_id", "embedding", k = 3))
+    assert(types(native) === types(window))
     assert(rows(native) === rows(window))
+  }
+
+  test("topKCosine family over zero-padded string ids ranks like the integral ids") {
+    // the window arm is the only path for non-integral ids: exact scan,
+    // IVF cells, multi-probe LSH and the ascending L2 refine all end in it
+    val q = emb.filter(col("vec_id") < 12)
+    val (pe, pq) = (padded(emb), padded(q))
+    def same(native: org.apache.spark.sql.DataFrame, window: org.apache.spark.sql.DataFrame) = {
+      val w = unpadded(window)
+      assert(types(native) === types(w))
+      assert(rows(native) === rows(w))
+    }
+    same(Similarity.topKCosine(emb, q, "vec_id", "embedding", k = 7),
+      Similarity.topKCosine(pe, pq, "vec_id", "embedding", k = 7))
+    // one codebook for both runs: a sampled one hashes the id text
+    val book = Similarity.coarseCodebook(emb, "vec_id", "embedding", 4)
+    same(Similarity.topKCosineIvfTrained(emb, q, "vec_id", "embedding", k = 4, book),
+      Similarity.topKCosineIvfTrained(pe, pq, "vec_id", "embedding", k = 4, book))
+    same(Similarity.topKCosineBucketedMultiProbe(emb, q, "vec_id", "embedding", k = 4),
+      Similarity.topKCosineBucketedMultiProbe(pe, pq, "vec_id", "embedding", k = 4))
+    val cand = Similarity.topKCosine(emb, q, "vec_id", "embedding", k = 20)
+    same(Similarity.refineTopK(emb, q, cand, "vec_id", "embedding", k = 5, metric = "l2"),
+      Similarity.refineTopK(pe, pq,
+        cand.select(lpad(col("query_id").cast("string"), 12, "0").as("query_id"),
+          lpad(col("neighbor_id").cast("string"), 12, "0").as("neighbor_id")),
+        "vec_id", "embedding", k = 5, metric = "l2"))
   }
 
   test("result is independent of partitioning (merge-order robustness)") {

@@ -1,12 +1,12 @@
 package graft.functions
 
 import graft.SparkTestSession
-import graft.graphs.GnnInference
+import graft.graphs.AffineFoldReference
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bit-parity of the codegen'd [[MatVecAffine]] against the
-  * interpreted HOF fold it replaced ([[GnnInference.affineFold]]),
+  * interpreted HOF fold it replaced ([[graft.graphs.AffineFoldReference.affineFold]]),
   * including the fold's null quirks, plus the whole-stage-codegen
   * pin. The q_gnn_forward / q_gnn_head oracles additionally pin the
   * production path cross-engine on real data. */
@@ -31,7 +31,7 @@ class MatVecAffineSpec extends AnyFunSuite {
     for (act <- acts) {
       val rows = vecs.select(
         MatVecAffine.affineNative(col("z"), w, b, act).as("nat"),
-        GnnInference.affineFold(col("z"), w, b, act).as("hof"))
+        AffineFoldReference.affineFold(col("z"), w, b, act).as("hof"))
         .collect()
       rows.foreach { r =>
         val nat = r.getSeq[Double](0)
@@ -52,7 +52,7 @@ class MatVecAffineSpec extends AnyFunSuite {
     for (act <- acts) {
       val rows = big.select(
         MatVecAffine.affineNative(col("z"), w, b, act).as("nat"),
-        GnnInference.affineFold(col("z"), w, b, act).as("hof")).collect()
+        AffineFoldReference.affineFold(col("z"), w, b, act).as("hof")).collect()
       rows.foreach { r =>
         r.getSeq[Double](0).zip(r.getSeq[Double](1)).foreach { case (n, h) =>
           assert(java.lang.Double.doubleToRawLongBits(n) ===
@@ -72,7 +72,7 @@ class MatVecAffineSpec extends AnyFunSuite {
     for (act <- acts) {
       val rows = odd.select(col("id"),
         MatVecAffine.affineNative(col("z"), w, b, act).as("nat"),
-        GnnInference.affineFold(col("z"), w, b, act).as("hof")).collect()
+        AffineFoldReference.affineFold(col("z"), w, b, act).as("hof")).collect()
       rows.foreach { r =>
         if (r.isNullAt(1) || r.isNullAt(2)) {
           assert(r.isNullAt(1) === r.isNullAt(2), s"act=$act id=${r.getLong(0)}")

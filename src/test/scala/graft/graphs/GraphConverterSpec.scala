@@ -32,13 +32,10 @@ class GraphConverterSpec extends AnyFunSuite {
     ("ball", "ball", 1.1, 2.1)))
 
   test("graphFrames: the native tensor aggregates equal the generic assembly end-to-end") {
-    // protects the BucketedSoak A/B arm: if either path drifts, the
-    // soak's native-vs-generic comparison stops measuring what it says
     val settings = GraphSettings(pad = false)
-    def rows(nativeAgg: Boolean) = GraphConverter
-      .graphFrames(smallFrame, settings, nativeAgg = nativeAgg)
-      .collect().map(_.toString).sorted.toSeq
-    assert(rows(nativeAgg = true) === rows(nativeAgg = false))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(GraphConverter.graphFrames(smallFrame, settings)) ===
+      rows(GraphAssemblyReference.graphFrames(smallFrame, settings)))
   }
 
   test("node order: possession players, defenders, ball (by id)") {

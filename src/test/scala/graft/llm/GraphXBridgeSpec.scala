@@ -66,4 +66,23 @@ class GraphXBridgeSpec extends AnyFunSuite {
     assert(rel.nonEmpty, "the sf0.001 corpus should produce near-dup pairs")
     assert(rel === gx)
   }
+
+  test("keepTable and updateComponents over non-numeric string ids equal the relational loop") {
+    // ids GraphX's BIGINT cast rejects under ANSI (and turns to NULL
+    // without it): the id type must route them to the relational loop
+    val old = Seq(("doc-b", "doc-a"), ("doc-c", "doc-b"), ("x1", "x2")).toDF("id_a", "id_b")
+    val inc = Seq(("doc-c", "x2"), ("new-1", "new-0")).toDF("id_a", "id_b")
+    val ids = Seq("doc-a", "doc-b", "doc-c", "x1", "x2", "new-0", "new-1", "lone")
+    def strLabels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val rel = strLabels(DedupClusters.connectedComponents(old.union(inc), "id_a", "id_b"))
+    assert(rel("x1") === "doc-a" && rel("new-1") === "new-0")
+
+    val keep = DedupClusters.keepTable(ids.toDF("doc_id"), old.union(inc), "doc_id")
+      .collect().map(r => r.getString(0) -> (r.getString(1), r.getBoolean(2))).toMap
+    assert(keep === ids.map { d => val c = rel.getOrElse(d, d); d -> (c, c == d) }.toMap)
+
+    val oldLabels = DedupClusters.connectedComponents(old, "id_a", "id_b")
+    assert(strLabels(DedupClusters.updateComponents(oldLabels, inc)) === rel)
+  }
 }

@@ -433,10 +433,10 @@ class LlmSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
     val terms = Seq("spark", "join", "window", "stream")
     assert(rows(Bm25.topk(docs, "doc_id", "text", terms, 25)) ===
-      rows(Bm25.topk(docs, "doc_id", "text", terms, 25, nativeTopK = false)))
+      rows(Bm25Reference.topk(docs, "doc_id", "text", terms, 25)))
     val qs = graft.queries.SketchQueries.RrfQueries
     assert(rows(Bm25.topkPerQuery(docs, "doc_id", "text", qs, 20)) ===
-      rows(Bm25.topkPerQuery(docs, "doc_id", "text", qs, 20, nativeTopK = false)))
+      rows(Bm25Reference.topkPerQuery(docs, "doc_id", "text", qs, 20)))
   }
 
   test("bm25: the at-rest index serves bit-identical scores and advances by increment-add") {

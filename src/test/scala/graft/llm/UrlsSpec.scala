@@ -61,6 +61,33 @@ class UrlsSpec extends AnyFunSuite {
     assert(out === Set(1L, 2L, 3L, 20L, 21L))
   }
 
+  test("dedupByUrl and hostCap equal their rank-window references row for row") {
+    // ids in shuffled order, repeated canonical forms, one over-cap
+    // host, under-cap hosts and unparseable urls
+    val df = (0L until 400L).map { i =>
+      val id = (i * 7919L) % 400L
+      val url = (id % 5) match {
+        case 0 => s"http://big.com/p${id % 40}?utm_source=s$id"
+        case 1 => s"HTTP://WWW.Big.com:80/p${id % 40}"
+        case 2 => s"https://h${id % 13}.example.org/q${id % 3}"
+        case 3 => s"https://h${id % 13}.example.org/q${id % 3}#frag$id"
+        case _ => s"junk-$id"
+      }
+      (id, url)
+    }.toDF("id", "url")
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
+    val dedup = Urls.dedupByUrl(df, "id", "url")
+    val dedupRef = UrlsReference.dedupByUrlWindow(df, "id", "url")
+    assert(dedup.columns.toSeq === dedupRef.columns.toSeq)
+    assert(rows(dedup) === rows(dedupRef))
+    for (cap <- Seq(1, 5, 50)) {
+      val capped = Urls.hostCap(df, "id", "url", maxPerHost = cap)
+      val cappedRef = UrlsReference.hostCapWindow(df, "id", "url", maxPerHost = cap)
+      assert(capped.columns.toSeq === cappedRef.columns.toSeq)
+      assert(rows(capped) === rows(cappedRef), s"maxPerHost=$cap")
+    }
+  }
+
   test("hostStats reports counts, capped keeps, and rounded shares") {
     val rows = (1L to 8L).map(i => (i, "http://big.com/" + i)) ++
       Seq((30L, "https://small.com/a"), (31L, "junk"))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Staged-vs-fused equality for the r18 PiPairsAgg fuse: the fused
-  * [[PressingIntensity.pairs]] must reproduce [[PressingIntensity.pairsStaged]]
+  * [[PressingIntensity.pairs]] must reproduce [[PiStagedReference.pairs]]
   * bit-for-bit on the real pipeline for every declared parameter
   * combination, and on corner frames with null/NaN coordinates, null
   * carrier flags, and null object ids. */
@@ -79,7 +79,7 @@ class PiPairsFusedSpec extends AnyFunSuite {
     declaredCombos.foreach { case (settings, params) =>
       assertEqual(
         PressingIntensity.pairs(dat, settings, params),
-        PressingIntensity.pairsStaged(dat, settings, params))
+        PiStagedReference.pairs(dat, settings, params))
     }
   }
 
@@ -87,7 +87,7 @@ class PiPairsFusedSpec extends AnyFunSuite {
     val scoped = PressingIntensity.filterTimeRange(dat, 100000000L, 500000000L, 1)
     assertEqual(
       PressingIntensity.pairs(scoped, TrackingSettings(), PressingIntensity.Params()),
-      PressingIntensity.pairsStaged(scoped, TrackingSettings(), PressingIntensity.Params()))
+      PiStagedReference.pairs(scoped, TrackingSettings(), PressingIntensity.Params()))
   }
 
   test("remaining enum arms: full/max, full/include, teams/exclude") {
@@ -101,7 +101,7 @@ class PiPairsFusedSpec extends AnyFunSuite {
     combos.foreach { case (settings, params) =>
       assertEqual(
         PressingIntensity.pairs(dat, settings, params),
-        PressingIntensity.pairsStaged(dat, settings, params))
+        PiStagedReference.pairs(dat, settings, params))
     }
   }
 
@@ -146,7 +146,7 @@ class PiPairsFusedSpec extends AnyFunSuite {
     combos.foreach { case (settings, params) =>
       assertEqual(
         PressingIntensity.pairs(rows, settings, params),
-        PressingIntensity.pairsStaged(rows, settings, params))
+        PiStagedReference.pairs(rows, settings, params))
     }
   }
 
@@ -173,7 +173,7 @@ class PiPairsFusedSpec extends AnyFunSuite {
       val fused = PressingIntensity.pairs(df, TrackingSettings(), params)
       assert(fused.select(GameId, PeriodId, FrameId).distinct().collect().toSeq ===
         Seq(org.apache.spark.sql.Row("g", 1, 7L)))
-      assertEqual(fused, PressingIntensity.pairsStaged(df, TrackingSettings(), params))
+      assertEqual(fused, PiStagedReference.pairs(df, TrackingSettings(), params))
     }
   }
 }
