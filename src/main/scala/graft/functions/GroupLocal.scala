@@ -3,22 +3,31 @@ package graft.functions
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, JoinedRow, SortOrder, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, JoinedRow, SortOrder, SpecificInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.PlanShim
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructField}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** A plain Scala kernel that [[GroupLocal]] runs once for each group:
-  * the run of rows that share the node's keys, in the node's order. */
-abstract class GroupKernel extends Serializable {
+/** What [[GroupLocal]] runs once for each group: the run of rows that
+  * share the node's keys, in the node's order. The kernel's type picks
+  * the node's form: a [[GroupKernel]] computes values for the group's own
+  * rows, a [[GroupGenerator]] emits rows of its own schema. */
+sealed abstract class LocalKernel extends Serializable {
   /** Columns the kernel reads, with the type it reads them as. The
     * [[Group]] accessors address them by their index here. */
   def inputs: Seq[(String, DataType)]
+  /** The kernel's name in a printed plan, which never shows its fields. */
+  def name: String = getClass.getSimpleName
+}
+
+/** A plain Scala kernel that computes values for every row of a group. */
+abstract class GroupKernel extends LocalKernel {
   /** Values it computes for each row. A value named like an input
     * column replaces that column in place; the others are appended in
     * this order (the column order of `withColumn`). */
@@ -28,9 +37,20 @@ abstract class GroupKernel extends Serializable {
   def run(g: Group): Unit
 }
 
+/** A plain Scala kernel that emits any number of rows per group, each
+  * made of the group's keys followed by the fields of `output`. */
+abstract class GroupGenerator extends LocalKernel {
+  /** The fields of each emitted row, after the keys. */
+  def output: Seq[StructField]
+  /** Computes one group: its rows, each holding `output`'s fields in
+    * order as Catalyst values. They are read before the next group. */
+  def run(g: Group): Iterator[InternalRow]
+}
+
 /** One group's rows, read through the kernel's inputs, and the
   * kernel's values for each row. */
-final class Group private[functions] (inputOrdinals: Array[Int], valueTypes: Array[DataType]) {
+final class Group private[functions] (
+    inputOrdinals: Array[Int], inputTypes: Array[DataType], valueTypes: Array[DataType]) {
   private[this] var rows = new Array[InternalRow](64)
   private[this] var vals = new Array[SpecificInternalRow](64)
   private[this] var kept = new Array[Boolean](64)
@@ -40,6 +60,11 @@ final class Group private[functions] (inputOrdinals: Array[Int], valueTypes: Arr
   def isNull(i: Int, in: Int): Boolean = rows(i).isNullAt(inputOrdinals(in))
   def double(i: Int, in: Int): Double = rows(i).getDouble(inputOrdinals(in))
   def long(i: Int, in: Int): Long = rows(i).getLong(inputOrdinals(in))
+  def int(i: Int, in: Int): Int = rows(i).getInt(inputOrdinals(in))
+  def boolean(i: Int, in: Int): Boolean = rows(i).getBoolean(inputOrdinals(in))
+  /** The input as a Catalyst value of its declared type, or null. */
+  def get(i: Int, in: Int): Any =
+    if (isNull(i, in)) null else rows(i).get(inputOrdinals(in), inputTypes(in))
   /** The string input, or null. */
   def string(i: Int, in: Int): UTF8String =
     if (isNull(i, in)) null else rows(i).getUTF8String(inputOrdinals(in))
@@ -73,42 +98,57 @@ final class Group private[functions] (inputOrdinals: Array[Int], valueTypes: Arr
   }
 }
 
-/** Group-local execution: a logical node that runs a [[GroupKernel]]
+/** Group-local execution: a logical node that runs a [[LocalKernel]]
   * over each group of rows sharing `keys`, sorted by `keys ++ order`.
   *
   * The physical [[GroupLocalExec]] asks for `ClusteredDistribution(keys)`
   * and that ordering, so the planner adds at most one exchange and one
   * sort, and none when the child already provides them: a chain of
-  * nodes keyed by the same columns shares one shuffle. Each kept row
-  * leaves through one `UnsafeProjection` over (input row, kernel
-  * values). The output keeps the child's partitioning and ordering, so
-  * a frame-keyed aggregate downstream rides the frame exchange.
+  * nodes keyed by the same columns shares one shuffle. The output keeps
+  * the child's partitioning, so a frame-keyed node or aggregate
+  * downstream rides the frame exchange.
   *
   * Groups follow `Window`'s partition semantics: rows whose key columns
   * are all equal form one group, null keys included. A group is held in
   * memory while its kernel runs (a frame, or one object's samples in
   * one period).
   *
-  * Only columns the kernel reads, the keys, the order and the replaced
-  * columns are references of the node; the other child columns pass
-  * through, so column pruning above the node reaches below it. */
+  * The two forms:
+  *  - a [[GroupKernel]] keeps the child's rows: each kept row leaves
+  *    through one `UnsafeProjection` over (input row, kernel values), in
+  *    the child's order. Only columns the kernel reads, the keys, the
+  *    order and the replaced columns are references of the node; the
+  *    other child columns pass through, so column pruning above the
+  *    node reaches below it;
+  *  - a [[GroupGenerator]] outputs `keys ++ output` only, so its child is
+  *    a projection to the keys, the order and the inputs cast to their
+  *    declared types. An exchange below the node moves only those
+  *    columns, and a file scan below reads only them. Its rows leave
+  *    sorted by the keys.
+  *
+  * A printed plan shows the kernel's name and the keys, not the
+  * kernel's fields. */
 case class GroupLocal(
     keys: Seq[Attribute],
     order: Seq[SortOrder],
-    kernel: GroupKernel,
+    kernel: LocalKernel,
     inputs: Seq[Attribute],
     replaced: Seq[Attribute],
     replacedBy: Seq[Int],
     values: Seq[Attribute],
     child: LogicalPlan) extends UnaryNode {
 
-  override def output: Seq[Attribute] = {
-    val inPlace = replaced.map(_.exprId).zip(replacedBy.map(values)).toMap
-    child.output.map(a => inPlace.getOrElse(a.exprId, a)) ++
-      values.indices.filterNot(replacedBy.contains).map(values)
+  override def output: Seq[Attribute] = kernel match {
+    case _: GroupGenerator => keys ++ values
+    case _: GroupKernel =>
+      val inPlace = replaced.map(_.exprId).zip(replacedBy.map(values)).toMap
+      child.output.map(a => inPlace.getOrElse(a.exprId, a)) ++
+        values.indices.filterNot(replacedBy.contains).map(values)
   }
 
   override def producedAttributes: AttributeSet = AttributeSet(values)
+
+  override protected def stringArgs: Iterator[Any] = Iterator(kernel.name, keys, order)
 
   /** The node with fresh value attributes. */
   def renewed: GroupLocal = copy(values = values.map(_.newInstance()))
@@ -119,10 +159,20 @@ case class GroupLocal(
 object GroupLocal {
 
   /** `df` with `kernel` run over each group of rows sharing `keys`,
-    * ordered by `order` ascending (nulls first, as `Window.orderBy`). */
-  def apply(df: DataFrame, keys: Seq[String], order: Seq[String], kernel: GroupKernel): DataFrame = {
-    val child = df.queryExecution.analyzed
+    * ordered by `order` ascending (nulls first, as `Window.orderBy`). A
+    * [[GroupKernel]] reads its inputs as they are (`require` fails on
+    * another type); a [[GroupGenerator]] reads them cast to the declared
+    * type. */
+  def apply(df: DataFrame, keys: Seq[String], order: Seq[String], kernel: LocalKernel): DataFrame = {
     val resolver = SQLConf.get.resolver
+    val child = kernel match {
+      case _: GroupKernel => df.queryExecution.analyzed
+      case _: GroupGenerator =>
+        val grouping = (keys ++ order).distinct
+        val cast = kernel.inputs.filterNot(in => grouping.exists(resolver(_, in._1)))
+          .map { case (name, dt) => col(name).cast(dt).as(name) }
+        df.select(grouping.map(col) ++ cast: _*).queryExecution.analyzed
+    }
     def attr(name: String): Attribute = child.output.find(a => resolver(a.name, name))
       .getOrElse(throw new IllegalArgumentException(
         s"no column $name among ${child.output.map(_.name).mkString(", ")}"))
@@ -131,11 +181,14 @@ object GroupLocal {
       require(a.dataType == dt, s"column $name is ${a.dataType.simpleString}, expected ${dt.simpleString}")
       a
     }
-    val values = kernel.values.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
-    val replaced = child.output.flatMap { a =>
-      val i = kernel.values.indexWhere(f => resolver(a.name, f.name))
-      if (i < 0) None else Some(a -> i)
+    val (fields, replaced) = kernel match {
+      case k: GroupKernel => (k.values, child.output.flatMap { a =>
+        val i = k.values.indexWhere(f => resolver(a.name, f.name))
+        if (i < 0) None else Some(a -> i)
+      })
+      case g: GroupGenerator => (g.output, Nil)
     }
+    val values = fields.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
     PlanShim.ofRows(df, GroupLocal(keys.map(attr), order.map(n => SortOrder(attr(n), Ascending)),
       kernel, inputs, replaced.map(_._1), replaced.map(_._2), values, child))
   }
@@ -177,7 +230,7 @@ object GroupLocalStrategy extends SparkStrategy {
 case class GroupLocalExec(
     keys: Seq[Attribute],
     order: Seq[SortOrder],
-    kernel: GroupKernel,
+    kernel: LocalKernel,
     inputs: Seq[Attribute],
     values: Seq[Attribute],
     output: Seq[Attribute],
@@ -186,50 +239,72 @@ case class GroupLocalExec(
   override def requiredChildDistribution: Seq[Distribution] = ClusteredDistribution(keys) :: Nil
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
     (keys.map(SortOrder(_, Ascending)) ++ order) :: Nil
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+  override def outputPartitioning: Partitioning = kernel match {
+    case _: GroupKernel => child.outputPartitioning
+    // a partitioning over columns the generator does not output says nothing
+    case _: GroupGenerator => child.outputPartitioning match {
+      case p: Expression if !p.references.subsetOf(outputSet) => UnknownPartitioning(p.numPartitions)
+      case p => p
+    }
+  }
+  override def outputOrdering: Seq[SortOrder] = kernel match {
+    case _: GroupKernel => child.outputOrdering
+    case _: GroupGenerator => keys.map(SortOrder(_, Ascending))
+  }
+
+  override protected def stringArgs: Iterator[Any] = Iterator(kernel.name, keys, order)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val in = child.output
     val ordinals = inputs.map(a => in.indexWhere(_.exprId == a.exprId)).toArray
+    val inTypes = inputs.map(_.dataType).toArray
     val types = values.map(_.dataType).toArray
     // locals, so the closure does not capture the plan
     val (keyExprs, outExprs, valueAttrs, k) = (keys, output, values, kernel)
     child.execute().mapPartitions { rows =>
-      new GroupIterator(rows, UnsafeProjection.create(keyExprs, in),
-        UnsafeProjection.create(outExprs, in ++ valueAttrs), k, new Group(ordinals, types))
+      val keyOf = UnsafeProjection.create(keyExprs, in)
+      k match {
+        case rk: GroupKernel => new KeptRows(rows, keyOf,
+          UnsafeProjection.create(outExprs, in ++ valueAttrs), rk, new Group(ordinals, inTypes, types))
+        case gk: GroupGenerator => new GeneratedRows(rows, keyOf,
+          UnsafeProjection.create(outExprs, keyExprs ++ valueAttrs), gk, new Group(ordinals, inTypes, Array.empty))
+      }
     }
   }
 
   override protected def withNewChildInternal(c: SparkPlan): GroupLocalExec = copy(child = c)
 }
 
-/** Cuts sorted input into key runs, runs the kernel on each, and emits
-  * the kept rows. */
-private final class GroupIterator(
+/** Cuts sorted input into key runs and loads each into `group`; the
+  * subclass turns a loaded group into output rows. */
+private abstract class GroupIterator(
     input: Iterator[InternalRow],
     keyOf: UnsafeProjection,
-    emit: UnsafeProjection,
-    kernel: GroupKernel,
-    group: Group) extends Iterator[InternalRow] {
+    protected val group: Group) extends Iterator[InternalRow] {
 
   private[this] var pending: InternalRow = if (input.hasNext) input.next().copy() else null
-  private[this] var pos = 0
-  private[this] val joined = new JoinedRow
+  private[this] var ready: InternalRow = null
+
+  /** Runs the kernel on the group just loaded, whose keys are `key`. */
+  protected def start(key: InternalRow): Unit
+  /** The group's next output row, or null when it has none left. */
+  protected def nextRow(): InternalRow
 
   override def hasNext: Boolean = {
-    var more = true
-    while (more) {
-      while (pos < group.size && !group.keep(pos)) pos += 1
-      if (pos < group.size || pending == null) more = false else load()
+    while (ready == null) {
+      ready = nextRow()
+      if (ready == null) {
+        if (pending == null) return false
+        load()
+      }
     }
-    pos < group.size
+    true
   }
 
   override def next(): InternalRow = {
     if (!hasNext) throw new NoSuchElementException
-    val out = emit(joined(group.row(pos), group.value(pos)))
-    pos += 1
+    val out = ready
+    ready = null
     out
   }
 
@@ -242,7 +317,52 @@ private final class GroupIterator(
       val r = input.next()
       if (keyOf(r) == key) group.add(r.copy()) else pending = r.copy()
     }
+    start(key)
+  }
+}
+
+/** The row form: the group's kept rows with their values. */
+private final class KeptRows(
+    input: Iterator[InternalRow],
+    keyOf: UnsafeProjection,
+    emit: UnsafeProjection,
+    kernel: GroupKernel,
+    group: Group) extends GroupIterator(input, keyOf, group) {
+
+  private[this] var pos = 0
+  private[this] val joined = new JoinedRow
+
+  override protected def start(key: InternalRow): Unit = {
     kernel.run(group)
     pos = 0
   }
+
+  override protected def nextRow(): InternalRow = {
+    while (pos < group.size && !group.keep(pos)) pos += 1
+    if (pos == group.size) null
+    else {
+      pos += 1
+      emit(joined(group.row(pos - 1), group.value(pos - 1)))
+    }
+  }
+}
+
+/** The generator form: the group's keys joined to each generated row. */
+private final class GeneratedRows(
+    input: Iterator[InternalRow],
+    keyOf: UnsafeProjection,
+    emit: UnsafeProjection,
+    kernel: GroupGenerator,
+    group: Group) extends GroupIterator(input, keyOf, group) {
+
+  private[this] var rows: Iterator[InternalRow] = Iterator.empty
+  private[this] val joined = new JoinedRow
+
+  override protected def start(key: InternalRow): Unit = {
+    joined.withLeft(key)
+    rows = kernel.run(group)
+  }
+
+  override protected def nextRow(): InternalRow =
+    if (rows.hasNext) emit(joined.withRight(rows.next())) else null
 }

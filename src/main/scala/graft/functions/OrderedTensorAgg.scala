@@ -10,36 +10,32 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 
-/** Direct-to-tensor frame aggregation.
+/** Direct-to-tensor aggregation for the staged graph assembly (the
+  * Delaunay adjacency and [[graft.graphs.GraphConverter.graphFramesBucketed]])
+  * and the GNN message sums.
   *
   * The generic assembly (`collect_list(struct) + array_sort +
-  * transform/element_at`, the original
-  * [[graft.graphs.GraphConverter.graphFrames]] shape, now the test-side
-  * reference `GraphAssemblyReference`) is correct but
-  * pays for generality three times per frame: the sort runs a codegen'd
-  * struct comparator over full payload structs, the higher-order
-  * `transform`/`element_at` rebuild is interpreted (HOFs are
-  * CodegenFallback), and the matrix build allocates a `sequence` and
-  * probes `element_at` n² times. The honest-sink A/B (SCALING.md,
-  * round 8) measured the assembly — not the exchanges — as the dominant
-  * cost of the headline graph query at every scale, so this is where
-  * the engine drops to custom `TypedImperativeAggregate`s: each frame's
-  * ≤23 node rows (≤529 pair rows) accumulate into a compact buffer,
-  * which `eval` sorts once on the integer keys and emits straight into
-  * the nested output arrays.
+  * transform/element_at`, now the test-side reference
+  * `GraphAssemblyReference`) is correct but pays for generality three
+  * times per frame: the sort runs a codegen'd struct comparator over
+  * full payload structs, the higher-order `transform`/`element_at`
+  * rebuild is interpreted (HOFs are CodegenFallback), and the matrix
+  * build allocates a `sequence` and probes `element_at` n² times. These
+  * `TypedImperativeAggregate`s accumulate each group's rows into a
+  * compact buffer, which `eval` sorts once on the integer keys and emits
+  * straight into the nested output arrays.
   *
-  * All three aggregates stay map-side combinable exactly like
-  * `collect_list` (partial update → serialize → shuffle → merge), with
-  * the same `ObjectHashAggregate` physical operator — asserted in
-  * PlanAuditSpec. Output values and ordering are bit-identical to the
-  * generic shape (the sort keys are unique within a group, so sorting
-  * by key alone reproduces the full-struct lexicographic sort); the
-  * oracle hashes for `q_graph_frames` / `q_af_graph` / `q_pi_matrices`
-  * are unchanged.
+  * All three stay map-side combinable exactly like `collect_list`
+  * (partial update → serialize → shuffle → merge), with the same
+  * `ObjectHashAggregate` physical operator — asserted in PlanAuditSpec.
+  * Output values and ordering are bit-identical to the generic shape
+  * (the sort keys are unique within a group, so sorting by key alone
+  * reproduces the full-struct lexicographic sort). The default graph
+  * path and the PI matrices are frame kernels on the group-local node
+  * instead ([[graft.graphs.GraphKernel]], `PressingIntensity.matrices`).
   *
   * Reference for the tensor layouts:
-  * `unravel/soccer/graphs/graph_converter.py:214-222` (node order),
-  * `pressing_intensity.py:328-337` (PI matrix schema).
+  * `unravel/soccer/graphs/graph_converter.py:214-222` (node order).
   */
 private[graft] abstract class OrderedBufferAgg
     extends TypedImperativeAggregate[ArrayBuffer[InternalRow]] {
@@ -334,94 +330,6 @@ private[graft] case class OrderedVectorSumAgg(
     copy(idx = newChildren(0), vec = newChildren(1))
 }
 
-/** Rectangular grid assembly for the PI matrices: (row_idx, col_idx,
-  * row_label, col_label, v₀, v₁, …) → struct(rows, columns, name₀:
-  * rows×cols matrix of v₀, …). Positional: cols = |distinct col_idx|,
-  * rows = total/cols, row label from cell (i, 0), column label from
-  * cell (0, j) — the generic shape's exact recipe. */
-private[graft] case class GridMatricesAgg(
-    rowIdx: Expression,
-    colIdx: Expression,
-    rowLabel: Expression,
-    colLabel: Expression,
-    values: Seq[Expression],
-    names: Seq[String],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends OrderedBufferAgg {
-  require(values.nonEmpty && values.length == names.length,
-    "one output name per value expression")
-
-  override protected def entryFields: Seq[Expression] =
-    Seq(rowIdx, colIdx, rowLabel, colLabel) ++ values
-
-  override def dataType: DataType = StructType(
-    Seq(
-      StructField("rows", ArrayType(rowLabel.dataType, containsNull = true)),
-      StructField("columns", ArrayType(colLabel.dataType, containsNull = true))) ++
-      names.zip(values).map { case (n, v) =>
-        StructField(n,
-          ArrayType(ArrayType(v.dataType, containsNull = true), containsNull = true))
-      })
-
-  override def eval(buffer: ArrayBuffer[InternalRow]): Any = {
-    val sorted = sortedByIntPair(buffer, 0, 1)
-    val total = sorted.length
-    val seen = new java.util.HashSet[Integer]()
-    var k = 0
-    while (k < total) { seen.add(sorted(k).getInt(1)); k += 1 }
-    val cols = seen.size()
-    val rows = if (cols == 0) 0 else total / cols
-
-    val rowLabels = new Array[Any](rows)
-    var i = 0
-    while (i < rows) {
-      rowLabels(i) = valueAt(sorted(i * cols), 2, rowLabel.dataType)
-      i += 1
-    }
-    val colLabels = new Array[Any](cols)
-    var j = 0
-    while (j < cols) {
-      colLabels(j) = valueAt(sorted(j), 3, colLabel.dataType)
-      j += 1
-    }
-
-    val out = new Array[Any](2 + values.length)
-    out(0) = new GenericArrayData(rowLabels)
-    out(1) = new GenericArrayData(colLabels)
-    var v = 0
-    while (v < values.length) {
-      val dt = values(v).dataType
-      val m = new Array[Any](rows)
-      i = 0
-      while (i < rows) {
-        val rowVals = new Array[Any](cols)
-        j = 0
-        while (j < cols) {
-          rowVals(j) = valueAt(sorted(i * cols + j), 4 + v, dt)
-          j += 1
-        }
-        m(i) = new GenericArrayData(rowVals)
-        i += 1
-      }
-      out(2 + v) = new GenericArrayData(m)
-      v += 1
-    }
-    new GenericInternalRow(out)
-  }
-
-  override def prettyName: String = "grid_matrices"
-  override def withNewMutableAggBufferOffset(newOffset: Int): GridMatricesAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): GridMatricesAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(rowIdx = newChildren(0), colIdx = newChildren(1),
-      rowLabel = newChildren(2), colLabel = newChildren(3),
-      values = newChildren.drop(4))
-}
-
 object OrderedTensorAgg {
 
   /** struct(names…) of per-payload arrays in `idx` order. */
@@ -441,14 +349,4 @@ object OrderedTensorAgg {
     ColumnShim.column(AdjacencyEdgesAgg(
       ColumnShim.expression(i), ColumnShim.expression(j),
       ColumnShim.expression(a), ColumnShim.expression(e)).toAggregateExpression())
-
-  /** struct(rows, columns, names… matrices) on a dense (row, col) grid. */
-  def gridMatrices(
-      rowIdx: Column, colIdx: Column, rowLabel: Column, colLabel: Column,
-      valuesAndNames: (Column, String)*): Column =
-    ColumnShim.column(GridMatricesAgg(
-      ColumnShim.expression(rowIdx), ColumnShim.expression(colIdx),
-      ColumnShim.expression(rowLabel), ColumnShim.expression(colLabel),
-      valuesAndNames.map(v => ColumnShim.expression(v._1)),
-      valuesAndNames.map(_._2)).toAggregateExpression())
 }

@@ -1,5 +1,6 @@
 package graft.graphs
 
+import graft.functions.GroupLocal
 import graft.tracking.Cols
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -8,7 +9,13 @@ import org.apache.spark.sql.functions._
 /** Frame → graph tensors (G1-G10), Spark-first.
   *
   * Reference: `unravel/soccer/graphs/graph_converter.py` runs a NumPy
-  * callback per frame (`map_groups`). Here:
+  * callback per frame (`map_groups`). Here the default path is the same
+  * per-frame program: [[GraphKernel]] on the group-local node
+  * ([[graft.functions.GroupLocal]]) pads, orders, featurizes and
+  * connects one frame in compiled Scala, keyed by the frame.
+  *
+  * The staged relational form serves the Delaunay adjacency and the
+  * bucketed 100 TB path ([[graphFramesBucketed]]):
   *  - node features are row-local `Column`s (Features.scala) with the
   *    per-frame ball position supplied by a window aggregate (no join);
   *  - the adjacency predicate and edge features live on a within-frame
@@ -140,10 +147,12 @@ object GraphConverter {
           present.map(c => countDistinct(col(c)).as(c)).tail: _*)
         .filter(present.map(c => col(c) > 1).reduce(_ || _))
         .limit(1).count()
-      require(bad == 0,
-        s"graph integrity violation: a frame has multiple values for ${present.mkString(",")}")
+      require(bad == 0, integrityViolation(present))
     }
   }
+
+  private[graphs] def integrityViolation(cols: Seq[String]): String =
+    s"graph integrity violation: a frame has multiple values for ${cols.mkString(",")}"
 
   /** Per-node features: adds the ball-position helper columns and
     * `x_features` ARRAY<DOUBLE> (+ `node_idx`). */
@@ -266,26 +275,28 @@ object GraphConverter {
   }
 
   /** Full conversion to the nested per-frame graph schema
-    * (FIXTURES.md §6): keys, a, x, e, object_ids, graph_id, label,
-    * ball_owning_team_id. Shapes live in the array type — the
-    * reference's `*_shape_*` columns are recoverable via `size()`. */
+    * (FIXTURES.md §6): keys, [label, graph_id,] ball_owning_team_id, x,
+    * object_ids, a, e. Shapes live in the array type — the reference's
+    * `*_shape_*` columns are recoverable via `size()`. A frame with two
+    * labels or graph ids raises the G10 integrity error. */
   def graphFrames(
       df: DataFrame,
       settings: GraphSettings,
       labelCol: String = Label,
       graphIdCol: String = GraphId): DataFrame = {
-    // Fast path (optimization round 17): the whole conversion — padding,
-    // completeness, node order, node features, adjacency, edge features
-    // — is frame-local, so ONE TypedImperativeAggregate keyed on the
-    // frame does it in compiled Scala ([[graft.functions.GraphTensorAgg]]),
-    // with zero caches, zero self-joins and zero exchanges beyond the
-    // one that clusters the input by frame (none at all when the
-    // upstream possession stage already did). The staged path below
-    // serves Delaunay (needs the per-frame geometric edge table);
-    // output is bit-identical (q_graph_frames oracle hash +
-    // GraphTensorAggSpec).
-    if (settings.adjacencyMatrixType != GraphSettings.Delaunay)
-      return graphFramesFused(df, settings, labelCol, graphIdCol)
+    // The whole conversion — padding, completeness, node order, node
+    // features, adjacency, edge features — is frame-local, so one frame
+    // kernel does it ([[GraphKernel]]), with no cache, no self-join and
+    // at most the one exchange that clusters the input by frame. The
+    // staged path below serves Delaunay (needs the per-frame geometric
+    // edge table).
+    if (settings.adjacencyMatrixType != GraphSettings.Delaunay) {
+      val labels = Seq(labelCol, graphIdCol).filter(df.columns.contains)
+      // a row with a null frame key belongs to no frame, as in the
+      // staged assembly's frame-key join
+      return GroupLocal(df.filter(frameKeys.map(col(_).isNotNull).reduce(_ && _)), frameKeys, Nil,
+        GraphKernel(settings, labels.map(c => c -> df.schema(c).dataType)))
+    }
     // Both persists are load-bearing at scale: padFrames reads its
     // input 4× (counts, frame list, ball check, union) and the
     // node/pair aggregations each scan `prepared` — without caching,
@@ -303,32 +314,6 @@ object GraphConverter {
       else removeIncompleteFrames(input))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     assembleGraphFrames(prepared, settings, labelCol, graphIdCol)
-  }
-
-  /** The fused single-aggregation [[graphFrames]] body (non-Delaunay
-    * default feature registry only — exactly what `graphFrames` can
-    * ever use). Output schema/ordering matches the staged path:
-    * keys, [label?, graph_id?, ball_owning_team_id?], x, object_ids,
-    * a, e. */
-  private def graphFramesFused(
-      df: DataFrame,
-      settings: GraphSettings,
-      labelCol: String,
-      graphIdCol: String): DataFrame = {
-    val optCols = Seq(labelCol, graphIdCol, BallOwningTeamId).filter(df.columns.contains)
-    val agg = graft.functions.GraphTensorAgg.graphTensor(settings,
-      col(ObjectId), col(TeamId), col(PositionName),
-      col(X), col(Y), col(Z), col(Vx), col(Vy), col(Vz), col(Speed),
-      col(BallOwningTeamId), col(IsBallCarrier))
-    df.groupBy(frameKeys.map(col): _*)
-      .agg(agg.as("__g"), optCols.map(c => first(col(c)).as(c)): _*)
-      // null = frame dropped by the completeness rules
-      .filter(col("__g").isNotNull)
-      .select(frameKeys.map(col) ++ optCols.map(col) ++ Seq(
-        col("__g").getField("x").as("x"),
-        col("__g").getField("object_ids").as("object_ids"),
-        col("__g").getField("a").as("a"),
-        col("__g").getField("e").as("e")): _*)
   }
 
   /** The 100 TB variant of [[graphFrames]]: instead of double-caching,

@@ -1,98 +1,117 @@
-package graft.functions
+package graft.graphs
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Column
+import graft.functions.{Group, GroupGenerator}
+import graft.tracking.Cols
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Whole-graph per-frame aggregation: pad → completeness filter → node
-  * ordering → node features → adjacency → edge features, fused into ONE
-  * [[org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate]]
-  * pass over the raw frame rows.
+/** One frame's rows → its graph tensors: pad → completeness filter →
+  * node ordering → node features → adjacency → edge features, in one
+  * pass of compiled Scala on the group-local node
+  * ([[graft.functions.GroupLocal]]). It emits one row per complete frame
+  * (the label columns, ball_owning_team_id, x, object_ids, a, e) and
+  * nothing for a frame the padding or completeness rules drop.
   *
-  * Motivation (optimization round 17, guide §2.4/§1.2): the staged
-  * [[graft.graphs.GraphConverter.graphFrames]] pipeline materializes two
-  * MEMORY_AND_DISK caches (input + prepared) and executes padFrames'
-  * union + two full window passes, a frame-key pair self-join, two
-  * tensor aggregates and a final frame-key join — and because the
-  * caches sit under `AdaptiveSparkPlan`, every cache consumer loses the
-  * producer's partitioning and re-shuffles (3 extra exchanges at sf0.1,
-  * measured in plans/r17/q_graph_frames_before.txt). All of that work
-  * is per-frame-local: one aggregate keyed on the frame does the whole
-  * conversion in compiled Scala with zero caches, zero self-joins and —
-  * when the input is already frame-partitioned (it always is: the
-  * possession stage runs right upstream) — zero additional exchanges.
+  * Faithfulness: the kernel transcribes the padFrames/withNodeIndex/
+  * Features/pairs column expressions of the staged assembly
+  * operation-for-operation, including Catalyst's exact null/NaN
+  * semantics (`Greatest`/`Least` skip nulls and order NaN greatest,
+  * `atan2` adds +0.0 to both args, three-valued boolean logic in the
+  * adjacency predicate, `nanvl` null passthrough, UTF8String binary
+  * ordering in the node sort). Output is bit-identical to the staged
+  * path — pinned by the `q_graph_frames` / `q_graph_frames_edges` oracle
+  * hashes and by the graph specs, which compare it with the staged path
+  * (both adjacency connect modes, pad on/off, null/NaN corners) and with
+  * the test-side `GraphAssemblyReference`.
   *
-  * Faithfulness: `eval` transcribes the padFrames/withNodeIndex/
-  * Features/pairs column expressions operation-for-operation, including
-  * Catalyst's exact null/NaN semantics (`Greatest`/`Least` skip nulls
-  * and order NaN greatest, `atan2` adds +0.0 to both args, three-valued
-  * boolean logic in the adjacency predicate, `nanvl` null passthrough,
-  * UTF8String binary ordering in the node sort). Output is bit-identical
-  * to the staged path — pinned by the `q_graph_frames` /
-  * `q_graph_frames_edges` oracle hashes and by GraphTensorAggSpec's
-  * staged-vs-fused full-row equality (both adjacency connect modes,
-  * pad on/off, null/NaN corners).
+  * Per-frame columns are defined reductions, so the result does not
+  * depend on row order:
+  *  - each label column (label, graph_id) must hold at most one non-null
+  *    value per frame, which the frame carries; two raise the reference's
+  *    G10 "graph integrity violation" (`graph_converter.py:610-623`);
+  *  - ball_owning_team_id is the minimum non-null value (UTF8String
+  *    binary order), also the synthetic ball row's owning team.
   *
-  * Not supported (callers fall back to the staged path): the Delaunay
-  * adjacency type (needs the per-frame geometric edge table) and custom
-  * feature plugins (arbitrary `Column`s cannot be transcribed — note
-  * `graphFrames` itself always uses the default registry).
-  */
-private[graft] case class GraphTensorAgg(
-    id: Expression,
-    teamId: Expression,
-    positionName: Expression,
-    x: Expression,
-    y: Expression,
-    z: Expression,
-    vx: Expression,
-    vy: Expression,
-    vz: Expression,
-    v: Expression,
-    owning: Expression,
-    carrier: Expression,
-    adjacencyType: String,
-    connectType: String,
-    pad: Boolean,
-    defendingValue: Double,
-    xMin: Double,
-    xMax: Double,
-    yMin: Double,
-    yMax: Double,
-    goalX: Double,
-    goalY: Double,
-    maxDistance: Double,
-    maxPlayerSpeed: Double,
-    maxBallSpeed: Double,
-    goalkeeperId: String,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends OrderedBufferAgg {
+  * Not supported (the staged path serves them): the Delaunay adjacency
+  * type (needs the per-frame geometric edge table) and custom feature
+  * plugins. */
+private[graphs] final case class GraphKernel(
+    settings: GraphSettings,
+    labels: Seq[(String, DataType)]) extends GroupGenerator {
+  import Cols._
+  import GraphSettings._
+  require(settings.adjacencyMatrixType != Delaunay, "delaunay needs the staged geometric path")
 
-  import graft.graphs.GraphSettings._
-  require(adjacencyType != Delaunay, "delaunay needs the staged geometric path")
+  override def inputs: Seq[(String, DataType)] =
+    Seq(ObjectId -> StringType, TeamId -> StringType, PositionName -> StringType) ++
+      Seq(X, Y, Z, Vx, Vy, Vz, Speed).map(_ -> DoubleType) ++
+      Seq(BallOwningTeamId -> StringType, IsBallCarrier -> BooleanType) ++ labels
 
-  override protected def entryFields: Seq[Expression] =
-    Seq(id, teamId, positionName, x, y, z, vx, vy, vz, v, owning, carrier)
+  private val matrix = ArrayType(ArrayType(DoubleType, containsNull = true), containsNull = true)
+  override def output: Seq[StructField] =
+    labels.map { case (name, dt) => StructField(name, dt) } ++ Seq(
+      StructField(BallOwningTeamId, StringType),
+      StructField("x", matrix),
+      StructField("object_ids", ArrayType(StringType, containsNull = true)),
+      StructField("a", ArrayType(ArrayType(IntegerType, containsNull = true), containsNull = true)),
+      StructField("e", matrix))
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("x",
-      ArrayType(ArrayType(DoubleType, containsNull = true), containsNull = true)),
-    StructField("object_ids", ArrayType(StringType, containsNull = true)),
-    StructField("a",
-      ArrayType(ArrayType(IntegerType, containsNull = true), containsNull = true)),
-    StructField("e",
-      ArrayType(ArrayType(DoubleType, containsNull = true), containsNull = true))))
+  private val adjacencyType = settings.adjacencyMatrixType
+  private val connectType = settings.adjacencyMatrixConnectType
+  private val pad = settings.pad
+  private val defendingValue = settings.defendingTeamNodeValue
+  private val (xMin, xMax, yMin, yMax) =
+    (settings.pitch.xMin, settings.pitch.xMax, settings.pitch.yMin, settings.pitch.yMax)
+  private val (goalX, goalY, _) = settings.goalMouth
+  private val maxDistance = settings.maxDistance
+  private val maxPlayerSpeed = settings.maxPlayerSpeed
+  private val maxBallSpeed = settings.maxBallSpeed
+  private val goalkeeperId = settings.goalkeeperId
 
-  // ---------------------------------------------------------------- eval
+  private val OwningIn = 10
+  private val LabelsIn = 12
 
-  private val BallS = UTF8String.fromString(graft.tracking.Cols.Ball)
+  /** The frame's ball-owning team: the minimum non-null value. */
+  private def owningOf(g: Group): UTF8String = {
+    var min: UTF8String = null
+    var i = 0
+    while (i < g.size) {
+      val o = g.string(i, OwningIn)
+      if (o != null && (min == null || o.compareTo(min) < 0)) min = o
+      i += 1
+    }
+    min
+  }
+
+  /** SQL equality of two non-null values (NaN equals NaN, as in
+    * `countDistinct`). */
+  private def same(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: java.lang.Double, y: java.lang.Double) => x.doubleValue == y.doubleValue || (x.isNaN && y.isNaN)
+    case (x: java.lang.Float, y: java.lang.Float) => x.floatValue == y.floatValue || (x.isNaN && y.isNaN)
+    case _ => a == b
+  }
+
+  /** Each label column's one non-null value in the frame, or null. */
+  private def labelsOf(g: Group): Array[Any] = Array.tabulate[Any](labels.length) { l =>
+    var v: Any = null
+    var i = 0
+    while (i < g.size) {
+      val x = g.get(i, LabelsIn + l)
+      if (x != null) {
+        if (v == null) v = x
+        else require(same(v, x), GraphConverter.integrityViolation(labels.map(_._1)))
+      }
+      i += 1
+    }
+    v
+  }
+
+  private val BallS = UTF8String.fromString(Ball)
   private val EmptyS = UTF8String.fromString("")
   private val GkS = UTF8String.fromString(goalkeeperId)
 
@@ -143,30 +162,24 @@ private[graft] case class GraphTensorAgg(
     else if (a == null || b == null) null
     else java.lang.Boolean.FALSE
 
-  private def readNd(r: InternalRow): Nd = new Nd(
-    if (r.isNullAt(0)) null else r.getUTF8String(0),
-    if (r.isNullAt(1)) null else r.getUTF8String(1),
-    if (r.isNullAt(2)) null else r.getUTF8String(2),
-    if (r.isNullAt(3)) null else java.lang.Double.valueOf(r.getDouble(3)),
-    if (r.isNullAt(4)) null else java.lang.Double.valueOf(r.getDouble(4)),
-    if (r.isNullAt(5)) null else java.lang.Double.valueOf(r.getDouble(5)),
-    if (r.isNullAt(6)) null else java.lang.Double.valueOf(r.getDouble(6)),
-    if (r.isNullAt(7)) null else java.lang.Double.valueOf(r.getDouble(7)),
-    if (r.isNullAt(8)) null else java.lang.Double.valueOf(r.getDouble(8)),
-    if (r.isNullAt(9)) null else java.lang.Double.valueOf(r.getDouble(9)),
-    if (r.isNullAt(10)) null else r.getUTF8String(10),
-    if (r.isNullAt(11)) null else java.lang.Boolean.valueOf(r.getBoolean(11)))
+  private def readNd(g: Group, i: Int): Nd = {
+    def num(in: Int) = if (g.isNull(i, in)) null else java.lang.Double.valueOf(g.double(i, in))
+    new Nd(g.string(i, 0), g.string(i, 1), g.string(i, 2),
+      num(3), num(4), num(5), num(6), num(7), num(8), num(9), g.string(i, 10),
+      if (g.isNull(i, 11)) null else java.lang.Boolean.valueOf(g.boolean(i, 11)))
+  }
 
   private def padRow(team: UTF8String, own: UTF8String): Nd = new Nd(
     EmptyS, team,
     if (team != null && team.equals(BallS)) BallS else EmptyS,
     0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, own, java.lang.Boolean.FALSE)
 
-  override def eval(buffer: ArrayBuffer[InternalRow]): Any = {
-    if (buffer.isEmpty) return null
-    var nodes = new ArrayBuffer[Nd](buffer.length + 8)
+  override def run(g: Group): Iterator[InternalRow] = {
+    val owning = owningOf(g)
+    val passed = labelsOf(g) :+ owning
+    var nodes = new ArrayBuffer[Nd](g.size + 8)
     var b = 0
-    while (b < buffer.length) { nodes += readNd(buffer(b)); b += 1 }
+    while (b < g.size) { nodes += readNd(g, b); b += 1 }
 
     if (pad) {
       // padFrames: per-(team, owning) deficits against the 11/11/1
@@ -190,21 +203,6 @@ private[graft] case class GraphTensorAgg(
         if (!found) groups += ((nd.team, nd.owning, 1))
         i += 1
       }
-      // synthetic-ball owning: a DEFINED reduction (minimum non-null
-      // owning, UTF8String binary order) instead of `nodes(0).owning` —
-      // buffer order after a partial-aggregate merge is
-      // shuffle-fetch-order-dependent, so "first" would be
-      // nondeterministic on a frame with mixed owning values. Identical
-      // on every per-frame-constant input (the possession invariant);
-      // pinned for the mixed case in GraphTensorAggSpec.
-      var firstOwning: UTF8String = null
-      i = 0
-      while (i < nodes.length) {
-        val o = nodes(i).owning
-        if (o != null && (firstOwning == null || o.compareTo(firstOwning) < 0))
-          firstOwning = o
-        i += 1
-      }
       var g = 0
       while (g < groups.length) {
         val (t, o, c) = groups(g)
@@ -213,7 +211,7 @@ private[graft] case class GraphTensorAgg(
         while (k < target) { nodes += padRow(t, o); k += 1 }
         g += 1
       }
-      if (!hasBall) nodes += padRow(BallS, firstOwning)
+      if (!hasBall) nodes += padRow(BallS, owning)
 
       // completeness: exactly 1 ball, 11 owning, 11 defending
       var nb = 0; var no = 0; var nd0 = 0
@@ -225,7 +223,7 @@ private[graft] case class GraphTensorAgg(
         if (!nd.isBall && nd.team != null && nd.owning != null && !nd.team.equals(nd.owning)) nd0 += 1
         i += 1
       }
-      if (nb != 1 || no != 11 || nd0 != 11) return null
+      if (nb != 1 || no != 11 || nd0 != 11) return Iterator.empty
     } else {
       // removeIncompleteFrames: exactly 3 distinct non-null team ids
       val teams = new ArrayBuffer[UTF8String](4)
@@ -235,7 +233,7 @@ private[graft] case class GraphTensorAgg(
         if (t != null && !teams.exists(_.equals(t))) teams += t
         i += 1
       }
-      if (teams.length != 3) return null
+      if (teams.length != 3) return Iterator.empty
     }
 
     // node order (withNodeIndex): (ball*2 - owningPlayer) ASC NULLS
@@ -376,9 +374,9 @@ private[graft] case class GraphTensorAgg(
       i += 1
     }
 
-    new GenericInternalRow(Array[Any](
+    Iterator.single(new GenericInternalRow(passed ++ Array[Any](
       new GenericArrayData(xOut), new GenericArrayData(idsOut),
-      new GenericArrayData(aOut), new GenericArrayData(eOut.toArray)))
+      new GenericArrayData(aOut), new GenericArrayData(eOut.toArray))))
   }
 
   /** sortValue of withNodeIndex: isBall.cast(int)*2 - owningPlayer.cast
@@ -430,54 +428,5 @@ private[graft] case class GraphTensorAgg(
     e(4) = java.lang.Double.valueOf(nn(sincosNorm(nn(math.cos(va)))))
     e(5) = java.lang.Double.valueOf(nn(sincosNorm(nn(math.sin(va)))))
     new GenericArrayData(e)
-  }
-
-  override def prettyName: String = "graph_tensor"
-  override def withNewMutableAggBufferOffset(newOffset: Int): GraphTensorAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): GraphTensorAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(id = newChildren(0), teamId = newChildren(1), positionName = newChildren(2),
-      x = newChildren(3), y = newChildren(4), z = newChildren(5),
-      vx = newChildren(6), vy = newChildren(7), vz = newChildren(8),
-      v = newChildren(9), owning = newChildren(10), carrier = newChildren(11))
-}
-
-object GraphTensorAgg {
-  import graft.graphs.GraphSettings
-
-  /** struct(x, object_ids, a, e) for one frame group; null for frames
-    * the padding/completeness rules drop. Children are cast to the
-    * types the staged path's feature expressions would see. */
-  def graphTensor(settings: GraphSettings, id: Column, teamId: Column,
-      positionName: Column, x: Column, y: Column, z: Column,
-      vx: Column, vy: Column, vz: Column, v: Column,
-      owning: Column, carrier: Column): Column = {
-    val (gx, gy, _) = settings.goalMouth
-    ColumnShim.column(GraphTensorAgg(
-      ColumnShim.expression(id.cast("string")),
-      ColumnShim.expression(teamId.cast("string")),
-      ColumnShim.expression(positionName.cast("string")),
-      ColumnShim.expression(x.cast("double")),
-      ColumnShim.expression(y.cast("double")),
-      ColumnShim.expression(z.cast("double")),
-      ColumnShim.expression(vx.cast("double")),
-      ColumnShim.expression(vy.cast("double")),
-      ColumnShim.expression(vz.cast("double")),
-      ColumnShim.expression(v.cast("double")),
-      ColumnShim.expression(owning.cast("string")),
-      ColumnShim.expression(carrier.cast("boolean")),
-      settings.adjacencyMatrixType,
-      settings.adjacencyMatrixConnectType,
-      settings.pad,
-      settings.defendingTeamNodeValue,
-      settings.pitch.xMin, settings.pitch.xMax,
-      settings.pitch.yMin, settings.pitch.yMax,
-      gx, gy,
-      settings.maxDistance,
-      settings.maxPlayerSpeed, settings.maxBallSpeed,
-      settings.goalkeeperId).toAggregateExpression())
   }
 }

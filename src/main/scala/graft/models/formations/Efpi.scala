@@ -1,9 +1,14 @@
 package graft.models.formations
 
+import graft.functions.{Group, GroupGenerator, GroupLocal}
 import graft.tracking.Cols
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** EFPI formation detection (M5-M7, arXiv:2506.23843), re-expressed
   * Spark-first from `soccer/models/formations/efpi.py:340-748`.
@@ -28,8 +33,9 @@ import org.apache.spark.sql.functions._
   *     ([[Hungarian.solveCanonical]] — canonical lexicographic brute
   *     force at n ≤ 4, Kuhn-Munkres O(n³) beyond, replacing scipy's
   *     `linear_sum_assignment`), pick the min-total-cost formation.
-  *     Runs inside `flatMapGroups` keyed by segment — one group is ≤23
-  *     rows, so detection parallelism is the number of segments, which
+  *     Runs as one kernel per (game, period, segment, owning) group on
+  *     the group-local node ([[EfpiKernel]]) — one group is ≤23 rows,
+  *     so detection parallelism is the number of segments, which
   *     scales with the data.
   *  5. '''Hysteresis''' (`efpi.py:222-242`, only when `changeThreshold`
   *     is set): the keep-or-update decision is a sequential fold over
@@ -193,10 +199,10 @@ object Efpi {
   }
 
   /** The stateless (always-update) per-segment resolution — the former
-    * `flatMapGroups` body, shared by [[EfpiSegmentAgg]]. Key columns of
-    * the returned [[OutRow]]s are left at their defaults (the caller
+    * `flatMapGroups` body, run by [[EfpiKernel]]. Key columns of the
+    * returned [[OutRow]]s are left at their defaults (the caller
     * re-attaches the grouping columns). */
-  private[formations] def resolveStatelessSegment(
+  private[graft] def resolveStatelessSegment(
       rows: Seq[SegRow], lib: Templates.Library): Seq[OutRow] = {
     val cands = detectSegment(rows, lib)
     val byTeam = cands.map(c => c.team_id -> c).toMap
@@ -343,83 +349,16 @@ object Efpi {
       timeRange: Option[(Long, Long, Int)] = None): DataFrame = {
     import spark.implicits._
     val lib = cfg.customTemplates.getOrElse(Templates.library(cfg.formations))
-    require(cfg.substitutions == "drop",
-      "substitutions='merge' is not implemented (matches reference efpi.py:645-649)")
-
-    // analysis-window filter (efpi.py:342-344, 404): the reference takes
-    // start_time/end_time/period_id together or not at all — the tupled
-    // Option makes partial specification unrepresentable
-    val scoped = timeRange match {
-      case Some((startMicros, endMicros, periodId)) =>
-        df.filter(col(Cols.Timestamp).between(startMicros, endMicros) &&
-          col(Cols.PeriodId) === periodId)
-      case None => df
-    }
-
-    val withSeg = addSegmentId(scoped.filter(col(Cols.BallOwningTeamId).isNotNull), cfg.every)
-
-    val segRows: Dataset[SegRow] =
-      if (cfg.every == "frame") {
-        withSeg.select(
-          col(Cols.GameId), col(Cols.PeriodId), col("segment_id"),
-          col(Cols.ObjectId).as("id"), col(Cols.TeamId),
-          col(Cols.PositionName), col(Cols.X), col(Cols.Y),
-          col(Cols.BallOwningTeamId)).as[SegRow]
-      } else {
-        // segment modes read the segmented table three times through
-        // dropOverlappingSubstitutions (overlap agg, rank join, anti
-        // join); persist so the upstream kinematics lineage executes
-        // once instead of three source scans at scale
-        val segBase = withSeg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val pruned = dropOverlappingSubstitutions(segBase)
-        // mean coordinates per (game, period, owning, object, segment)
-        // (efpi.py:655-680); rounded so partial-agg order can't leak
-        // into detection input
-        val means = pruned
-          .groupBy(col(Cols.GameId), col(Cols.PeriodId), col(Cols.BallOwningTeamId),
-            col(Cols.ObjectId), col("segment_id"))
-          .agg(
-            round(avg(col(Cols.X)), 9).as(Cols.X),
-            round(avg(col(Cols.Y)), 9).as(Cols.Y),
-            first(col(Cols.PositionName)).as(Cols.PositionName),
-            first(col(Cols.TeamId)).as(Cols.TeamId))
-          .select(
-            col(Cols.GameId), col(Cols.PeriodId), col("segment_id"),
-            col(Cols.ObjectId).as("id"), col(Cols.TeamId),
-            col(Cols.PositionName), col(Cols.X), col(Cols.Y),
-            col(Cols.BallOwningTeamId)).as[SegRow]
-        // eagerly materialize the tiny per-(object, segment) mean table
-        // (localCheckpoint blocks are GC-reclaimed by the context
-        // cleaner), then release the full segmented cache — the big
-        // persist does not outlive this call
-        val mat = means.localCheckpoint(true)
-        segBase.unpersist()
-        mat
-      }
+    val segRows = segmentRows(spark, df, cfg, timeRange)
 
     if (cfg.changeThreshold.isEmpty) {
       // stateless: always-update (efpi.py:228-230) ⇒ fully parallel.
-      // Native-column groupBy + EfpiSegmentAgg instead of the typed
-      // groupByKey(lambda).flatMapGroups: the lambda key forced an
-      // AppendColumns + Exchange + Sort (Catalyst cannot equate the
-      // serialized tuple with the upstream partitioning columns) plus a
-      // per-row encoder round-trip; the native grouping reuses the
-      // possession stage's frame partitioning — zero detection-side
-      // exchange in "frame" mode — and the detection logic runs
-      // unchanged inside the aggregate's eval.
-      val df0 = segRows.toDF()
-      df0
-        .groupBy(col(Cols.GameId), col(Cols.PeriodId), col("segment_id"),
-          col("ball_owning_team_id"))
-        .agg(EfpiSegmentAgg(lib, col("id"), col("team_id"),
-          col("position_name"), col("x"), col("y"),
-          col("ball_owning_team_id")).as("__out"))
-        .select(Seq(col(Cols.GameId), col(Cols.PeriodId), col("segment_id")) :+
-          explode(col("__out")).as("__o"): _*)
-        .select(col(Cols.GameId), col(Cols.PeriodId), col("segment_id"),
-          col("__o.id").as("id"), col("__o.team_id").as("team_id"),
-          col("__o.position").as("position"), col("__o.formation").as("formation"),
-          col("__o.is_attacking").as("is_attacking"))
+      // One segment kernel per (game, period, segment, owning) group on
+      // the group-local node; in "frame" mode it rides the possession
+      // stage's frame partitioning, so detection adds no exchange.
+      GroupLocal(segRows.toDF(),
+        Seq(Cols.GameId, Cols.PeriodId, "segment_id", Cols.BallOwningTeamId), Nil, EfpiKernel(lib))
+        .drop(Cols.BallOwningTeamId)
     } else {
       // parallel detection, then per-game sequential hysteresis fold
       val detected = segRows
@@ -455,6 +394,69 @@ object Efpi {
     }
   }
 
+  /** Stages 1-3: the detection input, one row per object per segment
+    * (raw coordinates in "frame" mode, rounded segment means
+    * otherwise). */
+  private[graft] def segmentRows(
+      spark: SparkSession,
+      df: DataFrame,
+      cfg: Config,
+      timeRange: Option[(Long, Long, Int)]): Dataset[SegRow] = {
+    import spark.implicits._
+    require(cfg.substitutions == "drop",
+      "substitutions='merge' is not implemented (matches reference efpi.py:645-649)")
+
+    // analysis-window filter (efpi.py:342-344, 404): the reference takes
+    // start_time/end_time/period_id together or not at all — the tupled
+    // Option makes partial specification unrepresentable
+    val scoped = timeRange match {
+      case Some((startMicros, endMicros, periodId)) =>
+        df.filter(col(Cols.Timestamp).between(startMicros, endMicros) &&
+          col(Cols.PeriodId) === periodId)
+      case None => df
+    }
+
+    val withSeg = addSegmentId(scoped.filter(col(Cols.BallOwningTeamId).isNotNull), cfg.every)
+
+    if (cfg.every == "frame") {
+      withSeg.select(
+        col(Cols.GameId), col(Cols.PeriodId), col("segment_id"),
+        col(Cols.ObjectId).as("id"), col(Cols.TeamId),
+        col(Cols.PositionName), col(Cols.X), col(Cols.Y),
+        col(Cols.BallOwningTeamId)).as[SegRow]
+    } else {
+      // segment modes read the segmented table three times through
+      // dropOverlappingSubstitutions (overlap agg, rank join, anti
+      // join); persist so the upstream kinematics lineage executes
+      // once instead of three source scans at scale
+      val segBase = withSeg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pruned = dropOverlappingSubstitutions(segBase)
+      // mean coordinates per (game, period, owning, object, segment)
+      // (efpi.py:655-680); rounded so partial-agg order can't leak
+      // into detection input
+      val means = pruned
+        .groupBy(col(Cols.GameId), col(Cols.PeriodId), col(Cols.BallOwningTeamId),
+          col(Cols.ObjectId), col("segment_id"))
+        .agg(
+          round(avg(col(Cols.X)), 9).as(Cols.X),
+          round(avg(col(Cols.Y)), 9).as(Cols.Y),
+          first(col(Cols.PositionName)).as(Cols.PositionName),
+          first(col(Cols.TeamId)).as(Cols.TeamId))
+        .select(
+          col(Cols.GameId), col(Cols.PeriodId), col("segment_id"),
+          col(Cols.ObjectId).as("id"), col(Cols.TeamId),
+          col(Cols.PositionName), col(Cols.X), col(Cols.Y),
+          col(Cols.BallOwningTeamId)).as[SegRow]
+      // eagerly materialize the tiny per-(object, segment) mean table
+      // (localCheckpoint blocks are GC-reclaimed by the context
+      // cleaner), then release the full segmented cache — the big
+      // persist does not outlive this call
+      val mat = means.localCheckpoint(true)
+      segBase.unpersist()
+      mat
+    }
+  }
+
   /** Segment metadata table (`efpi.py:729-744`): one row per distinct
     * (segment, per-object frame span) combination, exactly the
     * reference's `.unique()` on the six selected columns. */
@@ -478,5 +480,30 @@ object Efpi {
       .localCheckpoint(true)
     segBase.unpersist()
     out
+  }
+}
+
+/** One (game, period, segment, owning) group → one row per object (id,
+  * team_id, position, formation, is_attacking): the stateless detection
+  * and row resolution of [[Efpi.resolveStatelessSegment]]. A null
+  * coordinate reads as 0.0. */
+private[formations] final case class EfpiKernel(lib: Templates.Library) extends GroupGenerator {
+  override def inputs: Seq[(String, DataType)] = Seq("id" -> StringType,
+    "team_id" -> StringType, "position_name" -> StringType, "x" -> DoubleType,
+    "y" -> DoubleType, "ball_owning_team_id" -> StringType)
+  override def output: Seq[StructField] = Seq("id", "team_id", "position", "formation")
+    .map(StructField(_, StringType)) :+ StructField("is_attacking", BooleanType)
+
+  override def run(g: Group): Iterator[InternalRow] = {
+    // detectSegment compares and sorts java.lang.String
+    def str(i: Int, in: Int): String = Option(g.string(i, in)).map(_.toString).orNull
+    def num(i: Int, in: Int): Double = if (g.isNull(i, in)) 0.0 else g.double(i, in)
+    def utf(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
+    val rows = (0 until g.size).map(i =>
+      Efpi.SegRow("", 0, 0L, str(i, 0), str(i, 1), str(i, 2), num(i, 3), num(i, 4), str(i, 5)))
+    Efpi.resolveStatelessSegment(rows, lib).iterator.map { o =>
+      new GenericInternalRow(Array[Any](utf(o.id), utf(o.team_id), utf(o.position),
+        utf(o.formation), o.is_attacking.map(java.lang.Boolean.valueOf).orNull))
+    }
   }
 }

@@ -81,7 +81,11 @@ object Hungarian {
   }
 
   /** Canonical solve: brute force (lexicographic tie-break) for n ≤ 4,
-    * Kuhn-Munkres beyond. */
-  def solveCanonical(cost: Array[Array[Double]]): (Array[Int], Double) =
+    * Kuhn-Munkres beyond. A NaN or infinite cost (a NaN or infinite
+    * coordinate) raises the error scipy's `linear_sum_assignment` names;
+    * neither solver has an answer for it. */
+  def solveCanonical(cost: Array[Array[Double]]): (Array[Int], Double) = {
+    require(cost.forall(_.forall(c => !c.isNaN && !c.isInfinite)), "matrix contains invalid numeric entries")
     if (cost.length <= 4) bruteForce(cost) else solve(cost)
+  }
 }

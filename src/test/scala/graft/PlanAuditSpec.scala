@@ -17,6 +17,48 @@ class PlanAuditSpec extends AnyFunSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Every node of a physical plan, AQE query stages included. */
+  private def flattenPlan(
+      p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => Nil
+    }
+    p +: (p.children ++ inner).flatMap(flattenPlan)
+  }
+
+  /** The executed group-local nodes running the kernel named `kernel`. */
+  private def kernelNodes(
+      df: org.apache.spark.sql.DataFrame, kernel: String): Seq[graft.functions.GroupLocalExec] =
+    flattenPlan(df.queryExecution.executedPlan).collect {
+      case g: graft.functions.GroupLocalExec if g.kernel.name == kernel => g
+    }
+
+  /** Asserts the kernel's node has its own exchange and that it moves
+    * exactly `columns`. */
+  private def assertKernelExchange(
+      df: org.apache.spark.sql.DataFrame, kernel: String, columns: Seq[String]): Unit = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // the nearest shuffle below the node on each path
+    def below(p: SparkPlan): Seq[ShuffleExchangeLike] = p match {
+      case e: ShuffleExchangeLike => Seq(e)
+      case q: QueryStageExec => below(q.plan)
+      case o => o.children.flatMap(below)
+    }
+    val nodes = kernelNodes(df, kernel)
+    assert(nodes.size === 1, s"expected one $kernel node")
+    val exchanges = below(nodes.head.child)
+    assert(exchanges.nonEmpty, s"$kernel has no exchange of its own")
+    exchanges.foreach { e =>
+      assert(e.output.map(_.name).sorted === columns.sorted,
+        s"$kernel's exchange moves ${e.output.map(_.name).mkString(", ")}")
+    }
+  }
+
   test("q_join_dims broadcasts both dimension tables") {
     val q = SparkEntry.allQueries.find(_.name == "q_join_dims").get
     val p = plan(q.run(spark, sf))
@@ -80,39 +122,44 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("pi pairs: fused per-frame aggregate — no join, map-side combine, two exchanges") {
     import graft.tracking._
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val trk = SyntheticTracking.df(spark, sf, Cols.ByObjectPeriod)
     val dat = Possession.inferBallCarrier(
       Kinematics(trk, TrackingSettings(), None, None), TrackingSettings())
     val df = graft.models.PressingIntensity.pairs(dat)
     df.collect()
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val inner = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case _ => Nil
-      }
-      p +: (p.children ++ inner).flatMap(flatten)
-    }
-    val nodes = flatten(df.queryExecution.executedPlan)
-    // r18 fuse: the pair self-join and both PI windows are gone
+    val nodes = flattenPlan(df.queryExecution.executedPlan)
+    // the pair self-join and both PI windows are gone
     val names = nodes.map(_.nodeName)
     assert(!names.exists(n => n.contains("Join")),
       s"fused PI pairs still joins:\n${names.mkString("\n")}")
-    // the aggregate keeps its partial (map-side) phase
-    val aggs = nodes.filter(_.nodeName.contains("ObjectHashAggregate"))
-      .map(_.simpleString(10000))
-    assert(aggs.exists(_.contains("partial_pi_pairs")),
-      s"fused PI pairs lost map-side combine:\n${aggs.mkString("\n")}")
-    assert(aggs.exists(a => a.contains("pi_pairs(") && !a.contains("partial_")),
-      s"missing final-phase PI aggregate:\n${aggs.mkString("\n")}")
+    // one frame kernel: no aggregate buffers rows, no explode unpacks them
+    assert(!names.exists(n => n.contains("ObjectHashAggregate") || n.contains("Generate")),
+      s"PI pairs plans an aggregate or a generator:\n${names.mkString("\n")}")
+    assert(kernelNodes(df, "PiPairsKernel").size === 1, names.mkString("\n"))
     // exactly two exchanges: the kinematics object-period key and the
-    // possession frame key (the aggregate rides the possession window's
+    // possession frame key (the kernel rides the possession kernel's
     // partitioning — no exchange of its own)
     val exchanges = nodes.count(n =>
       n.nodeName.contains("Exchange") && !n.nodeName.contains("Reused"))
     assert(exchanges <= 2, s"fused PI pairs gained exchanges ($exchanges):\n${names.mkString("\n")}")
+    // on input not clustered by frame the kernel adds its own exchange,
+    // which moves the frame keys and the 12 inputs only
+    val spread = graft.models.PressingIntensity.pairs(dat.repartition(7))
+    spread.collect()
+    import Cols._
+    assertKernelExchange(spread, "PiPairsKernel", ByFrame ++ Seq(Timestamp, ObjectId, TeamId,
+      BallOwningTeamId, IsBallCarrier, X, Y, Z, Vx, Vy, Vz, Speed))
+  }
+
+  test("formations plan prints each kernel's name and keys, not its template library") {
+    import graft.tracking._
+    val dat = Possession.inferBallCarrier(
+      Kinematics(SyntheticTracking.df(spark, sf), TrackingSettings(), None, None))
+    val df = graft.models.formations.Efpi.fit(spark, dat, graft.models.formations.Efpi.Config())
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("EfpiKernel"), p)
+    assert(!p.contains("Template("), s"the formations plan prints template fields:\n$p")
   }
 
   test("bucketed tables join with zero exchange") {
@@ -264,35 +311,25 @@ class PlanAuditSpec extends AnyFunSuite {
     val df = GraphConverter.graphFrames(trk, GraphSettings())
     df.collect()
     // traverse the finalized plan tree (the toString dump truncates on
-    // plans this wide, hiding the pair-agg subtree from string greps)
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val inner = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case _ => Nil
-      }
-      p +: (p.children ++ inner).flatMap(flatten)
-    }
-    val aggs = flatten(df.queryExecution.executedPlan)
-      .filter(_.nodeName.contains("ObjectHashAggregate"))
-      .map(_.simpleString(10000))
-    // the fused whole-graph TypedImperativeAggregate (r17) must run as
-    // ObjectHashAggregate with a partial (map-side) phase, exactly
-    // like the staged tensor aggregates did — losing the partial phase
-    // would shuffle raw node rows instead of per-frame buffers
-    assert(aggs.nonEmpty, "tensor agg lost ObjectHashAggregate")
-    assert(aggs.exists(_.contains("partial_graph_tensor")),
-      s"fused graph assembly lost map-side combine:\n${aggs.mkString("\n")}")
-    assert(aggs.exists(a => a.contains("graph_tensor(") && !a.contains("partial_")),
-      s"missing final-phase graph aggregate:\n${aggs.mkString("\n")}")
+    // plans this wide, hiding subtrees from string greps); the default
+    // path is one frame kernel: no aggregate buffers node rows and no
+    // explode unpacks them
+    val all = flattenPlan(df.queryExecution.executedPlan).map(_.nodeName)
+    assert(kernelNodes(df, "GraphKernel").size === 1, all.mkString("\n"))
+    assert(!all.exists(n => n.contains("ObjectHashAggregate") || n.contains("Generate")),
+      s"fused graphFrames plans an aggregate or a generator:\n${all.mkString("\n")}")
     // and the fused query must carry no shuffle join — the staged
     // path's node⋈pair SortMergeJoin is gone by construction (the
     // input's own label broadcast join is allowed)
-    val all = flatten(df.queryExecution.executedPlan).map(_.nodeName)
     assert(!all.exists(n => n.contains("SortMergeJoin") || n.contains("ShuffledHashJoin")),
       s"fused graphFrames still shuffle-joins:\n${all.mkString("\n")}")
+    // on input not clustered by frame, the kernel's own exchange moves
+    // the frame keys and its declared inputs only
+    val spread = GraphConverter.graphFrames(trk.repartition(7), GraphSettings())
+    spread.collect()
+    import Cols._
+    assertKernelExchange(spread, "GraphKernel", ByFrame ++ Seq(ObjectId, TeamId, PositionName,
+      X, Y, Z, Vx, Vy, Vz, Speed, BallOwningTeamId, IsBallCarrier, Label, GraphId))
 
     // the staged tensor aggregates (the Delaunay/bucketed/A-B path)
     // keep their own map-side combine — audited via the generic
@@ -301,7 +338,7 @@ class PlanAuditSpec extends AnyFunSuite {
       adjacencyMatrixType = GraphSettings.Delaunay,
       adjacencyMatrixConnectType = GraphSettings.ConnectNone, pad = false))
     staged.collect()
-    val stagedAggs = flatten(staged.queryExecution.executedPlan)
+    val stagedAggs = flattenPlan(staged.queryExecution.executedPlan)
       .filter(_.nodeName.contains("ObjectHashAggregate"))
       .map(_.simpleString(10000))
     assert(stagedAggs.exists(_.contains("partial_ordered_nodes")),

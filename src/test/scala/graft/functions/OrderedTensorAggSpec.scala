@@ -71,6 +71,7 @@ class OrderedTensorAggSpec extends AnyFunSuite {
 
   test("gridMatrices == generic rectangular reshape with labels") {
     import spark.implicits._
+    // the same grid data, in the PI pairs schema, through the matrix kernel
     val rows = (0 until 10).flatMap { f =>
       val nr = 1 + rng.nextInt(4); val nc = 1 + rng.nextInt(4)
       for (i <- 0 until nr; j <- 0 until nc) yield
@@ -79,11 +80,12 @@ class OrderedTensorAggSpec extends AnyFunSuite {
           math.rint(rng.nextDouble() * 1e6) / 1e3)
     }
     val df = rng.shuffle(rows).toDF("f", "i", "j", "ri", "ci", "v1", "v2")
-    val native = df.groupBy(col("f"))
-      .agg(OrderedTensorAgg.gridMatrices(col("i"), col("j"), col("ri"), col("ci"),
-        col("v1") -> "m1", col("v2") -> "m2").as("g"))
-      .select(col("f"), col("g.rows").as("rows"), col("g.columns").as("columns"),
-        col("g.m1").as("m1"), col("g.m2").as("m2"))
+    val pairs = df.select(lit("g").as("game_id"), lit(1).as("period_id"), col("f").as("frame_id"),
+      (col("f") * 40000L).as("timestamp"), col("i").as("row_idx"), col("j").as("col_idx"),
+      col("ri").as("row_id"), col("ci").as("col_id"), col("v1").as("tti"), col("v2").as("pti"))
+    val native = graft.models.PressingIntensity.matrices(pairs)
+      .select(col("frame_id").as("f"), col("rows"), col("columns"),
+        col("time_to_intercept").as("m1"), col("probability_to_intercept").as("m2"))
     val generic = df.groupBy(col("f"))
       .agg(array_sort(collect_list(struct(col("i"), col("j"), col("ri"), col("ci"),
         col("v1"), col("v2")))).as("cells"))

@@ -5,8 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The generic graph-tensor assembly that the direct-to-tensor
-  * aggregates ([[graft.functions.OrderedTensorAgg]],
-  * [[graft.functions.GraphTensorAgg]]) replaced: the staged
+  * aggregates ([[graft.functions.OrderedTensorAgg]]) and the frame
+  * kernel ([[graft.graphs.GraphKernel]]) replaced: the staged
   * preparation (padding or completeness filter, node index) followed by
   * `collect_list` + `array_sort` + `transform` rebuilds of `x`,
   * `object_ids`, `a` and `e`. GraphConverterSpec compares

@@ -158,6 +158,37 @@ class GraphConverterSpec extends AnyFunSuite {
     assert(e.getMessage.contains("integrity"))
   }
 
+  test("graphFrames raises the integrity error on a frame with two labels or graph ids") {
+    val settings = GraphSettings(pad = false)
+    val ok = smallFrame.withColumn(GraphId, lit("g-1")).withColumn(Label, lit(1L))
+    val one = GraphConverter.graphFrames(ok, settings).collect()
+    assert(one.map(r => (r.getAs[Long](Label), r.getAs[String](GraphId))).toSeq === Seq((1L, "g-1")))
+    // a null label leaves the frame's one value standing
+    val partial = ok.withColumn(Label, when(col(ObjectId) === "a1", lit(null).cast("long"))
+      .otherwise(lit(1L)))
+    assert(GraphConverter.graphFrames(partial, settings).collect().map(_.getAs[Long](Label)).toSeq ===
+      Seq(1L))
+    val mixed = Seq(
+      ok.withColumn(Label, when(col(ObjectId) === "h1", 0L).otherwise(1L)),
+      ok.withColumn(GraphId, when(col(ObjectId) === "ball", "g-X").otherwise("g-1")))
+    mixed.foreach { bad =>
+      val e = intercept[Exception](GraphConverter.graphFrames(bad, settings).collect())
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      assert(messages(e).exists(_.contains("graph integrity violation")), messages(e))
+    }
+  }
+
+  test("graphFrames: ball_owning_team_id is the frame's minimum owning team") {
+    val mixed = smallFrame.withColumn(BallOwningTeamId,
+      when(col(ObjectId) === "a2", lit("away")).otherwise(lit("home")))
+    val settings = GraphSettings(pad = false)
+    val forward = GraphConverter.graphFrames(mixed, settings).collect()
+    val reversed = GraphConverter.graphFrames(mixed.orderBy(col(ObjectId).desc), settings).collect()
+    assert(forward.map(_.getAs[String](BallOwningTeamId)).toSeq === Seq("away"))
+    assert(forward.map(_.toString).toSeq === reversed.map(_.toString).toSeq)
+  }
+
   test("global features: ball type targets the ball row, all type every row") {
     val nf = GraphConverter.withNodeFeatures(
       GraphConverter.removeIncompleteFrames(smallFrame), GraphSettings(pad = false))

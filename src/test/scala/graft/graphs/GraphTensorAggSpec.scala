@@ -6,8 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The fused single-aggregation graphFrames path
-  * ([[graft.functions.GraphTensorAgg]], optimization round 17) must be
+/** The fused graphFrames path (one frame kernel,
+  * [[graft.graphs.GraphKernel]]) must be
   * bit-identical to the staged pipeline (padFrames + withNodeIndex +
   * assembleGraphFrames) it replaced — on the real tracking pipeline, on
   * every supported adjacency/connect combination, and on the null/NaN
@@ -163,9 +163,9 @@ class GraphTensorAggSpec extends AnyFunSuite {
   test("delaunay settings still route to the staged geometric path") {
     val df = GraphConverter.graphFrames(realInput,
       GraphSettings(pad = false, adjacencyMatrixType = GraphSettings.Delaunay))
-    // the staged path materializes caches; the fused agg must not appear
+    // the staged path materializes caches; the frame kernel must not appear
     val plan = df.queryExecution.optimizedPlan.toString
-    assert(!plan.contains("graph_tensor"), plan)
+    assert(!plan.contains("GraphKernel"), plan)
     spark.catalog.clearCache()
   }
 }

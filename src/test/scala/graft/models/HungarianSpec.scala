@@ -63,4 +63,12 @@ class HungarianSpec extends AnyFunSuite {
     val identity = (0 until n).map(i => cost(i)(i)).sum
     assert(total <= identity + 1e-9)
   }
+
+  test("a NaN or infinite cost raises scipy's named error on both solvers") {
+    for (n <- Seq(3, 6); bad <- Seq(Double.NaN, Double.PositiveInfinity)) {
+      val cost = Array.tabulate(n, n)((i, j) => if (i == 1 && j == 2) bad else (i + 2 * j).toDouble)
+      val e = intercept[IllegalArgumentException](Hungarian.solveCanonical(cost))
+      assert(e.getMessage.contains("matrix contains invalid numeric entries"))
+    }
+  }
 }

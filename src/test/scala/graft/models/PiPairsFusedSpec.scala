@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Staged-vs-fused equality for the r18 PiPairsAgg fuse: the fused
+/** Staged-vs-fused equality for the PI pair kernel: the fused
   * [[PressingIntensity.pairs]] must reproduce [[PiStagedReference.pairs]]
   * bit-for-bit on the real pipeline for every declared parameter
   * combination, and on corner frames with null/NaN coordinates, null
