@@ -98,15 +98,6 @@ object MinHash {
           min((col("h") * A(i) + B(i)) % Prime).as(s"mh$i")): _*)
   }
 
-  /** Banded-LSH candidate pairs (id_a < id_b), distinct across bands.
-    *
-    * `maxBucket` is the degenerate-corpus guard: a band bucket of k
-    * docs emits k² candidate work, so one pathological bucket (e.g. a
-    * boilerplate page repeated millions of times) would concentrate a
-    * quadratic blowup on a single key. Buckets larger than the cap are
-    * dropped from candidate generation entirely — their members are
-    * still compared through their OTHER bands (the standard LSH
-    * treatment, same shape as [[Jaccard]]'s document-frequency cap). */
   /** One (id, band, key) row per document per band — the projection
     * both the LSH join ([[candidatePairs]]) and the cost measurement
     * ([[bandCostTable]]) bucket on, kept in one place so the measured
@@ -136,6 +127,15 @@ object MinHash {
       }: _*)).as("__bk"))
       .select(col(idCol), col("__bk.band").as("band"), col("__bk.key").as("key"))
 
+  /** Banded-LSH candidate pairs (id_a < id_b), distinct across bands.
+    *
+    * `maxBucket` is the degenerate-corpus guard: a band bucket of k
+    * docs emits k² candidate work, so one pathological bucket (e.g. a
+    * boilerplate page repeated millions of times) would concentrate a
+    * quadratic blowup on a single key. Buckets larger than the cap are
+    * dropped from candidate generation entirely — their members are
+    * still compared through their OTHER bands (the standard LSH
+    * treatment, same shape as [[Jaccard]]'s document-frequency cap). */
   def candidatePairs(
       sig: DataFrame,
       idCol: String,

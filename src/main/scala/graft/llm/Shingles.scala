@@ -3,18 +3,27 @@ package graft.llm
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Tokenization and n-gram shingling as pure column algebra — the shared
-  * front end of the dedup family (MinHash, SimHash, n-gram Jaccard,
-  * fingerprints). No UDFs: everything stays inside whole-stage codegen
-  * and scales with the row partitioning (each document is processed
-  * where it lives; the only shuffles downstream are the groupBy/join
-  * keys the individual operators choose).
+/** Tokenization and n-gram shingling — the shared front end of the
+  * dedup family (MinHash, SimHash, n-gram Jaccard, fingerprints) and of
+  * the curation stats. No UDFs: the tokens are the codegen'd
+  * [[graft.functions.Tokens]] over Spark's own `lower`, so a projection
+  * or filter over them stays inside whole-stage codegen, and everything
+  * scales with the row partitioning (each document is processed where
+  * it lives; the only shuffles downstream are the groupBy/join keys the
+  * individual operators choose).
   */
 object Shingles {
 
-  /** Lower-cased whitespace tokens, empties dropped. */
+  /** Lower-cased whitespace tokens, empties dropped: the maximal runs of
+    * characters other than the six Java-regex `\s` characters (space,
+    * `\t`, `\n`, `\x0B`, `\f`, `\r`); null for null text. Other
+    * Unicode spaces (`\u0085`, `\u00A0`, `\u2028`, ...) and the
+    * `\u001C`–`\u001F` separators are token characters. The value of
+    * `filter(split(lower(text), "\\s+"), t => t =!= "")`, with the
+    * same type (`ARRAY<STRING>`, no null elements) — pinned in
+    * TokenExpressionsSpec. */
   def tokens(text: Column): Column =
-    filter(split(lower(text), "\\s+"), t => t =!= "")
+    graft.functions.TextExpressions.tokensNative(lower(text))
 
   /** Space-joined token n-grams (the classic shingle set input).
     * Empty array when the document has fewer than n tokens. */

@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   * Two interchangeable hash functions:
   *
   *  - [[polyHash]] — a Java-style polynomial rolling hash mod a prime,
-  *    computed with codegen'd higher-order functions. Deterministic and
+  *    computed by the codegen'd [[graft.functions.PolyHash]] (its
+  *    composable fold form is `polyHashFold` in the test-side
+  *    `graft.llm.TextReference`). Deterministic and
   *    expressible in ANSI SQL, so every operator built on it can be
   *    oracle-checked bit-for-bit against DuckDB (see
   *    [[graft.queries.LlmQueries]]).
@@ -31,15 +33,6 @@ object TextHash {
     * ([[graft.functions.TextExpressions.polyHashNative]]). */
   def polyHash(c: Column): Column =
     graft.functions.TextExpressions.polyHashNative(c)
-
-  /** The equivalent higher-order-function form (CodegenFallback; kept
-    * as executable documentation and for cross-checking the native
-    * expression in LlmSpec). */
-  def polyHashFold(c: Column): Column =
-    aggregate(
-      transform(filter(split(c, ""), ch => ch =!= ""), ch => ascii(ch).cast("long")),
-      lit(0L),
-      (acc, x) => (acc * 31 + x) % Prime)
 
   /** Production hash: non-negative xxhash64 in the same domain. */
   def fastHash(c: Column): Column = pmod(xxhash64(c), lit(Prime))

@@ -10,6 +10,14 @@ import org.apache.spark.sql.functions._
   * at any scale; aggregates are integer-sum based (exact, order-free)
   * with a single final division to avoid float-accumulation
   * nondeterminism across partitions.
+  *
+  * The token counters are codegen'd expressions over the
+  * [[Shingles.tokens]] array: marker hits are
+  * [[graft.functions.MarkerHits]] and distinct counts
+  * [[graft.functions.DistinctCount]], each the value of its composable
+  * form (`size(filter(...))`, `size(array_distinct(...))`) without an
+  * interpreted lambda or an intermediate array. The DuckDB mirrors
+  * below mirror those composable forms.
   */
 object TextStats {
 
@@ -35,12 +43,18 @@ object TextStats {
   def bpeTokenCount(text: Column): Column =
     regexp_count(lower(text), lit(BpePattern))
 
-  def distinctTokenCount(text: Column): Column =
-    size(array_distinct(Shingles.tokens(text)))
+  /** Number of distinct tokens, `size(array_distinct(toks))`: a null
+    * element counts once. */
+  def distinctCountOfTokens(toks: Column): Column =
+    graft.functions.TextExpressions.distinctCountNative(toks)
 
-  /** Number of array elements exactly matching any word in `words`. */
+  def distinctTokenCount(text: Column): Column =
+    distinctCountOfTokens(Shingles.tokens(text))
+
+  /** Number of non-null array elements exactly matching any word in
+    * `words`, `size(filter(toks, t => t === w1 || ...))`. */
   def markerHitsOfTokens(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => words.map(w => t === w).reduce(_ || _)))
+    graft.functions.TextExpressions.markerHitsNative(toks, words)
 
   /** Number of tokens exactly matching any word in `words`. */
   def markerHits(text: Column, words: Seq[String]): Column =
@@ -69,7 +83,7 @@ object TextStats {
   def qualityScoreOfTokens(toks: Column): Column = {
     val n = size(toks).cast("double")
     val lenScore = least(n / 100.0, lit(1.0))
-    val diversity = size(array_distinct(toks)).cast("double") / n
+    val diversity = distinctCountOfTokens(toks).cast("double") / n
     val stopRatio = markerHitsOfTokens(toks, Stopwords).cast("double") / n
     lit(0.4) * lenScore + lit(0.4) * diversity + lit(0.2) * (lit(1.0) - stopRatio)
   }

@@ -533,7 +533,7 @@ object LlmQueries extends QueryModule {
           .select(
             col("doc_id"),
             size(col("__toks")).cast("long").as("n_tokens"),
-            size(array_distinct(col("__toks"))).cast("long").as("n_distinct"),
+            TextStats.distinctCountOfTokens(col("__toks")).cast("long").as("n_distinct"),
             TextStats.bpeTokenCount(col("text")).cast("long").as("n_bpe_tokens"),
             TextStats.langIdOfTokens(col("__toks")).as("lang_guess"),
             round(TextStats.qualityScoreOfTokens(col("__toks")), 6).as("quality")),

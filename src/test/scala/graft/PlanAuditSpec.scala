@@ -85,6 +85,19 @@ class PlanAuditSpec extends AnyFunSuite {
         scored.queryExecution.optimizedPlan)
   }
 
+  test("curation journey tokenises natively: no ArrayFilter and no ArrayDistinct in the plan") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, ArrayFilter}
+    val run = graft.api.CurationPipeline.run(Tables.documents(spark, sf))
+    val interpreted = run.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect {
+        case f: ArrayFilter => f
+        case d: ArrayDistinct => d
+      }))
+    assert(interpreted.size === 0,
+      s"${interpreted.size} interpreted token filters/distincts:\n" +
+        interpreted.map(_.prettyName).distinct.mkString(", "))
+  }
+
   test("tracking chain: load → keepers plans no Window and at most two exchanges") {
     import graft.tracking.Goalkeepers
     import org.apache.spark.sql.execution.SparkPlan

@@ -34,12 +34,12 @@ class LlmSpec extends AnyFunSuite {
   test("native polyHash is bit-identical to the HOF fold form") {
     val r = docs.select(
       TextHash.polyHash($"text").as("n"),
-      TextHash.polyHashFold($"text").as("f")).collect()
+      TextReference.polyHashFold($"text").as("f")).collect()
     assert(r.forall(x => x.getLong(0) === x.getLong(1)))
     val sql = docs.limit(1)
       .selectExpr("poly_hash('the quick brown fox')").head.getLong(0)
     assert(sql === docs.limit(1)
-      .select(TextHash.polyHashFold(lit("the quick brown fox"))).head.getLong(0))
+      .select(TextReference.polyHashFold(lit("the quick brown fox"))).head.getLong(0))
   }
 
   test("exact dedup clusters identical texts") {
