@@ -1,8 +1,13 @@
 package graft.football
 
+import graft.functions.{Group, GroupGenerator, GroupLocal}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, StructField}
 
 /** American-football node (G4, 20 cols) and edge (G5, 9 cols) feature
   * expressions, mirroring
@@ -120,36 +125,53 @@ object AfFeatures {
     "dir_sin", "dir_cos", "o_sin", "o_cos", "dgoal", "dball", "dend",
     "poss", "qb", "ball", "weight_n", "height_n")
 
-  /** Adds `node_idx` — the reference node order (same sort as soccer,
-    * `american_football/graphs/graph_converter.py:189-196`: ball last,
-    * possession team first, object id within group). */
-  def withNodeIndex(df: DataFrame): DataFrame = {
+  /** The reference node order (same sort as soccer,
+    * `american_football/graphs/graph_converter.py:189-196`): this rank
+    * ascending (possession team -1, others 0, ball 2), then object id. */
+  private def nodeRank: Column = {
     val isBall = col("team_id") === Football
     val owning = (col("ball_owning_team_id") === col("team_id")) && !isBall
-    val w = Window.partitionBy(frameKeys.map(col): _*)
-      .orderBy((isBall.cast("int") * 2 - owning.cast("int")).asc, col("id").asc)
+    isBall.cast("int") * 2 - owning.cast("int")
+  }
+
+  /** Adds `node_idx` — the frame's 0-based position in the reference
+    * node order ([[nodeRank]], then id). */
+  def withNodeIndex(df: DataFrame): DataFrame = {
+    val w = Window.partitionBy(frameKeys.map(col): _*).orderBy(nodeRank.asc, col("id").asc)
     df.withColumn("node_idx", row_number().over(w) - 1)
   }
 
   /** Nested per-play-frame AF node tensor: `x` (n×20, features rounded
     * to 6 decimals) + `object_ids`, in reference node order — the AF
     * counterpart of the soccer GraphConverter.graphFrames node side
-    * (AF never pads: `graph_converter.py` emits frames as-is). */
+    * (AF never pads: `graph_converter.py` emits frames as-is). A frame
+    * kernel on the group-local node ([[GroupLocal]]) reads the frame's
+    * rows in node order and emits them as one row. */
   def graphFrames(df: DataFrame): DataFrame = {
-    val nf = withNodeIndex(withNodeFeatures(df))
     val feats = array(NodeFeatureNames.map(n => round(col(n), 6)): _*)
-    // direct-to-tensor aggregation (graft.functions.OrderedTensorAgg):
-    // same output as array_sort(collect_list(struct)) + transform,
-    // without the interpreted HOF rebuild — node_idx is unique per
-    // frame, so the idx-only sort equals the full-struct sort
-    nf.select(frameKeys.map(col) ++ Seq(
-        col("node_idx"), col("id"), feats.as("__x")): _*)
-      .groupBy(frameKeys.map(col): _*)
-      .agg(graft.functions.OrderedTensorAgg.orderedNodes(col("node_idx"),
-        col("__x") -> "x", col("id") -> "object_ids").as("__nx"))
-      .select(frameKeys.map(col) ++ Seq(
-        col("__nx").getField("x").as("x"),
-        col("__nx").getField("object_ids").as("object_ids")): _*)
+    val nf = withNodeFeatures(df)
+      .select(frameKeys.map(col) ++ Seq(nodeRank.as("__rank"), col("id"), feats.as("__x")): _*)
+    GroupLocal(nf, frameKeys, Seq("__rank", "id"),
+      new NodeTensorKernel(nf.schema("id").dataType, nf.schema("__x").dataType))
+  }
+
+  /** One frame's rows, in node order → its `x` and `object_ids`. */
+  private final class NodeTensorKernel(idType: DataType, xType: DataType) extends GroupGenerator {
+    override def inputs: Seq[(String, DataType)] = Seq("id" -> idType, "__x" -> xType)
+    override def output: Seq[StructField] = Seq(
+      StructField("x", ArrayType(xType, containsNull = true)),
+      StructField("object_ids", ArrayType(idType, containsNull = true)))
+    override def run(g: Group): Iterator[InternalRow] = {
+      val x = new Array[Any](g.size)
+      val ids = new Array[Any](g.size)
+      var i = 0
+      while (i < g.size) {
+        ids(i) = g.get(i, 0)
+        x(i) = g.get(i, 1)
+        i += 1
+      }
+      Iterator.single(new GenericInternalRow(Array[Any](new GenericArrayData(x), new GenericArrayData(ids))))
+    }
   }
 
   /** Within-frame pair table with AF adjacency (split_by_team + ball

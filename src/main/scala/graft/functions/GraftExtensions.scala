@@ -30,7 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.size == 1, "poly_hash expects exactly 1 argument")
         PolyHash(children.head)
       }))
-    // the fixed-arity tensor aggregates (the analyzer wraps a bare
+    // the ordered vector sum aggregate (the analyzer wraps a bare
     // AggregateFunction returned from the registry in an
     // AggregateExpression itself)
     ext.injectFunction((
@@ -40,14 +40,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.size == 2,
           "ordered_vector_sum expects (idx, vec) — exactly 2 arguments")
         OrderedVectorSumAgg(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("adjacency_edges"),
-      new ExpressionInfo(classOf[AdjacencyEdgesAgg].getName, "adjacency_edges"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "adjacency_edges expects (i_idx, j_idx, a, e_features) — exactly 4 arguments")
-        AdjacencyEdgesAgg(children(0), children(1), children(2), children(3))
       }))
   }
 }

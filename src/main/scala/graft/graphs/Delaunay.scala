@@ -1,9 +1,12 @@
 package graft.graphs
 
+import graft.functions.{Group, GroupGenerator, GroupLocal}
 import graft.tracking.Cols
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Delaunay adjacency (G1's fifth matrix type) — implemented to the
   * reference's LEGACY numpy semantics (`soccer/graphs/features/
@@ -12,17 +15,16 @@ import org.apache.spark.sql.types._
   * reference): players are triangulated in 2D, every triangle edge
   * connects its endpoints symmetrically, players get NO self-loops,
   * NaN positions are excluded (edgeless), and the ball joins via the
-  * usual connect type composition in [[GraphConverter.pairs]].
+  * usual connect type composition ([[GraphKernel]], and
+  * [[GraphConverter.pairs]] for the pair table).
   *
   * The triangulation itself (Bowyer-Watson, O(n²) at n ≤ 22 per
-  * frame) is inherently per-group geometry — exactly the kind of
-  * non-relational kernel the engine reserves `flatMapGroups` for
-  * (same category as the Hungarian assignment): the shuffle key is
-  * the frame, per-frame work is constant-bounded by the squad size,
-  * so the operator scales horizontally like every other frame-keyed
-  * stage. Verified by the empty-circumcircle property test
-  * (DelaunaySpec) — the defining invariant of the triangulation —
-  * plus exact small-configuration goldens.
+  * frame) is per-frame geometry, so it runs as a frame kernel on the
+  * group-local node ([[graft.functions.GroupLocal]]): the shuffle key
+  * is the frame and per-frame work is bounded by the squad size.
+  * Verified by the empty-circumcircle property test (DelaunaySpec) —
+  * the defining invariant of the triangulation — plus exact
+  * small-configuration goldens.
   */
 object Delaunay {
 
@@ -89,29 +91,56 @@ object Delaunay {
       .toSet
   }
 
+  /** One frame's player-player edges as (i_id, j_id), both directions.
+    * `rows` are the frame's (id, team_id, x, y): ball rows (a team
+    * that is null or the ball) and rows with a null x or y are left
+    * out, as [[triangulate]] leaves out NaN. The players are
+    * triangulated sorted by id (UTF-8 binary order, nulls first), then
+    * x and y, so the edges do not depend on the order the rows arrive
+    * in: of two players on one point the first id takes the edges, and
+    * four cocircular players get the same diagonal every time. Both
+    * [[edges]] and the graph frame kernel ([[GraphKernel]]) call it. */
+  private[graphs] def frameEdges(
+      rows: Seq[(UTF8String, UTF8String, java.lang.Double, java.lang.Double)])
+      : Set[(UTF8String, UTF8String)] = {
+    val players = rows.filter { case (_, team, x, y) =>
+      team != null && !team.equals(BallS) && x != null && y != null
+    }.sortWith { case ((ia, _, xa, ya), (ib, _, xb, yb)) =>
+      val byId =
+        if (ia == null) (if (ib == null) 0 else -1)
+        else if (ib == null) 1
+        else ia.compareTo(ib)
+      val c = if (byId != 0) byId else java.lang.Double.compare(xa, xb)
+      (if (c != 0) c else java.lang.Double.compare(ya, yb)) < 0
+    }.toIndexedSeq
+    triangulate(players.map(p => (p._3.doubleValue, p._4.doubleValue))).flatMap { case (i, j) =>
+      val (a, b) = (players(i)._1, players(j)._1)
+      Seq(a -> b, b -> a)
+    }
+  }
+
+  private val BallS = UTF8String.fromString(Cols.Ball)
+
   /** Per-frame player-player Delaunay edge table:
-    * `(game_id, period_id, frame_id, i_id, j_id)`, BOTH directions.
-    * Input: the canonical long table (ball rows are skipped — the
-    * reference triangulates players only). */
+    * `(game_id, period_id, frame_id, i_id, j_id)`, BOTH directions,
+    * one row per id pair ([[frameEdges]] on the group-local node).
+    * Input: the canonical long table. */
   def edges(df: DataFrame): DataFrame = {
     import Cols._
-    val spark = df.sparkSession
-    import spark.implicits._
-    val players = df
-      .filter(col(TeamId) =!= Ball && col(X).isNotNull && col(Y).isNotNull)
-      .select(col(GameId), col(PeriodId).cast(IntegerType),
-        col(FrameId).cast(LongType), col(ObjectId), col(X), col(Y))
-      .as[(String, Int, Long, String, Double, Double)]
-    players
-      .groupByKey(r => (r._1, r._2, r._3))
-      .flatMapGroups { (key: (String, Int, Long), it: Iterator[(String, Int, Long, String, Double, Double)]) =>
-        val rows = it.toIndexedSeq
-        val edgeSet = triangulate(rows.map(r => (r._5, r._6)))
-        edgeSet.iterator.flatMap { case (i, j) =>
-          val a = rows(i)._4; val b = rows(j)._4
-          Iterator((key._1, key._2, key._3, a, b), (key._1, key._2, key._3, b, a))
-        }.toSeq
-      }
-      .toDF(GameId, PeriodId, FrameId, "i_id", "j_id")
+    GroupLocal(df, Seq(GameId, PeriodId, FrameId), Nil, new EdgesKernel)
+  }
+
+  /** [[frameEdges]] of each frame, one row per edge. */
+  private final class EdgesKernel extends GroupGenerator {
+    import Cols._
+    override def inputs: Seq[(String, DataType)] =
+      Seq(ObjectId -> StringType, TeamId -> StringType, X -> DoubleType, Y -> DoubleType)
+    override def output: Seq[StructField] =
+      Seq(StructField("i_id", StringType), StructField("j_id", StringType))
+    override def run(g: Group): Iterator[InternalRow] = {
+      def num(i: Int, in: Int) = if (g.isNull(i, in)) null else java.lang.Double.valueOf(g.double(i, in))
+      frameEdges((0 until g.size).map(i => (g.string(i, 0), g.string(i, 1), num(i, 2), num(i, 3))))
+        .iterator.map { case (a, b) => new GenericInternalRow(Array[Any](a, b)) }
+    }
   }
 }

@@ -9,27 +9,20 @@ import org.apache.spark.sql.functions._
 /** Frame → graph tensors (G1-G10), Spark-first.
   *
   * Reference: `unravel/soccer/graphs/graph_converter.py` runs a NumPy
-  * callback per frame (`map_groups`). Here the default path is the same
-  * per-frame program: [[GraphKernel]] on the group-local node
-  * ([[graft.functions.GroupLocal]]) pads, orders, featurizes and
-  * connects one frame in compiled Scala, keyed by the frame.
+  * callback per frame (`map_groups`). Here the assembly is the same
+  * per-frame program, for every adjacency type: [[GraphKernel]] on the
+  * group-local node ([[graft.functions.GroupLocal]]) pads, orders,
+  * featurizes and connects one frame in compiled Scala, keyed by the
+  * frame. [[graphFrames]] plans it over the input, and
+  * [[graphFramesBucketed]] over a frame-key-bucketed copy of it.
   *
-  * The staged relational form serves the Delaunay adjacency and the
-  * bucketed 100 TB path ([[graphFramesBucketed]]):
-  *  - node features are row-local `Column`s (Features.scala) with the
-  *    per-frame ball position supplied by a window aggregate (no join);
-  *  - the adjacency predicate and edge features live on a within-frame
-  *    pair self-join;
-  *  - matrices are assembled by direct-to-tensor
-  *    `TypedImperativeAggregate`s ([[graft.functions.OrderedTensorAgg]];
-  *    the generic `collect_list` + `array_sort` + `transform` shape
-  *    they replaced is the test-side reference
-  *    `GraphAssemblyReference`), keyed by an explicit node index
-  *    that replicates the reference's sort
-  *    (`graph_converter.py:214-222`): possession players, then
-  *    defenders, then ball, each by object id;
-  *  - padding (G8) regenerates missing rows relationally — the
-  *    reference's driver-side `iter_rows` loop disappears.
+  * The relational building blocks stay for queries that read them
+  * directly: node features are row-local `Column`s (Features.scala) with
+  * the per-frame ball position from a window aggregate, [[pairs]] is the
+  * within-frame pair table with the adjacency value and edge features,
+  * and [[withNodeIndex]] replicates the reference's node sort
+  * (`graph_converter.py:214-222`): possession players, then defenders,
+  * then ball, each by object id.
   */
 object GraphConverter {
   import Cols._
@@ -62,76 +55,6 @@ object GraphConverter {
     df.withColumn("__nteams", size(collect_set(col(TeamId)).over(wFrame)))
       .filter(col("__nteams") === 3)
       .drop("__nteams")
-
-  /** G8: pad every frame to 11 players per team + 1 ball, then keep only
-    * frames that reach exactly 11/11/1 (`graph_converter.py:240-440`).
-    * Padding rows are regenerated relationally with the reference's
-    * dtype defaults (`utils/utils.py:81-95`): "" for strings, 0 for
-    * numerics, false for booleans. */
-  def padFrames(
-      df: DataFrame,
-      labelCol: String = Label,
-      graphIdCol: String = GraphId): DataFrame = {
-    val keepCols = Seq(Timestamp, BallState, labelCol, graphIdCol).filter(df.columns.contains)
-    val groupCols = frameKeys ++ Seq(TeamId, BallOwningTeamId)
-
-    // ONE aggregate drives all padding decisions: per-(frame, team)
-    // deficits AND ball-less frames both come out of `counts`, so the
-    // input is scanned once here instead of three times (the previous
-    // two dropDuplicates + anti-join re-scanned the full input just to
-    // find frames with no ball row)
-    val counts = df.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__cnt"),
-        keepCols.map(c => first(col(c)).as(c)): _*)
-      .withColumn("__target", when(col(TeamId) === Ball, 1).otherwise(11))
-      .withColumn("__repeats", col("__target") - col("__cnt"))
-
-    val playerPad = counts.filter(col("__repeats") > 0)
-      .withColumn("__seq", explode(sequence(lit(1), col("__repeats").cast("int"))))
-      .drop("__cnt", "__target", "__repeats", "__seq")
-
-    // frames with no ball row at all get one synthetic ball row
-    val ballPad = counts
-      .groupBy(frameKeys.map(col): _*)
-      .agg(
-        (max((col(TeamId) === Ball).cast("int")) === 1).as("__hasBall"),
-        (Seq(first(col(BallOwningTeamId)).as(BallOwningTeamId)) ++
-          keepCols.map(c => first(col(c)).as(c))): _*)
-      .filter(!col("__hasBall"))
-      .drop("__hasBall")
-      .withColumn(TeamId, lit(Ball))
-
-    val pads = playerPad.unionByName(ballPad, allowMissingColumns = true)
-
-    // fill remaining columns with dtype defaults
-    val defaults: Map[String, Column] = df.schema.fields.map { f =>
-      f.name -> (f.dataType.typeName match {
-        case "boolean" => lit(false)
-        case "double" | "float" => lit(0.0).cast(f.dataType)
-        case "integer" | "long" => lit(0).cast(f.dataType)
-        case "string" => lit("")
-        case _ => lit(null).cast(f.dataType)
-      })
-    }.toMap
-    val positioned = pads.withColumn(PositionName,
-      when(col(TeamId) === Ball, lit(Ball)).otherwise(lit("")))
-    val completed = df.columns.foldLeft(positioned) { (d, c) =>
-      if (d.columns.contains(c)) d else d.withColumn(c, defaults(c))
-    }.select(df.columns.map(col): _*)
-
-    val padded = df.unionByName(completed)
-
-    // completeness: exactly 1 ball, 11 owning, 11 defending
-    val isBall = col(TeamId) === Ball
-    val isOwning = col(TeamId) === col(BallOwningTeamId)
-    padded
-      .select(col("*"),
-        sum(isBall.cast("int")).over(wFrame).as("__nb"),
-        sum(isOwning.cast("int")).over(wFrame).as("__no"),
-        sum((!isBall && !isOwning).cast("int")).over(wFrame).as("__nd"))
-      .filter(col("__nb") === 1 && col("__no") === 11 && col("__nd") === 11)
-      .drop("__nb", "__no", "__nd")
-  }
 
   /** O5 frame sampling (`graph_converter.py:206-212`). */
   def sample(df: DataFrame, rate: Double): DataFrame =
@@ -220,8 +143,7 @@ object GraphConverter {
     // frame-key exchange below the self-join: both pair sides then
     // reuse ONE execution of the upstream+window stage instead of
     // re-running it per side (stage reuse needs an exchange boundary —
-    // the PressingIntensity pattern). A pre-indexed input (the bucketed
-    // graphFrames path) skips it, keeping that plan zero-exchange.
+    // the PressingIntensity pattern). A pre-indexed input skips it.
     val indexed =
       if (df.columns.contains("node_idx")) withNodeIndex(df)
       else withNodeIndex(df).repartition(frameKeys.map(col): _*)
@@ -232,8 +154,7 @@ object GraphConverter {
     val p0 = sided("i").join(sided("j"), frameKeys)
     // Delaunay needs the per-frame edge table (a geometric, not
     // pairwise-predicate, relation): left-join it onto the dense pair
-    // table so absent pairs keep a=0 for the matrix assembly. One
-    // extra (frame, i, j)-keyed shuffle, edge table is ~3 rows per
+    // table so absent pairs keep a=0. The edge table is ~3 rows per
     // player per frame.
     val p = if (settings.adjacencyMatrixType == GraphSettings.Delaunay)
       p0.join(
@@ -283,51 +204,21 @@ object GraphConverter {
       df: DataFrame,
       settings: GraphSettings,
       labelCol: String = Label,
-      graphIdCol: String = GraphId): DataFrame = {
+      graphIdCol: String = GraphId): DataFrame =
     // The whole conversion — padding, completeness, node order, node
     // features, adjacency, edge features — is frame-local, so one frame
-    // kernel does it ([[GraphKernel]]), with no cache, no self-join and
-    // at most the one exchange that clusters the input by frame. The
-    // staged path below serves Delaunay (needs the per-frame geometric
-    // edge table).
-    if (settings.adjacencyMatrixType != GraphSettings.Delaunay) {
-      val labels = Seq(labelCol, graphIdCol).filter(df.columns.contains)
-      // a row with a null frame key belongs to no frame, as in the
-      // staged assembly's frame-key join
-      return GroupLocal(df.filter(frameKeys.map(col(_).isNotNull).reduce(_ && _)), frameKeys, Nil,
-        GraphKernel(settings, labels.map(c => c -> df.schema(c).dataType)))
-    }
-    // Both persists are load-bearing at scale: padFrames reads its
-    // input 4× (counts, frame list, ball check, union) and the
-    // node/pair aggregations each scan `prepared` — without caching,
-    // the upstream kinematics/possession lineage re-executes ~6× and
-    // the source is scanned 6× instead of once. When the prepared set
-    // outgrows cluster memory+disk cache, use [[graphFramesBucketed]]:
-    // the same pipeline with the cache swapped for a frame-key-bucketed
-    // parquet materialization (zero-exchange downstream).
-    val input = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // index once here: node/pair aggregation both need node_idx, and
-    // withNodeIndex is idempotent, so caching the indexed set removes a
-    // second full window pass over every frame row
-    val prepared = withNodeIndex(
-      if (settings.pad) padFrames(input, labelCol, graphIdCol)
-      else removeIncompleteFrames(input))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assembleGraphFrames(prepared, settings, labelCol, graphIdCol)
-  }
+    // kernel does it, with no cache, no self-join and at most the one
+    // exchange that clusters the input by frame.
+    assemble(framed(df), settings, labelCol, graphIdCol)
 
-  /** The 100 TB variant of [[graphFrames]]: instead of double-caching,
-    * the prepared (padded + node-indexed) set is written ONCE as a
-    * parquet table bucketed AND bucket-sorted by the frame key, and
-    * the node aggregation, the pair self-join, the pair aggregation
-    * and the final node⋈pair join all run from the bucketed scan —
-    * every one of those operators needs exactly the frame-key
-    * clustering the buckets already provide, so the assembled plan has
-    * ZERO exchanges and the upstream lineage (source scan, kinematics,
-    * possession, padding) executes exactly once, with spill-to-disk
-    * pressure replaced by a durable, restart-safe table
-    * ([[graft.core.BucketedStore]]). Pick `numBuckets` ≈ the cluster's
-    * target parallelism for the prepared set's size. */
+  /** [[graphFrames]] over a durable copy of the input: the rows are
+    * written ONCE as a parquet table bucketed and bucket-sorted by the
+    * frame key ([[graft.core.BucketedStore]]), and the frame kernel runs
+    * over the bucketed scan. The buckets already cluster the rows by
+    * frame, so the plan has ZERO exchanges, and the upstream lineage
+    * (source scan, kinematics, possession) executes once, into a
+    * restart-safe table rather than a cache. Pick `numBuckets` ≈ the
+    * cluster's target parallelism for the input's size. */
   def graphFramesBucketed(
       spark: org.apache.spark.sql.SparkSession,
       df: DataFrame,
@@ -337,60 +228,22 @@ object GraphConverter {
       numBuckets: Int = 32,
       labelCol: String = Label,
       graphIdCol: String = GraphId): DataFrame = {
-    // padFrames still reads its input 4× before materialization — keep
-    // the transient cache for exactly that window, then drop it.
-    val input = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val prepared = withNodeIndex(
-      if (settings.pad) padFrames(input, labelCol, graphIdCol)
-      else removeIncompleteFrames(input))
-    graft.core.BucketedStore.write(prepared, table, path,
+    graft.core.BucketedStore.write(framed(df), table, path,
       frameKeys, numBuckets, sortCols = frameKeys)
-    input.unpersist()
-    assembleGraphFrames(graft.core.BucketedStore.read(spark, table),
-      settings, labelCol, graphIdCol)
+    assemble(graft.core.BucketedStore.read(spark, table), settings, labelCol, graphIdCol)
   }
 
-  /** The node half of the assembly: features + the ordered tensor
-    * aggregate → one row per frame with `x` / `object_ids` (plus the
-    * label/graph-id passthrough columns). The direct-to-tensor
-    * [[graft.functions.OrderedTensorAgg]] is bit-identical to the
-    * generic collect_list + array_sort + transform rebuild it replaced
-    * (q_graph_frames oracle hash; `GraphConverterSpec` against
-    * `GraphAssemblyReference`). */
-  private def nodeTensor(
-      prepared: DataFrame,
+  /** The rows that belong to a frame: a null frame key belongs to none. */
+  private def framed(df: DataFrame): DataFrame =
+    df.filter(frameKeys.map(col(_).isNotNull).reduce(_ && _))
+
+  private def assemble(
+      df: DataFrame,
       settings: GraphSettings,
       labelCol: String,
       graphIdCol: String): DataFrame = {
-    val optCols = Seq(labelCol, graphIdCol, BallOwningTeamId).filter(prepared.columns.contains)
-    withNodeFeatures(prepared, settings)
-      .groupBy(frameKeys.map(col): _*)
-      .agg(
-        graft.functions.OrderedTensorAgg.orderedNodes(col("node_idx"),
-          col("x_features") -> "x", col(ObjectId) -> "object_ids").as("__nx"),
-        optCols.map(c => first(col(c)).as(c)): _*)
-      .withColumn("x", col("__nx").getField("x"))
-      .withColumn("object_ids", col("__nx").getField("object_ids"))
-      .drop("__nx")
+    val labels = Seq(labelCol, graphIdCol).filter(df.columns.contains)
+    GroupLocal(df, frameKeys, Nil,
+      GraphKernel(settings, labels.map(c => c -> df.schema(c).dataType)))
   }
-
-  /** The pair half of the assembly: the per-frame pair fan-out + the
-    * adjacency/edge tensor aggregate → one row per frame with `a` /
-    * `e`. */
-  private def pairTensor(prepared: DataFrame, settings: GraphSettings): DataFrame =
-    pairs(prepared, settings)
-      .groupBy(frameKeys.map(col): _*)
-      .agg(graft.functions.OrderedTensorAgg.adjacencyEdges(
-        col("i_node_idx"), col("j_node_idx"), col("a"), col("e_features")).as("__ae"))
-      .withColumn("a", col("__ae").getField("a"))
-      .withColumn("e", col("__ae").getField("e"))
-      .drop("__ae")
-
-  private[graft] def assembleGraphFrames(
-      prepared: DataFrame,
-      settings: GraphSettings,
-      labelCol: String,
-      graphIdCol: String): DataFrame =
-    nodeTensor(prepared, settings, labelCol, graphIdCol)
-      .join(pairTensor(prepared, settings), frameKeys)
 }

@@ -15,19 +15,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * pass of compiled Scala on the group-local node
   * ([[graft.functions.GroupLocal]]). It emits one row per complete frame
   * (the label columns, ball_owning_team_id, x, object_ids, a, e) and
-  * nothing for a frame the padding or completeness rules drop.
+  * nothing for a frame the padding or completeness rules drop. It is
+  * the only graph assembly, for every adjacency type.
   *
-  * Faithfulness: the kernel transcribes the padFrames/withNodeIndex/
-  * Features/pairs column expressions of the staged assembly
-  * operation-for-operation, including Catalyst's exact null/NaN
-  * semantics (`Greatest`/`Least` skip nulls and order NaN greatest,
-  * `atan2` adds +0.0 to both args, three-valued boolean logic in the
-  * adjacency predicate, `nanvl` null passthrough, UTF8String binary
-  * ordering in the node sort). Output is bit-identical to the staged
-  * path — pinned by the `q_graph_frames` / `q_graph_frames_edges` oracle
-  * hashes and by the graph specs, which compare it with the staged path
-  * (both adjacency connect modes, pad on/off, null/NaN corners) and with
-  * the test-side `GraphAssemblyReference`.
+  * Faithfulness: the kernel transcribes the column expressions of the
+  * relational form (`withNodeIndex`, `Features`, `pairs`, and the padding
+  * of the test-side `GraphAssemblyReference`) operation-for-operation,
+  * including Catalyst's exact null/NaN semantics (`Greatest`/`Least` skip
+  * nulls and order NaN greatest, `atan2` adds +0.0 to both args,
+  * three-valued boolean logic in the adjacency predicate, `nanvl` null
+  * passthrough, UTF8String binary ordering in the node sort). The
+  * `q_graph_frames` / `q_graph_frames_edges` oracle hashes pin it, and
+  * the graph specs compare it with `GraphAssemblyReference` (every
+  * adjacency type, both connect modes, pad on/off, null/NaN corners).
   *
   * Per-frame columns are defined reductions, so the result does not
   * depend on row order:
@@ -35,17 +35,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *    value per frame, which the frame carries; two raise the reference's
   *    G10 "graph integrity violation" (`graph_converter.py:610-623`);
   *  - ball_owning_team_id is the minimum non-null value (UTF8String
-  *    binary order), also the synthetic ball row's owning team.
+  *    binary order), also the synthetic ball row's owning team;
+  *  - the Delaunay adjacency triangulates the padded frame's players in
+  *    id order ([[Delaunay.frameEdges]]).
   *
-  * Not supported (the staged path serves them): the Delaunay adjacency
-  * type (needs the per-frame geometric edge table) and custom feature
-  * plugins. */
+  * Not supported: custom feature plugins (`Features.NodeFeature` /
+  * `EdgeFeature` lists), which only the relational `withNodeFeatures`
+  * and `pairs` take. */
 private[graphs] final case class GraphKernel(
     settings: GraphSettings,
     labels: Seq[(String, DataType)]) extends GroupGenerator {
   import Cols._
   import GraphSettings._
-  require(settings.adjacencyMatrixType != Delaunay, "delaunay needs the staged geometric path")
 
   override def inputs: Seq[(String, DataType)] =
     Seq(ObjectId -> StringType, TeamId -> StringType, PositionName -> StringType) ++
@@ -149,6 +150,8 @@ private[graphs] final case class GraphKernel(
   // three-valued boolean algebra (java.lang.Boolean, null = unknown)
   private def tEq(a: UTF8String, b: UTF8String): java.lang.Boolean =
     if (a == null || b == null) null else java.lang.Boolean.valueOf(a.equals(b))
+  private def tEqB(a: java.lang.Boolean, b: java.lang.Boolean): java.lang.Boolean =
+    if (a == null || b == null) null else java.lang.Boolean.valueOf(a.booleanValue() == b.booleanValue())
   private def tNot(a: java.lang.Boolean): java.lang.Boolean =
     if (a == null) null else java.lang.Boolean.valueOf(!a.booleanValue())
   private def tAnd(a: java.lang.Boolean, b: java.lang.Boolean): java.lang.Boolean =
@@ -182,7 +185,7 @@ private[graphs] final case class GraphKernel(
     while (b < g.size) { nodes += readNd(g, b); b += 1 }
 
     if (pad) {
-      // padFrames: per-(team, owning) deficits against the 11/11/1
+      // G8 padding: per-(team, owning) deficits against the 11/11/1
       // targets, dtype-default pad rows, synthetic ball row for
       // ball-less frames, then the 1/11/11 completeness filter.
       val groups = new ArrayBuffer[(UTF8String, UTF8String, Int)]()
@@ -336,6 +339,12 @@ private[graphs] final case class GraphKernel(
     }
 
     // ------------------------------------- adjacency + edge features
+    // Delaunay: the id pairs of the triangulated players; a pair of
+    // nodes is an edge when both ids are non-null and the pair is in
+    // the set (the pair table's equi-join on ids)
+    val delaunayEdges: Set[(UTF8String, UTF8String)] =
+      if (adjacencyType != Delaunay) Set.empty
+      else graft.graphs.Delaunay.frameEdges(arr.toSeq.map(nd => (nd.id, nd.team, nd.x, nd.y)))
     val aOut = new Array[Any](n)
     val eOut = new ArrayBuffer[Any](n * 4)
     i = 0
@@ -355,10 +364,15 @@ private[graphs] final case class GraphKernel(
             tAnd(tNot(iBall), tNot(tEq(ni.team, ni.owning))),
             tAnd(tNot(jBall), tNot(tEq(nj.team, ni.owning))))
           case SplitByTeam => tEq(ni.team, nj.team)
+          case Delaunay => java.lang.Boolean.valueOf(
+            ni.id != null && nj.id != null && delaunayEdges.contains((ni.id, nj.id)))
           case other => throw new NotImplementedError(
             s"$other matrix not implemented for Soccer...")
         }
         val conn: java.lang.Boolean = connectType match {
+          // Delaunay keeps the ball self-loop off (adjacency_matrix.py:
+          // 104-124): the ball connects to every player, not to itself
+          case ConnectBall if adjacencyType == Delaunay => tOr(base, tNot(tEqB(iBall, jBall)))
           case ConnectBall => tOr(tOr(base, iBall), jBall)
           case ConnectBallCarrier => tOr(base,
             tOr(tAnd(ni.carrier, jBall), tAnd(iBall, nj.carrier)))

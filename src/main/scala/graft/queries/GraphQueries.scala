@@ -49,7 +49,7 @@ object GraphQueries extends QueryModule {
        |$extra
        |$select""".stripMargin
 
-  /** SQL mirror of GraphConverter.padFrames: per-(frame, team) deficit
+  /** SQL mirror of the graph kernel's padding: per-(frame, team) deficit
     * rows with dtype defaults, then the 11/11/1 completeness filter and
     * the node ordering — ends in a CTE named `gidx` so the feature CTEs
     * below apply unchanged to the padded set. */
@@ -189,8 +189,7 @@ object GraphQueries extends QueryModule {
   private def pipeline(s: org.apache.spark.sql.SparkSession, d: String) = {
     val trk = SyntheticTracking.df(s, d, Cols.ByObjectPeriod)
     val kin = Kinematics(trk, TrackingSettings(), None, None)
-    // graph features never read acceleration — dropping the 4 columns
-    // keeps them out of the graphFrames persists
+    // graph features never read acceleration: drop its 4 columns
     val dat = Possession.inferBallCarrier(kin, TrackingSettings())
       .drop(Ax, Ay, Az, Acceleration)
     GraphConverter.removeIncompleteFrames(dat)
@@ -436,8 +435,8 @@ object GraphQueries extends QueryModule {
            |FROM ($edgeFeatureSelect)""".stripMargin))),
 
     // ----- G8 + full nested assembly, oracle-checked via explode -----
-    // Runs the real padded nested pipeline (padFrames + node features +
-    // collect_list/array_sort assembly), then explodes the nested `x`
+    // Runs the real padded nested pipeline (the graph frame kernel:
+    // padding, node order, node features), then explodes the nested `x`
     // tensor back to (node_idx, feature_idx, value) rows. Wrong padding
     // rows, node order, or matrix layout ⇒ wrong (node_idx, value)
     // pairs ⇒ hash mismatch. The oracle regenerates the padding
@@ -683,15 +682,13 @@ object GraphQueries extends QueryModule {
            |FROM ($edgeFeatureSelect)
            |CROSS JOIN (SELECT unnest(generate_series(1, 6)) AS k)""".stripMargin))))
 
-  /** Kinematics + possession, unfiltered (padFrames does the frame
-    * completion itself). Public: [[graft.tools.BucketedSoak]] times the
-    * two graphFrames materialization strategies over this exact input. */
-  def paddedInput(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
+  /** Kinematics + possession, unfiltered (the graph kernel's padding
+    * does the frame completion itself). */
+  private def paddedInput(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val trk = SyntheticTracking.df(s, d, Cols.ByObjectPeriod)
     val kin = Kinematics(trk, TrackingSettings(), None, None)
     // accel is unused by features (see pipeline()); ball_state and
-    // timestamp are pure passthrough the nested output never emits —
-    // dropping all six narrows both graphFrames persists
+    // timestamp are pure passthrough the nested output never emits
     Possession.inferBallCarrier(kin, TrackingSettings())
       .drop(Ax, Ay, Az, Acceleration, BallState, Timestamp)
   }

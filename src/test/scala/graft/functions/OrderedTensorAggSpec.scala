@@ -4,70 +4,14 @@ import graft.SparkTestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bit-parity of the direct-to-tensor aggregates against the generic
-  * expression shapes they replaced — on randomized frames, not just
-  * the oracle fixtures. Every comparison is exact (===): the
-  * aggregates claim identical output, not approximate. */
+/** Bit-parity of the ordered vector sum aggregate and the PI matrix
+  * kernel against the generic expression shapes they replaced — on
+  * randomized groups, not just the oracle fixtures. Every comparison is
+  * exact (===): they claim identical output, not approximate. */
 class OrderedTensorAggSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private val rng = new scala.util.Random(421L)
-
-  // random node rows: (frame, idx 0..n-1 shuffled, feature vec, oid)
-  private def nodeRows(frames: Int): Seq[(Long, Int, Seq[Double], String)] =
-    (0 until frames).flatMap { f =>
-      val n = 2 + rng.nextInt(6)
-      rng.shuffle((0 until n).toList).map { i =>
-        (f.toLong, i, Seq.fill(4)(math.rint(rng.nextDouble() * 1e6) / 1e3), s"o$i")
-      }
-    }
-
-  test("orderedNodes == array_sort(collect_list(struct)) + transforms") {
-    import spark.implicits._
-    val df = nodeRows(20).toDF("f", "idx", "feat", "oid")
-    val native = df.groupBy(col("f"))
-      .agg(OrderedTensorAgg.orderedNodes(col("idx"),
-        col("feat") -> "x", col("oid") -> "object_ids").as("nx"))
-      .select(col("f"), col("nx.x").as("x"), col("nx.object_ids").as("object_ids"))
-    val generic = df.groupBy(col("f"))
-      .agg(array_sort(collect_list(struct(col("idx"), col("feat"), col("oid")))).as("ns"))
-      .select(col("f"),
-        transform(col("ns"), _.getField("feat")).as("x"),
-        transform(col("ns"), _.getField("oid")).as("object_ids"))
-    val a = native.orderBy("f").collect().map(_.toString).toSeq
-    val b = generic.orderBy("f").collect().map(_.toString).toSeq
-    assert(a === b)
-  }
-
-  test("adjacencyEdges == generic a-matrix reshape + filtered e-cells") {
-    import spark.implicits._
-    // dense pair grids with a mix of a=0/1 and some null e rows
-    val rows = (0 until 12).flatMap { f =>
-      val n = 2 + rng.nextInt(4)
-      for (i <- 0 until n; j <- 0 until n) yield {
-        val a = if (rng.nextBoolean()) 1 else 0
-        (f.toLong, i, j, a, Seq.fill(3)(math.rint(rng.nextDouble() * 1e6) / 1e3))
-      }
-    }
-    val df = rng.shuffle(rows).toDF("f", "i", "j", "a", "e")
-    val native = df.groupBy(col("f"))
-      .agg(OrderedTensorAgg.adjacencyEdges(col("i"), col("j"), col("a"), col("e")).as("ae"))
-      .select(col("f"), col("ae.a").as("a"), col("ae.e").as("e"))
-    val generic = df.groupBy(col("f"))
-      .agg(
-        array_sort(collect_list(struct(col("i"), col("j"), col("a")))).as("ac"),
-        array_sort(collect_list(when(col("a") === 1,
-          struct(col("i"), col("j"), col("e"))))).as("ec"))
-      .withColumn("n", size(array_distinct(transform(col("ac"), _.getField("j")))))
-      .select(col("f"),
-        transform(sequence(lit(0), col("n") - 1), i =>
-          transform(sequence(lit(0), col("n") - 1), j =>
-            element_at(col("ac"), (i * col("n") + j + 1).cast("int")).getField("a"))).as("a"),
-        transform(col("ec"), _.getField("e")).as("e"))
-    val a = native.orderBy("f").collect().map(_.toString).toSeq
-    val b = generic.orderBy("f").collect().map(_.toString).toSeq
-    assert(a === b)
-  }
 
   test("gridMatrices == generic rectangular reshape with labels") {
     import spark.implicits._
@@ -136,14 +80,6 @@ class OrderedTensorAggSpec extends AnyFunSuite {
     val s = spark.sql("SELECT ordered_vector_sum(i, v) AS s FROM ovs_sql GROUP BY g")
       .head.getSeq[Double](0)
     assert(s === Seq(4.0, 6.0))
-    Seq((1L, 0, 0, 1, Seq(9.0)), (1L, 0, 1, 0, Seq(8.0)),
-      (1L, 1, 0, 0, Seq(7.0)), (1L, 1, 1, 1, Seq(6.0)))
-      .toDF("g", "i", "j", "a", "e").createOrReplaceTempView("ae_sql")
-    val r = spark.sql(
-      "SELECT adjacency_edges(i, j, a, e) AS ae FROM ae_sql GROUP BY g").head
-    val ae = r.getStruct(0)
-    assert(ae.getSeq[Seq[Int]](0) === Seq(Seq(1, 0), Seq(0, 1)))
-    assert(ae.getSeq[Seq[Double]](1) === Seq(Seq(9.0), Seq(6.0)))
   }
 
   test("orderedVectorSum: a null vector nulls the group (zip_with semantics)") {

@@ -125,4 +125,38 @@ class DelaunaySpec extends AnyFunSuite {
     }
     pairs.unpersist()
   }
+
+  test("edges and graphs do not depend on row order: a shared point, four cocircular players") {
+    import spark.implicits._
+    // h1..h4 are the corners of a square, so either diagonal is a valid
+    // triangulation; a1 and a2 stand on one point, so only one of them
+    // can take its edges. The input order below would give diagonal
+    // h1-h4 and the edges to a1; reversed, h2-h3 and a2.
+    val players = Seq(("h1", "home", 0.0, 0.0), ("h4", "home", 10.0, 10.0),
+      ("h2", "home", 10.0, 0.0), ("h3", "home", 0.0, 10.0),
+      ("a1", "away", 5.0, 25.0), ("a2", "away", 5.0, 25.0), ("a3", "away", -12.0, 5.0),
+      ("ball", "ball", 5.0, 5.0))
+    def frame(rows: Seq[(String, String, Double, Double)]) =
+      rows.toDF("id", "team_id", "x", "y")
+        .withColumn("game_id", lit("g")).withColumn("period_id", lit(1))
+        .withColumn("frame_id", lit(1L)).withColumn("z", lit(0.0))
+        .withColumn("vx", lit(0.0)).withColumn("vy", lit(0.0)).withColumn("vz", lit(0.0))
+        .withColumn("v", lit(0.0)).withColumn("position_name", lit(null).cast("string"))
+        .withColumn("ball_owning_team_id", lit("home"))
+        .withColumn("is_ball_carrier", col("id") === "h1")
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val settings = GraphSettings(pad = false, adjacencyMatrixType = GraphSettings.Delaunay)
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val outcomes = try Seq("1", "7").flatMap { n =>
+      spark.conf.set("spark.sql.shuffle.partitions", n)
+      Seq(players, players.reverse).map { rows =>
+        (sorted(Delaunay.edges(frame(rows))), sorted(GraphConverter.graphFrames(frame(rows), settings)))
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert(outcomes.distinct.size === 1, outcomes.mkString("\n"))
+    // the rule: players triangulated in id order
+    val edges = outcomes.head._1
+    assert(edges.exists(_.contains("a1")) && !edges.exists(_.contains("a2")), edges)
+    assert(edges.contains("[g,1,1,h2,h3]") && !edges.contains("[g,1,1,h1,h4]"), edges)
+  }
 }

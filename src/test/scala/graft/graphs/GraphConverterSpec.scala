@@ -158,35 +158,43 @@ class GraphConverterSpec extends AnyFunSuite {
     assert(e.getMessage.contains("integrity"))
   }
 
+  /** The frame kernel's adjacency types: split_by_team and Delaunay. */
+  private val kernelSettings = Seq(GraphSettings(pad = false),
+    GraphSettings(pad = false, adjacencyMatrixType = GraphSettings.Delaunay))
+
   test("graphFrames raises the integrity error on a frame with two labels or graph ids") {
-    val settings = GraphSettings(pad = false)
-    val ok = smallFrame.withColumn(GraphId, lit("g-1")).withColumn(Label, lit(1L))
-    val one = GraphConverter.graphFrames(ok, settings).collect()
-    assert(one.map(r => (r.getAs[Long](Label), r.getAs[String](GraphId))).toSeq === Seq((1L, "g-1")))
-    // a null label leaves the frame's one value standing
-    val partial = ok.withColumn(Label, when(col(ObjectId) === "a1", lit(null).cast("long"))
-      .otherwise(lit(1L)))
-    assert(GraphConverter.graphFrames(partial, settings).collect().map(_.getAs[Long](Label)).toSeq ===
-      Seq(1L))
-    val mixed = Seq(
-      ok.withColumn(Label, when(col(ObjectId) === "h1", 0L).otherwise(1L)),
-      ok.withColumn(GraphId, when(col(ObjectId) === "ball", "g-X").otherwise("g-1")))
-    mixed.foreach { bad =>
-      val e = intercept[Exception](GraphConverter.graphFrames(bad, settings).collect())
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-      assert(messages(e).exists(_.contains("graph integrity violation")), messages(e))
+    kernelSettings.foreach { settings =>
+      val ok = smallFrame.withColumn(GraphId, lit("g-1")).withColumn(Label, lit(1L))
+      val one = GraphConverter.graphFrames(ok, settings).collect()
+      assert(one.map(r => (r.getAs[Long](Label), r.getAs[String](GraphId))).toSeq === Seq((1L, "g-1")))
+      // a null label leaves the frame's one value standing
+      val partial = ok.withColumn(Label, when(col(ObjectId) === "a1", lit(null).cast("long"))
+        .otherwise(lit(1L)))
+      assert(GraphConverter.graphFrames(partial, settings).collect().map(_.getAs[Long](Label)).toSeq ===
+        Seq(1L))
+      val mixed = Seq(
+        ok.withColumn(Label, when(col(ObjectId) === "h1", 0L).otherwise(1L)),
+        ok.withColumn(GraphId, when(col(ObjectId) === "ball", "g-X").otherwise("g-1")))
+      mixed.foreach { bad =>
+        val e = intercept[Exception](GraphConverter.graphFrames(bad, settings).collect())
+        def messages(t: Throwable): Seq[String] =
+          if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+        assert(messages(e).exists(_.contains("graph integrity violation")), s"$settings: ${messages(e)}")
+      }
     }
   }
 
   test("graphFrames: ball_owning_team_id is the frame's minimum owning team") {
+    // h1 (a home player) is the one row naming "away", so it sorts among
+    // the defenders and is not the frame's first row in node order
     val mixed = smallFrame.withColumn(BallOwningTeamId,
-      when(col(ObjectId) === "a2", lit("away")).otherwise(lit("home")))
-    val settings = GraphSettings(pad = false)
-    val forward = GraphConverter.graphFrames(mixed, settings).collect()
-    val reversed = GraphConverter.graphFrames(mixed.orderBy(col(ObjectId).desc), settings).collect()
-    assert(forward.map(_.getAs[String](BallOwningTeamId)).toSeq === Seq("away"))
-    assert(forward.map(_.toString).toSeq === reversed.map(_.toString).toSeq)
+      when(col(ObjectId) === "h1", lit("away")).otherwise(lit("home")))
+    kernelSettings.foreach { settings =>
+      val forward = GraphConverter.graphFrames(mixed, settings).collect()
+      val reversed = GraphConverter.graphFrames(mixed.orderBy(col(ObjectId).desc), settings).collect()
+      assert(forward.map(_.getAs[String](BallOwningTeamId)).toSeq === Seq("away"), settings)
+      assert(forward.map(_.toString).toSeq === reversed.map(_.toString).toSeq, settings)
+    }
   }
 
   test("global features: ball type targets the ball row, all type every row") {

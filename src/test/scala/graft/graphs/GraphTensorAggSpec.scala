@@ -7,27 +7,17 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused graphFrames path (one frame kernel,
-  * [[graft.graphs.GraphKernel]]) must be
-  * bit-identical to the staged pipeline (padFrames + withNodeIndex +
-  * assembleGraphFrames) it replaced — on the real tracking pipeline, on
-  * every supported adjacency/connect combination, and on the null/NaN
-  * corner rows the staged Catalyst expressions handle implicitly. */
+  * [[graft.graphs.GraphKernel]]) must be bit-identical to the staged
+  * relational assembly it replaced ([[GraphAssemblyReference]]: padding,
+  * node index, node features, pair table, generic tensor rebuild) — on
+  * the real tracking pipeline, on every adjacency/connect combination,
+  * and on the null/NaN corner rows the staged Catalyst expressions
+  * handle implicitly. */
 class GraphTensorAggSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import Cols._
 
   private val sf = "/root/testdata/sf0.001"
-
-  /** The staged (pre-r17) path, byte-for-byte: double persist + pad +
-    * index + node/pair tensor assembly. */
-  private def staged(df: DataFrame, settings: GraphSettings): DataFrame = {
-    val input = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val prepared = GraphConverter.withNodeIndex(
-      if (settings.pad) GraphConverter.padFrames(input)
-      else GraphConverter.removeIncompleteFrames(input))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    GraphConverter.assembleGraphFrames(prepared, settings, Label, GraphId)
-  }
 
   private def realInput: DataFrame = {
     val trk = SyntheticTracking.df(spark, sf)
@@ -39,8 +29,7 @@ class GraphTensorAggSpec extends AnyFunSuite {
   private def assertSame(df: DataFrame, settings: GraphSettings): Unit = {
     val fused = GraphConverter.graphFrames(df, settings)
       .collect().map(_.toString).sorted.toSeq
-    val base = staged(df, settings).collect().map(_.toString).sorted.toSeq
-    spark.catalog.clearCache()
+    val base = GraphAssemblyReference.graphFrames(df, settings).collect().map(_.toString).sorted.toSeq
     assert(fused.nonEmpty, "empty comparison proves nothing")
     assert(fused === base)
   }
@@ -81,7 +70,7 @@ class GraphTensorAggSpec extends AnyFunSuite {
     * with only 2 teams (dropped by removeIncompleteFrames when
     * pad = false). `ball_owning_team_id` is frame-constant — within a
     * frame that VARIES in owning, the staged path itself is
-    * nondeterministic (padFrames' `first(owning)` picks an arbitrary
+    * nondeterministic (its padding's `first(owning)` picks an arbitrary
     * group), so equality there is not a property either path has. */
   private def cornerInput: DataFrame = {
     import spark.implicits._
@@ -160,12 +149,11 @@ class GraphTensorAggSpec extends AnyFunSuite {
     assert(forward === reversed)
   }
 
-  test("delaunay settings still route to the staged geometric path") {
-    val df = GraphConverter.graphFrames(realInput,
-      GraphSettings(pad = false, adjacencyMatrixType = GraphSettings.Delaunay))
-    // the staged path materializes caches; the frame kernel must not appear
+  test("delaunay settings route to the frame kernel") {
+    val settings = GraphSettings(pad = false, adjacencyMatrixType = GraphSettings.Delaunay)
+    val df = GraphConverter.graphFrames(realInput, settings)
     val plan = df.queryExecution.optimizedPlan.toString
-    assert(!plan.contains("GraphKernel"), plan)
-    spark.catalog.clearCache()
+    assert(plan.contains("GraphKernel"), plan)
+    assertSame(realInput, settings)
   }
 }

@@ -192,8 +192,12 @@ class FrameKernelParitySpec extends AnyFunSuite {
         adjacencyMatrixConnectType = GraphSettings.ConnectBallCarrier),
       GraphSettings(pad = true, adjacencyMatrixType = GraphSettings.DenseDp,
         adjacencyMatrixConnectType = GraphSettings.ConnectNone),
-      GraphSettings(pad = false, adjacencyMatrixType = GraphSettings.Dense))
-    val cases = draw(table(anyKeys), 12, 5201L)
+      GraphSettings(pad = false, adjacencyMatrixType = GraphSettings.Dense),
+      GraphSettings(pad = true, adjacencyMatrixType = GraphSettings.Delaunay),
+      GraphSettings(pad = false, adjacencyMatrixType = GraphSettings.Delaunay,
+        adjacencyMatrixConnectType = GraphSettings.ConnectBallCarrier))
+    // three tables per settings
+    val cases = draw(table(anyKeys), 3 * settings.size, 5201L)
     assertReaches(cases, nullKeys = true)
     val emitted = cases.zipWithIndex.map { case (rows, i) =>
       val s = settings(i % settings.size)
@@ -208,8 +212,11 @@ class FrameKernelParitySpec extends AnyFunSuite {
       }
       n
     }
-    // the comparison covers frames the kernel emits, not only drops
+    // the comparison covers frames the kernel emits, not only drops,
+    // Delaunay frames included
     assert(emitted.sum > 0)
+    assert(emitted.indices.filter(i => settings(i % settings.size).adjacencyMatrixType ==
+      GraphSettings.Delaunay).map(emitted).sum > 0)
   }
 
   /** The typed detection path: `groupByKey` on the segment and the
