@@ -192,6 +192,17 @@ object GroupLocal {
     PlanShim.ofRows(df, GroupLocal(keys.map(attr), order.map(n => SortOrder(attr(n), Ascending)),
       kernel, inputs, replaced.map(_._1), replaced.map(_._2), values, child))
   }
+
+  /** `kernel` over one group outside a plan: each row holds the
+    * kernel's inputs in order, as Catalyst values of their declared
+    * types. A streaming operator that buffers a group in state runs
+    * the batch kernel through this. */
+  private[graft] def runGroup(kernel: GroupGenerator, rows: Iterator[InternalRow]): Iterator[InternalRow] = {
+    val types = kernel.inputs.map(_._2).toArray
+    val group = new Group(types.indices.toArray, types, Array.empty)
+    rows.foreach(group.add)
+    kernel.run(group)
+  }
 }
 
 /** Renews the value attributes of a [[GroupLocal]] on the right side

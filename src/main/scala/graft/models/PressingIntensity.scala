@@ -128,8 +128,12 @@ object PressingIntensity {
   * a call site produces depends on its JIT compilation state — the
   * staged path is itself not bit-reproducible there (verified with a
   * standalone JVM probe). Every declared query rounds tti/pti to 6
-  * decimals, which absorbs the wobble. */
-private final case class PiPairsKernel(
+  * decimals, which absorbs the wobble.
+  *
+  * The same kernel scores the frames of
+  * [[graft.streaming.StreamingPressing]], which runs it on each frame
+  * it buffers through [[GroupLocal.runGroup]]. */
+private[graft] final case class PiPairsKernel(
     tsType: DataType,
     params: PressingIntensity.Params,
     settings: TrackingSettings) extends GroupGenerator {

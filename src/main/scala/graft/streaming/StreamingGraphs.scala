@@ -2,28 +2,16 @@ package graft.streaming
 
 import graft.tracking.Cols
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming graph conversion: per-frame graph tensors
-  * assembled from a live tracking feed — the streaming form of the
-  * batch `GraphConverter` for GNN feature serving.
+/** Structured Streaming graph conversion: per-frame graphs from a live
+  * tracking feed for GNN feature serving, emitted by [[FrameCompletion]]
+  * (the consumer filters incomplete frames on `n`).
   *
-  * A frame's rows can straddle micro-batches, so completion is an
-  * event-time decision: rows buffer in keyed state per
-  * (game, period, frame) and the graph is emitted when the watermark
-  * passes the frame's timestamp + the allowed lateness
-  * (`EventTimeTimeout`) — frames missing rows at that point are
-  * emitted with what arrived (the consumer filters on `n`), mirroring
-  * the batch pipeline's incomplete-frame removal as a post-filter.
-  *
-  * Scale shape: state is one frame's ≤23 rows per key, dropped on
-  * emission; the shuffle key is the frame key — identical to the batch
-  * graph shuffle — so a 1000-match feed spreads by frame exactly like
-  * the batch job. Node order and the adjacency predicate replicate
-  * `GraphConverter.withNodeIndex`/`pairs` (split_by_team + ball
-  * connect) so a replayed stream matches the batch tensors —
-  * asserted in StreamingGraphsSpec.
+  * [[assemble]] is not the batch `GraphKernel`: its graph holds raw
+  * coordinates and an integer adjacency over whatever rows arrived. It
+  * takes the batch node order (`GraphConverter.withNodeIndex`, checked
+  * in StreamingGraphsSpec) and the split_by_team + ball connect
+  * adjacency.
   */
 object StreamingGraphs {
 
@@ -42,8 +30,8 @@ object StreamingGraphs {
       game_id: String, period_id: Int, frame_id: Long, n: Int,
       object_ids: Seq[String], x: Seq[Seq[Double]], a: Seq[Seq[Int]])
 
-  /** Batch-parity node order (GraphConverter.withNodeIndex): possession
-    * players, then defenders, then ball; by id within each group. */
+  /** The batch node order: possession players, then defenders, then
+    * ball; by id within each group. */
   private def sortKey(r: FrameRow): (Int, String) = {
     val isBall = r.team_id == Cols.Ball
     val owning = !isBall && r.team_id == r.ball_owning_team_id
@@ -69,35 +57,11 @@ object StreamingGraphs {
 
   /** Frame-graph stream; event time is the absolute `abs_ts` clock
     * (bridge period-relative feeds via [[AbsoluteTime]]). */
-  def graphs(rows: Dataset[FrameRow], lateness: String = "10 seconds"): Dataset[StreamGraph] = {
-    import rows.sparkSession.implicits._
-    rows
-      .withColumn("event_time", timestamp_micros(col("abs_ts")))
-      .withWatermark("event_time", lateness)
-      .as[FrameRow]
-      .groupByKey(r => (r.game_id, r.period_id, r.frame_id))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, Int, Long), it: Iterator[FrameRow], state: GroupState[Seq[FrameRow]]) => {
-          val (game, period, frame) = key
-          if (state.hasTimedOut) {
-            val buffered = state.getOption.getOrElse(Seq.empty)
-            state.remove()
-            Iterator.single(assemble(game, period, frame, buffered))
-          } else {
-            val buffered = state.getOption.getOrElse(Seq.empty) ++ it
-            state.update(buffered)
-            // fire once the watermark passes the frame's own event time:
-            // all on-time rows of this frame have then arrived. Clamped
-            // past the current watermark — a row admitted by the
-            // late-data predicate whose ms-truncated time fell below the
-            // eviction watermark would otherwise make the call throw
-            state.setTimeoutTimestamp(math.max(
-              buffered.map(_.abs_ts / 1000L).max,
-              state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-        })
-  }
+  def graphs(rows: Dataset[FrameRow], lateness: String = "10 seconds"): Dataset[StreamGraph] =
+    FrameCompletion(rows, lateness, (r: FrameRow) => (r.game_id, r.period_id, r.frame_id),
+      (r: FrameRow) => r.abs_ts) { case ((game, period, frame), buffered) =>
+      Iterator.single(assemble(game, period, frame, buffered))
+    }
 
   /** Convenience: graph stream as a DataFrame with flattened keys. */
   def graphStream(rows: Dataset[FrameRow], lateness: String = "10 seconds"): DataFrame =

@@ -1,30 +1,25 @@
 package graft.streaming
 
-import graft.tracking.TrackingSettings
+import graft.tracking.{Cols, Kinematics, TrackingSettings}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming kinematics: the streaming form of the batch
-  * `Kinematics` chain (W1 diffs + speed caps) for live tracking feeds.
+/** Structured Streaming kinematics: the unsmoothed velocity and speed
+  * of the batch [[Kinematics]] chain for live tracking feeds.
   *
-  * Batch velocity is a lag window — unsupported over unbounded
-  * streams — so the per-object previous position becomes explicit
-  * keyed state: `flatMapGroupsWithState` over (game, object, period)
-  * carries the last observed (ts, x, y, z) across micro-batches and
-  * emits one velocity row per event. State is one small case class per
-  * tracked object (≤23 per match), so a 1000-match stream holds ~23k
-  * state entries per executor-partition share — negligible; the
-  * shuffle key (game, object, period) is the same partitioning the
-  * batch series kernel uses.
-  *
-  * Arithmetic mirrors the unsmoothed `Kinematics` velocity
-  * (ms-truncated seconds, forward diffs, magnitude capped at the
-  * settings max) so a replayed
-  * stream converges to the batch result — asserted in
-  * StreamingKinematicsSpec.
+  * A stream sees a series a micro-batch at a time, so the previous
+  * position is keyed state: `flatMapGroupsWithState` over the batch
+  * series key (game, object, period) carries the last (ts, x, y, z)
+  * and emits one row per event; state is one small case class per
+  * tracked object (≤23 per match). Each step runs the batch step
+  * functions (`Kinematics.seconds`, `quotient`, `magnitude`, `cap`).
+  * The one intended difference: the quotient runs without ANSI, so a
+  * zero dt (a redelivered event) emits zeros instead of raising
+  * `DIVIDE_BY_ZERO` and stopping a live query.
   */
 object StreamingKinematics {
+  import Kinematics.{cap, magnitude, quotient, seconds}
 
   /** `abs_ts` = absolute event-time micros (monotone across periods,
     * see [[AbsoluteTime]]); `timestamp` stays canonical
@@ -44,8 +39,6 @@ object StreamingKinematics {
 
   final case class LastPos(timestamp: Long, x: Double, y: Double, z: Double)
 
-  private def sec(tsMicros: Long): Double = (tsMicros / 1000L) / 1000.0
-
   /** Per-event velocities with keyed previous-position state. Events
     * inside a micro-batch are processed in timestamp order; the first
     * event of a key emits zeros (the batch chain's coalesce-to-0). */
@@ -58,8 +51,7 @@ object StreamingKinematics {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: (String, String, Int), it: Iterator[TrackEvent], state: GroupState[LastPos]) => {
           val (game, id, period) = key
-          val isBall = id == graft.tracking.Cols.Ball
-          val vMax = if (isBall) settings.maxBallSpeed else settings.maxPlayerSpeed
+          val isBall = Option(id).map(_ == Cols.Ball)
           var last = state.getOption
           // Buffer-and-sort is bounded by ONE key's events within ONE
           // micro-batch — a single object of a single game period. At
@@ -73,12 +65,12 @@ object StreamingKinematics {
           val out = buf.iterator.map { e =>
             val row = last match {
               case Some(lp) =>
-                val dt = sec(e.timestamp) - sec(lp.timestamp)
-                val (vx, vy, vz) =
-                  if (dt == 0.0) (0.0, 0.0, 0.0)
-                  else ((e.x - lp.x) / dt, (e.y - lp.y) / dt, (e.z - lp.z) / dt)
-                val vRaw = math.sqrt(vx * vx + vy * vy + vz * vz)
-                VelocityRow(game, id, period, e.timestamp, e.abs_ts, vx, vy, vz, math.min(vRaw, vMax))
+                val dt = seconds(e.timestamp) - seconds(lp.timestamp)
+                val vx = quotient(e.x - lp.x, dt, ansi = false)
+                val vy = quotient(e.y - lp.y, dt, ansi = false)
+                val vz = quotient(e.z - lp.z, dt, ansi = false)
+                val v = cap(magnitude(vx, vy, vz), isBall, settings.maxBallSpeed, settings.maxPlayerSpeed)
+                VelocityRow(game, id, period, e.timestamp, e.abs_ts, vx, vy, vz, v)
               case None =>
                 VelocityRow(game, id, period, e.timestamp, e.abs_ts, 0.0, 0.0, 0.0, 0.0)
             }

@@ -1,32 +1,25 @@
 package graft.streaming
 
-import graft.tracking.{Cols, TrackingSettings}
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.GroupLocal
+import graft.models.{PiPairsKernel, PressingIntensity}
+import graft.tracking.TrackingSettings
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Structured Streaming Pressing Intensity: per-frame TTI/PTI pairs
-  * from a live kinematics feed (e.g. [[StreamingKinematics]] output
-  * joined back to positions), emitted when the watermark closes the
-  * frame — the streaming form of the batch
-  * [[graft.models.PressingIntensity]] pair pipeline for live pressing
-  * dashboards.
+  * from a live kinematics feed, for live pressing dashboards.
   *
-  * The batch model is a within-frame self-join; a stream-stream
-  * self-join would force two shuffles of the same feed plus state on
-  * both sides, so the streaming form keys ONE state store by frame and
-  * evaluates the ≤23×23 pair arithmetic in the emit callback (a frame
-  * is bounded by squad size, so the callback is O(1) work — the same
-  * bounded-kernel argument the batch pair join makes per frame). State
-  * per key is one frame's rows, dropped on emission; the shuffle key
-  * (game, period, frame) matches the batch shuffle.
-  *
-  * TTI/PTI arithmetic is shared with the batch engine's formula
-  * (`models/utils.py:4-99` semantics: teams method, ball side included
-  * on the possession side, reaction time + capped-speed closing term;
-  * see [[graft.models.PressingIntensity]] for the formula scaladoc) —
-  * replay parity with the batch pair table is asserted in
-  * StreamingPressingSpec.
+  * Frames complete in one state store keyed by frame
+  * ([[FrameCompletion]]), where a stream-stream self-join would shuffle
+  * the feed twice and hold state on both sides. A closed frame is one
+  * group of the batch model, so the stream runs the batch frame kernel
+  * on it: [[graft.models.PiPairsKernel]] through [[GroupLocal.runGroup]], with
+  * `PressingIntensity.Params(ballMethod = "include")` and this call's
+  * reaction time, threshold and sigma. Its pairs are those of
+  * `PressingIntensity.pairs` on the same rows (StreamingPressingSpec).
   */
 object StreamingPressing {
 
@@ -44,51 +37,18 @@ object StreamingPressing {
       game_id: String, period_id: Int, frame_id: Long,
       row_id: String, col_id: String, tti: Double, pti: Double)
 
-  /** One (defender row, possession col) TTI — identical arithmetic to
-    * the batch column expression in PressingIntensity.pairs. */
-  private[streaming] def tti(
-      r: KinRow, c: KinRow, reactionTime: Double, vMax: Double): Double = {
-    val ux = c.vx; val uy = c.vy; val uz = c.vz
-    val uMag = math.sqrt(ux * ux + uy * uy + uz * uz)
-    val d2x = r.x + r.vx; val d2y = r.y + r.vy; val d2z = r.z + r.vz
-    val vxx = d2x - c.x; val vyy = d2y - c.y; val vzz = d2z - c.z
-    val vMag = math.sqrt(vxx * vxx + vyy * vyy + vzz * vzz)
-    val angle = math.acos((ux * vxx + uy * vyy + uz * vzz) / (uMag * vMag + 1e-10))
-    val dx = d2x - (c.x + c.vx * reactionTime)
-    val dy = d2y - (c.y + c.vy * reactionTime)
-    val dz = d2z - (c.z + c.vz * reactionTime)
-    val dMag = math.sqrt(dx * dx + dy * dy + dz * dz)
-    uMag * angle / math.Pi + reactionTime + dMag / vMax
-  }
+  /** A buffered row as [[graft.models.PiPairsKernel]]'s inputs. The
+    * ball carrier and the speed are null: the twin's params read
+    * neither. */
+  private def kernelRow(r: KinRow): InternalRow = new GenericInternalRow(Array[Any](
+    r.timestamp, UTF8String.fromString(r.id), UTF8String.fromString(r.team_id),
+    UTF8String.fromString(r.ball_owning_team_id), null,
+    r.x, r.y, r.z, r.vx, r.vy, r.vz, null))
 
-  private[streaming] def pti(
-      t: Double, timeThreshold: Double, sigma: Double): Double = {
-    val arg = -math.Pi / math.sqrt(3.0) / sigma * (timeThreshold - t)
-    1.0 / (1.0 + math.exp(math.min(math.max(arg, -700.0), 700.0)))
-  }
-
-  private[streaming] def framePairs(
-      rows: Seq[KinRow], settings: TrackingSettings,
-      reactionTime: Double, timeThreshold: Double, sigma: Double): Seq[PressPair] = {
-    // batch parity: the pair join's === / =!= on a null owning team
-    // filters every row to false, so dead-ball frames emit no pairs
-    if (rows.isEmpty || rows.head.ball_owning_team_id == null ||
-        rows.head.ball_owning_team_id.isEmpty) Seq.empty
-    else {
-      val owning = rows.head.ball_owning_team_id
-      val colSide = rows.filter(r => r.team_id == owning || r.team_id == Cols.Ball)
-      val rowSide = rows.filter(r => r.team_id != owning && r.team_id != Cols.Ball)
-      for (r <- rowSide; c <- colSide) yield {
-        val t = tti(r, c, reactionTime, settings.maxPlayerSpeed)
-        PressPair(r.game_id, r.period_id, r.frame_id, r.id, c.id,
-          t, pti(t, timeThreshold, sigma))
-      }
-    }
-  }
+  private def label(s: UTF8String): String = if (s == null) null else s.toString
 
   /** Frame-keyed TTI/PTI pair stream; frames emit when the watermark
-    * passes their event time (same completion contract as
-    * [[StreamingGraphs]]). */
+    * passes their event time ([[FrameCompletion]]). */
   def pairs(
       rows: Dataset[KinRow],
       settings: TrackingSettings = TrackingSettings(),
@@ -96,30 +56,14 @@ object StreamingPressing {
       reactionTime: Double = 0.7,
       timeThreshold: Double = 1.5,
       sigma: Double = 0.45): Dataset[PressPair] = {
-    import rows.sparkSession.implicits._
-    rows
-      .withColumn("event_time", timestamp_micros(col("abs_ts")))
-      .withWatermark("event_time", lateness)
-      .as[KinRow]
-      .groupByKey(r => (r.game_id, r.period_id, r.frame_id))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: (String, Int, Long), it: Iterator[KinRow], state: GroupState[Seq[KinRow]]) => {
-          if (state.hasTimedOut) {
-            val buffered = state.getOption.getOrElse(Seq.empty)
-            state.remove()
-            framePairs(buffered.sortBy(_.id), settings,
-              reactionTime, timeThreshold, sigma).iterator
-          } else {
-            val buffered = state.getOption.getOrElse(Seq.empty) ++ it
-            state.update(buffered)
-            // clamp past the watermark: a row admitted by the late-data
-            // predicate whose ms-truncated time fell below the eviction
-            // watermark would otherwise make setTimeoutTimestamp throw
-            state.setTimeoutTimestamp(math.max(
-              buffered.map(_.abs_ts / 1000L).max,
-              state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-        })
+    val kernel = PiPairsKernel(LongType, PressingIntensity.Params(ballMethod = "include",
+      reactionTime = reactionTime, timeThreshold = timeThreshold, sigma = sigma), settings)
+    FrameCompletion(rows, lateness, (r: KinRow) => (r.game_id, r.period_id, r.frame_id),
+      (r: KinRow) => r.abs_ts) { case ((game, period, frame), buffered) =>
+      // kernel rows: (ts, row_id, col_id, row_idx, col_idx, tti, pti)
+      GroupLocal.runGroup(kernel, buffered.iterator.map(kernelRow)).map(p =>
+        PressPair(game, period, frame, label(p.getUTF8String(1)), label(p.getUTF8String(2)),
+          p.getDouble(5), p.getDouble(6)))
+    }
   }
 }

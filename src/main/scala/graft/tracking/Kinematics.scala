@@ -54,15 +54,44 @@ object Kinematics {
       ballSmoothing: Option[SavGol] = Some(SavGol.DefaultBall)): DataFrame =
     GroupLocal(df, ByObjectPeriod, Seq(Timestamp),
       SeriesKernel(settings, playerSmoothing, ballSmoothing, SQLConf.get.ansiEnabled))
+
+  // The step of the series, as listed above; the streaming twin
+  // (`graft.streaming.StreamingKinematics`) runs it too.
+
+  /** Seconds from micros truncated to milliseconds. */
+  private[graft] def seconds(tsMicros: Long): Double =
+    (tsMicros.toDouble / 1000.0).toLong.toDouble / 1000.0
+
+  /** `coalesce(num / dt, 0)` for a non-null numerator and dt. */
+  private[graft] def quotient(num: Double, dt: Double, ansi: Boolean): Double =
+    if (dt == 0.0) { if (ansi) throw PlanShim.divideByZero() else 0.0 }
+    else num / dt
+
+  private[graft] def magnitude(x: Double, y: Double, z: Double): Double =
+    math.sqrt(x * x + y * y + z * z)
+
+  /** The cap of a magnitude: `isBall` is empty for a null id. */
+  private[graft] def cap(x: Double, isBall: Option[Boolean], ballLimit: Double, playerLimit: Double): Double =
+    isBall match {
+      case Some(true) if greater(x, ballLimit) => ballLimit
+      case Some(false) if greater(x, playerLimit) => playerLimit
+      case _ => x
+    }
+
+  /** SQL `a > b` on doubles: NaN is greater than every number. */
+  private def greater(a: Double, b: Double): Boolean =
+    if (a.isNaN) !b.isNaN else !b.isNaN && a > b
 }
 
-/** One object's samples in one period → vx, vy, vz, v, ax, ay, az, a. */
+/** One object's samples in one period → vx, vy, vz, v, ax, ay, az, a,
+  * through the step functions of [[Kinematics]]. */
 private final case class SeriesKernel(
     settings: TrackingSettings,
     playerSmoothing: Option[SavGol],
     ballSmoothing: Option[SavGol],
     ansi: Boolean) extends GroupKernel {
   import Cols._
+  import Kinematics.{cap, magnitude, seconds}
 
   override def inputs: Seq[(String, DataType)] =
     Seq(ObjectId -> StringType, Timestamp -> LongType, X -> DoubleType, Y -> DoubleType, Z -> DoubleType)
@@ -72,14 +101,7 @@ private final case class SeriesKernel(
   private val IdIn = 0; private val TsIn = 1; private val XIn = 2; private val YIn = 3
   private val ball = UTF8String.fromString(Ball)
 
-  /** `coalesce(num / dt, 0)` for a non-null numerator and dt. */
-  private def quotient(num: Double, dt: Double): Double =
-    if (dt == 0.0) { if (ansi) throw PlanShim.divideByZero() else 0.0 }
-    else num / dt
-
-  /** SQL `a > b` on doubles: NaN is greater than every number. */
-  private def greater(a: Double, b: Double): Boolean =
-    if (a.isNaN) !b.isNaN else !b.isNaN && a > b
+  private def quotient(num: Double, dt: Double): Double = Kinematics.quotient(num, dt, ansi)
 
   override def run(g: Group): Unit = {
     val n = g.size
@@ -91,7 +113,7 @@ private final case class SeriesKernel(
     while (i < n) {
       val sec =
         if (g.isNull(i, TsIn)) Double.NaN
-        else (g.long(i, TsIn).toDouble / 1000.0).toLong.toDouble / 1000.0
+        else seconds(g.long(i, TsIn))
       dt(i) = if (i == 0 || sec.isNaN || prev.isNaN) Double.NaN else sec - prev
       prev = sec
       i += 1
@@ -109,11 +131,6 @@ private final case class SeriesKernel(
       smoothing.fold(raw)(_.smoothArray(raw))
     }
     val (vx, vy, vz) = (vel(0), vel(1), vel(2))
-    def cap(x: Double, ballLimit: Double, playerLimit: Double): Double = isBall match {
-      case Some(true) if greater(x, ballLimit) => ballLimit
-      case Some(false) if greater(x, playerLimit) => playerLimit
-      case _ => x
-    }
     i = 0
     while (i < n) {
       if (g.isNull(i, XIn) && g.isNull(i, YIn)) g.drop(i)
@@ -123,11 +140,11 @@ private final case class SeriesKernel(
         val ay = if (fromPrev) quotient(vy(i) - vy(i - 1), dt(i)) else 0.0
         val az = if (fromPrev) quotient(vz(i) - vz(i - 1), dt(i)) else 0.0
         g.setDouble(i, 0, vx(i)); g.setDouble(i, 1, vy(i)); g.setDouble(i, 2, vz(i))
-        g.setDouble(i, 3, cap(math.sqrt(vx(i) * vx(i) + vy(i) * vy(i) + vz(i) * vz(i)),
-          settings.maxBallSpeed, settings.maxPlayerSpeed))
+        g.setDouble(i, 3, cap(magnitude(vx(i), vy(i), vz(i)),
+          isBall, settings.maxBallSpeed, settings.maxPlayerSpeed))
         g.setDouble(i, 4, ax); g.setDouble(i, 5, ay); g.setDouble(i, 6, az)
-        g.setDouble(i, 7, cap(math.sqrt(ax * ax + ay * ay + az * az),
-          settings.maxBallAcceleration, settings.maxPlayerAcceleration))
+        g.setDouble(i, 7, cap(magnitude(ax, ay, az),
+          isBall, settings.maxBallAcceleration, settings.maxPlayerAcceleration))
       }
       i += 1
     }

@@ -24,8 +24,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * duplicated ball row, one-team frames, one-row frames and frames with
   * 12 players on one team. Every table runs at
   * `spark.sql.shuffle.partitions` 1 and 7, and again with its rows
-  * shuffled over three input partitions, so a result that depends on
-  * partitioning or on row order fails. */
+  * shuffled over three input partitions, with AQE on and off, so a
+  * result that depends on partitioning, on row order or on the
+  * adaptive plan fails. */
 class FrameKernelParitySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import Cols._
@@ -121,17 +122,25 @@ class FrameKernelParitySpec extends AnyFunSuite {
   }
 
   /** Runs `check` on the table at 1 and 7 shuffle partitions, and on
-    * its rows shuffled over three input partitions. */
+    * its rows shuffled over three input partitions, planned with AQE
+    * on and again with AQE off. */
   private def underPartitionings(rows: Seq[Row], seed: Long)(check: DataFrame => Unit): Unit = {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       Seq(1, 7).foreach { n =>
         spark.conf.set("spark.sql.shuffle.partitions", n.toString)
         check(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
       }
       val shuffled = new scala.util.Random(seed).shuffle(rows)
-      check(spark.createDataFrame(spark.sparkContext.parallelize(shuffled, 3), schema))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+      Seq("true", "false").foreach { aqe =>
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        check(spark.createDataFrame(spark.sparkContext.parallelize(shuffled, 3), schema))
+      }
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", before)
+      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    }
   }
 
   private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq

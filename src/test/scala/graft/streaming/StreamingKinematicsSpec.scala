@@ -51,23 +51,32 @@ class StreamingKinematicsSpec extends AnyFunSuite {
     import spark.implicits._
     val trk = SyntheticTracking.df(spark, "/root/testdata/sf0.001")
       .filter(col(Cols.GameId) === "0" && col(Cols.ObjectId) === "1")
-    val events = trk.select(
+    // the same series with a NaN x on every fifth frame: a NaN speed
+    // is above the cap, so it is capped
+    val nanSeries = trk.withColumn(Cols.ObjectId, lit("nan"))
+      .withColumn(Cols.X, when(col(Cols.FrameId) % 5 === 2, lit(Double.NaN)).otherwise(col(Cols.X)))
+    val series = trk.unionByName(nanSeries)
+    val events = series.select(
         col(Cols.GameId), col(Cols.ObjectId).as("id"), col(Cols.PeriodId),
         col(Cols.Timestamp), col(Cols.Timestamp).as("abs_ts"),
         col(Cols.TeamId), col(Cols.X), col(Cols.Y), col(Cols.Z))
       .as[TrackEvent].collect().toSeq
     val streamed = runStream(Seq(events))
       .map(r => (r.game_id, r.id, r.period_id, r.timestamp) -> (r.vx, r.v)).toMap
-    val batch = Kinematics(trk, TrackingSettings(), None, None)
+    val batch = Kinematics(series, TrackingSettings(), None, None)
       .select(col(Cols.GameId), col(Cols.ObjectId), col(Cols.PeriodId), col(Cols.Timestamp),
         col(Cols.Vx), col(Cols.Speed))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3)) -> (r.getDouble(4), r.getDouble(5)))
       .toMap
     assert(streamed.keySet === batch.keySet)
+    assert(batch.exists { case (k, (vx, v)) =>
+      k._2 == "nan" && vx.isNaN && v == TrackingSettings().maxPlayerSpeed })
+    // the stream runs the batch step functions: equal bit for bit
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
     streamed.foreach { case (k, (vx, v)) =>
-      assert(math.abs(vx - batch(k)._1) < 1e-9, s"vx mismatch at $k")
-      assert(math.abs(v - batch(k)._2) < 1e-9, s"v mismatch at $k")
+      assert(bits(vx) === bits(batch(k)._1), s"vx mismatch at $k")
+      assert(bits(v) === bits(batch(k)._2), s"v mismatch at $k")
     }
   }
 
