@@ -178,12 +178,8 @@ object AfFeatures {
     * connect) and the 9 edge feature columns (i = matrix row). */
   def pairs(df: DataFrame, settings: AfSettings = AfSettings()): DataFrame = {
     val cols = Seq("id", "team_id", "x", "y", "v", "a", "o", "dir")
-    // explicit frame-key exchange = stage boundary, so the self-join's
-    // two sides reuse ONE execution of the upstream pipeline instead of
-    // re-running it per side (the PressingIntensity pattern, r17)
-    val bounded = df.repartition(frameKeys.map(col): _*)
     def sided(p: String) =
-      bounded.select(frameKeys.map(col) ++ cols.map(c => col(c).as(s"${p}_$c")): _*)
+      df.select(frameKeys.map(col) ++ cols.map(c => col(c).as(s"${p}_$c")): _*)
     val joined = sided("i").join(sided("j"), frameKeys)
     val iBall = col("i_team_id") === Football
     val jBall = col("j_team_id") === Football

@@ -12,6 +12,12 @@ import org.apache.spark.sql.functions._
   * `NodeFeature`/`EdgeFeature` instances; dims are tracked for labeling
   * like the reference's `_node_feature_dims`.
   *
+  * These Columns are the one definition of every feature:
+  * `GraphConverter.withNodeFeatures` and `pairs` evaluate them in a plan,
+  * and the frame kernel behind `graphFrames` ([[GraphKernel]]) binds the
+  * default lists over a node row (`x`, `y`, ..., `__ball_x/y/z`) and a
+  * pair row (`i_*`, `j_*`) and evaluates them per node and per pair.
+  *
   * Quirks preserved on purpose:
   *  - `velocity_components_2d_normed` normalizes the angle to [0,1]
   *    *before* taking sin/cos (`builtin.py:44-50`), unlike the

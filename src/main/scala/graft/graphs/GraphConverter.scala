@@ -16,13 +16,17 @@ import org.apache.spark.sql.functions._
   * frame. [[graphFrames]] plans it over the input, and
   * [[graphFramesBucketed]] over a frame-key-bucketed copy of it.
   *
-  * The relational building blocks stay for queries that read them
+  * The relational building blocks serve queries that read them
   * directly: node features are row-local `Column`s (Features.scala) with
   * the per-frame ball position from a window aggregate, [[pairs]] is the
-  * within-frame pair table with the adjacency value and edge features,
-  * and [[withNodeIndex]] replicates the reference's node sort
-  * (`graph_converter.py:214-222`): possession players, then defenders,
-  * then ball, each by object id.
+  * within-frame pair table with the adjacency value ([[adjacency]]) and
+  * edge features, and [[withNodeIndex]] replicates the reference's node
+  * sort (`graph_converter.py:214-222`, [[sortValue]]): possession
+  * players, then defenders, then ball, each by object id. They are also
+  * the kernel's only definitions: [[GraphKernel]] binds the default
+  * feature Columns, [[adjacency]] and [[sortValue]] once per query and
+  * evaluates them per node and per pair, so a change to any of them
+  * changes [[graphFrames]] too.
   */
 object GraphConverter {
   import Cols._
@@ -31,8 +35,11 @@ object GraphConverter {
   private def wFrame = Window.partitionBy(frameKeys.map(col): _*)
 
   /** Node-order value of the reference sort expression:
-    * ball → 2, possession player → -1, defender → 0. */
-  private def sortValue: Column = {
+    * ball → 2, possession player → -1, defender → 0; null when a team or
+    * owning-team comparison is null. [[withNodeIndex]] orders by it, and
+    * [[GraphKernel]] and the streaming graphs evaluate it bound
+    * ([[NodeOrder]]). */
+  private[graphs] def sortValue: Column = {
     val isBall = col(TeamId) === Ball
     val owning = (col(BallOwningTeamId) === col(TeamId)) && !isBall
     isBall.cast("int") * 2 - owning.cast("int")
@@ -137,16 +144,11 @@ object GraphConverter {
       df: DataFrame,
       settings: GraphSettings,
       features: Seq[Features.EdgeFeature] = Nil): DataFrame = {
-    import GraphSettings._
     val feats = if (features.nonEmpty) features else Features.defaultEdgeFeatures(settings)
-    // when the node-index window actually runs here, add an explicit
-    // frame-key exchange below the self-join: both pair sides then
-    // reuse ONE execution of the upstream+window stage instead of
-    // re-running it per side (stage reuse needs an exchange boundary —
-    // the PressingIntensity pattern). A pre-indexed input skips it.
-    val indexed =
-      if (df.columns.contains("node_idx")) withNodeIndex(df)
-      else withNodeIndex(df).repartition(frameKeys.map(col): _*)
+    // no repartition of its own: the two sides share the upstream's
+    // frame-key exchange, and the planner drops a repartition on the
+    // keys the node-index window already hash-partitions by
+    val indexed = withNodeIndex(df)
     val cols = Seq(ObjectId, TeamId, BallOwningTeamId, IsBallCarrier,
       X, Y, Z, Vx, Vy, Vz, Speed, "node_idx")
     def sided(prefix: String): DataFrame =
@@ -162,6 +164,17 @@ object GraphConverter {
         frameKeys ++ Seq(s"i_$ObjectId", s"j_$ObjectId"), "left")
     else p0
 
+    p.withColumn("a", adjacency(settings))
+      .withColumn("e_features", array(Features.edgeFeatureColumns(settings, feats): _*))
+      .drop("__delaunay")
+  }
+
+  /** The adjacency value `a` of a pair over the pair table's `i_*`/`j_*`
+    * columns: 1 connected, 0 not, null when the predicate is unknown.
+    * The Delaunay type reads `__delaunay`, true on a triangulated id pair
+    * and null otherwise. [[pairs]] and [[GraphKernel]] evaluate it. */
+  private[graphs] def adjacency(settings: GraphSettings): Column = {
+    import GraphSettings._
     val iTeam = col(s"i_$TeamId"); val jTeam = col(s"j_$TeamId")
     val iBall = iTeam === Ball; val jBall = jTeam === Ball
     val owning = col(s"i_$BallOwningTeamId")
@@ -190,9 +203,7 @@ object GraphConverter {
         base || (col(s"i_$IsBallCarrier") && jBall) || (iBall && col(s"j_$IsBallCarrier"))
       case ConnectNone => base
     }
-    p.withColumn("a", connected.cast("int"))
-      .withColumn("e_features", array(Features.edgeFeatureColumns(settings, feats): _*))
-      .drop("__delaunay")
+    connected.cast("int")
   }
 
   /** Full conversion to the nested per-frame graph schema
@@ -244,6 +255,6 @@ object GraphConverter {
       graphIdCol: String): DataFrame = {
     val labels = Seq(labelCol, graphIdCol).filter(df.columns.contains)
     GroupLocal(df, frameKeys, Nil,
-      GraphKernel(settings, labels.map(c => c -> df.schema(c).dataType)))
+      GraphKernel(df.sparkSession, settings, labels.map(c => c -> df.schema(c).dataType)))
   }
 }

@@ -207,10 +207,6 @@ object GraphQueries extends QueryModule {
         (col(X) / 105.0 + 0.5).as("fx"), (col(Y) / 68.0 + 0.5).as("fy"))
       .withColumn("idx", row_number().over(
         Window.partitionBy(keys.map(col): _*).orderBy(col("id"))) - 1)
-      // explicit stage boundary so the edge self-join's two sides reuse
-      // ONE execution of the dedup+window pipeline (stage reuse only
-      // happens at exchange boundaries — the PressingIntensity pattern)
-      .repartition(keys.map(col): _*)
     val nodes = base.select(col(GameId), col(FrameId), col("idx"),
       array(col("fx"), col("fy")).as("x"))
     val l = base.select(col(GameId), col(FrameId), col("idx").as("i"),

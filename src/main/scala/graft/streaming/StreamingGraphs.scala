@@ -1,7 +1,9 @@
 package graft.streaming
 
+import graft.graphs.NodeOrder
 import graft.tracking.Cols
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Structured Streaming graph conversion: per-frame graphs from a live
   * tracking feed for GNN feature serving, emitted by [[FrameCompletion]]
@@ -9,8 +11,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   *
   * [[assemble]] is not the batch `GraphKernel`: its graph holds raw
   * coordinates and an integer adjacency over whatever rows arrived. It
-  * takes the batch node order (`GraphConverter.withNodeIndex`, checked
-  * in StreamingGraphsSpec) and the split_by_team + ball connect
+  * sorts its nodes in the batch node order ([[graft.graphs.NodeOrder]],
+  * bound once per stream) and uses the split_by_team + ball connect
   * adjacency.
   */
 object StreamingGraphs {
@@ -30,17 +32,12 @@ object StreamingGraphs {
       game_id: String, period_id: Int, frame_id: Long, n: Int,
       object_ids: Seq[String], x: Seq[Seq[Double]], a: Seq[Seq[Int]])
 
-  /** The batch node order: possession players, then defenders, then
-    * ball; by id within each group. */
-  private def sortKey(r: FrameRow): (Int, String) = {
-    val isBall = r.team_id == Cols.Ball
-    val owning = !isBall && r.team_id == r.ball_owning_team_id
-    ((if (isBall) 2 else 0) - (if (owning) 1 else 0), r.id)
-  }
-
   private[streaming] def assemble(
-      game: String, period: Int, frame: Long, rows: Seq[FrameRow]): StreamGraph = {
-    val ordered = rows.sortBy(sortKey)
+      game: String, period: Int, frame: Long, rows: Seq[FrameRow], order: NodeOrder): StreamGraph = {
+    val ordered = rows
+      .map(r => (order.rank(r.team_id, r.ball_owning_team_id), UTF8String.fromString(r.id), r))
+      .sortWith((p, q) => NodeOrder.compare(p._1, p._2, q._1, q._2) < 0)
+      .map(_._3)
     val n = ordered.size
     val a = ordered.map { ri =>
       ordered.map { rj =>
@@ -57,11 +54,13 @@ object StreamingGraphs {
 
   /** Frame-graph stream; event time is the absolute `abs_ts` clock
     * (bridge period-relative feeds via [[AbsoluteTime]]). */
-  def graphs(rows: Dataset[FrameRow], lateness: String = "10 seconds"): Dataset[StreamGraph] =
+  def graphs(rows: Dataset[FrameRow], lateness: String = "10 seconds"): Dataset[StreamGraph] = {
+    val order = NodeOrder(rows.sparkSession)
     FrameCompletion(rows, lateness, (r: FrameRow) => (r.game_id, r.period_id, r.frame_id),
       (r: FrameRow) => r.abs_ts) { case ((game, period, frame), buffered) =>
-      Iterator.single(assemble(game, period, frame, buffered))
+      Iterator.single(assemble(game, period, frame, buffered, order))
     }
+  }
 
   /** Convenience: graph stream as a DataFrame with flattened keys. */
   def graphStream(rows: Dataset[FrameRow], lateness: String = "10 seconds"): DataFrame =

@@ -358,6 +358,19 @@ class PlanAuditSpec extends AnyFunSuite {
       X, Y, Z, Vx, Vy, Vz, Speed, BallOwningTeamId, IsBallCarrier, Label, GraphId))
   }
 
+  test("pair self-joins: the second side reuses the upstream's frame exchange") {
+    // GraphConverter.pairs, AfFeatures.pairs and the q_gnn graph repartition
+    // nothing of their own: their input is already hash-partitioned by the
+    // frame keys, and the planner drops a repartition on those keys
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    Seq("q_graph_edges", "q_af_edges", "q_gnn_forward").foreach { name =>
+      val df = SparkEntry.allQueries.find(_.name == name).get.run(spark, sf)
+      df.collect()
+      val reused = flattenPlan(df.queryExecution.executedPlan).collect { case r: ReusedExchangeExec => r }
+      assert(reused.nonEmpty, s"$name runs its upstream once per self-join side")
+    }
+  }
+
   test("sportec load: per-match aggregates broadcast, one frame-key window shuffle") {
     import graft.tracking.SportecSource
     val files = "/root/reference/tests/files"

@@ -110,6 +110,32 @@ class GraphConverterSpec extends AnyFunSuite {
     assert(x(padIdx)(2) == 0.0) // v = 0
   }
 
+  test("G7 feature lists replace the defaults: a built-in and a user feature each") {
+    val s = GraphSettings(pad = false)
+    val nodeFeats = Seq(
+      Features.defaultNodeFeatures(s).find(_.name == "x_normed").get,
+      Features.NodeFeature("y_scaled", 2, c => Seq(c.py * 2.0, c.py + 1.0)))
+    val x = GraphConverter.withNodeFeatures(smallFrame, s, nodeFeats)
+      .select(ObjectId, "x_features").collect()
+      .map(r => r.getString(0) -> r.getSeq[Double](1).toSeq).toMap
+    assert(x.size === 5)
+    assert(x.values.forall(_.length == nodeFeats.map(_.dims).sum)) // 3, not the default 15
+    // h2 at (3, 4)
+    assert(x("h2") === Seq((3.0 - s.pitch.xMin) / (s.pitch.xMax - s.pitch.xMin), 8.0, 5.0))
+
+    val edgeFeats = Seq(
+      Features.defaultEdgeFeatures(s).find(_.name == "distances_between_players_normed").get,
+      Features.EdgeFeature("dx", 1, c => Seq(c.ix - c.jx)))
+    val e = GraphConverter.pairs(smallFrame, s, edgeFeats)
+      .select(s"i_$ObjectId", s"j_$ObjectId", "e_features").collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getSeq[Double](2).toSeq).toMap
+    assert(e.size === 25)
+    assert(e.values.forall(_.length == edgeFeats.map(_.dims).sum)) // 2, not the default 6
+    // h1 at (1, 2) to a1 at (-1, 0)
+    assert(e(("h1", "a1")) === Seq(math.sqrt(8.0) / s.maxDistance, 2.0))
+    assert(e(("a1", "h1")) === Seq(math.sqrt(8.0) / s.maxDistance, -2.0))
+  }
+
   test("remove incomplete frames requires 3 distinct teams") {
     val noBall = mkFrame(Seq(
       ("h1", "home", 1.0, 2.0), ("a1", "away", -1.0, 0.0)))

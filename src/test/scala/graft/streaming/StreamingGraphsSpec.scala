@@ -75,8 +75,16 @@ class StreamingGraphsSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = Seq(
       row(7, "b", "home", 1.0), row(7, "a", "home", 2.0),
-      row(7, "z", "away", 3.0), row(7, "ball", "ball", 4.0))
-    val g = StreamingGraphs.assemble("g1", 1, 7, rows)
+      row(7, "z", "away", 3.0), row(7, "ball", "ball", 4.0),
+      // a null id sharing its order value with "a" and "b" sorts first
+      row(7, null, "home", 5.0),
+      // UTF-8 byte order: U+FFFD (EF BF BD) before U+1F600 (F0 9F 98 80),
+      // the reverse of their UTF-16 order
+      row(7, "p\uD83D\uDE00", "away", 6.0), row(7, "p\uFFFD", "away", 7.0),
+      // a null team in a frame with a null owning team has a null order
+      // value, which sorts first
+      row(7, "n", null, 8.0).copy(ball_owning_team_id = null))
+    val g = StreamingGraphs.assemble("g1", 1, 7, rows, graft.graphs.NodeOrder(spark))
     val batchOrder = graft.graphs.GraphConverter
       .withNodeIndex(rows.toDF()
         .withColumnRenamed("timestamp", graft.tracking.Cols.Timestamp))

@@ -160,7 +160,8 @@ class StreamingTwoPeriodParitySpec extends AnyFunSuite {
       // per-frame parity with the deterministic assembler on the batch rows
       out.foreach { g =>
         val expect = StreamingGraphs.assemble(g.game_id, g.period_id, g.frame_id,
-          byPeriod(g.period_id).filter(_.frame_id == g.frame_id).toSeq)
+          byPeriod(g.period_id).filter(_.frame_id == g.frame_id).toSeq,
+          graft.graphs.NodeOrder(spark))
         assert(g === expect, s"graph mismatch at frame ${g.frame_id}")
       }
     } finally q.stop()
