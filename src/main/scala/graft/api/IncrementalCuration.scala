@@ -65,8 +65,9 @@ object IncrementalCuration {
     * sizes). `bands = None` is the bootstrap-only mode — each step
     * then re-derives the old side's signatures from the shingle index,
     * a corpus-sized groupBy that makes the composed daily step lose to
-    * its batch bootstrap (measured, SCALING.md); carry the side-tables
-    * (the [[stateOf]] default) to keep every stage increment-sized. */
+    * its batch bootstrap (SCALING.md row `journey-ladder`); carry the
+    * side-tables (the [[stateOf]] default) to keep every stage
+    * increment-sized. */
   final case class State(
       shingleIndex: DataFrame,
       labels: DataFrame,

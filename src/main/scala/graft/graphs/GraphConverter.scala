@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   * sort (`graph_converter.py:214-222`, [[sortValue]]): possession
   * players, then defenders, then ball, each by object id. They are also
   * the kernel's only definitions: [[GraphKernel]] binds the default
-  * feature Columns, [[adjacency]] and [[sortValue]] once per query and
-  * evaluates them per node and per pair, so a change to any of them
-  * changes [[graphFrames]] too.
+  * feature Columns, [[adjacency]] and [[sortValue]] (once per settings
+  * and conf) and evaluates them per node and per pair, so a change to
+  * any of them changes [[graphFrames]] too.
   */
 object GraphConverter {
   import Cols._

@@ -21,9 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * padding or completeness rules drop. It is the only graph assembly,
   * for every adjacency type.
   *
-  * It evaluates the relational definitions, bound once per query by
-  * [[GraphKernel.apply]], so `withNodeFeatures` and `pairs` compute the
-  * same values by construction:
+  * It evaluates the relational definitions, bound by
+  * [[GraphKernel.apply]] once per settings, labels and conf, so
+  * `withNodeFeatures` and `pairs` compute the same values by
+  * construction:
   *  - `order` is [[GraphConverter.sortValue]] and `nodeFeatures` the array of
   *    `Features.nodeFeatureColumns` (the default features), over a node
   *    row of the kernel's inputs and the frame's ball position;
@@ -286,8 +287,32 @@ private[graphs] object GraphKernel {
     var features: ArrayData = null
   }
 
-  /** The kernel for `settings`, its definitions bound in `spark`. */
+  private type Key = (GraphSettings, Seq[(String, DataType)], Map[String, String])
+
+  /** The last kernel bound, under what its binding depends on: the
+    * settings, the labels and the session conf (ANSI mode, for one,
+    * changes what the Columns resolve to). Binding analyzes two
+    * `select`s, tens of milliseconds of driver time per query. */
+  private var last: Option[(Key, GraphKernel)] = None
+
+  /** The kernel for `settings`, its definitions bound in `spark`, or
+    * the last binding under the same settings, labels and conf. */
   def apply(spark: SparkSession, settings: GraphSettings, labels: Seq[(String, DataType)]): GraphKernel = {
+    val key = (settings, labels, spark.conf.getAll)
+    synchronized {
+      val kernel = last.collect { case (k, bound) if k == key => bound }.getOrElse {
+        val bound = bindKernel(spark, settings, labels)
+        last = Some(key -> bound)
+        bound
+      }
+      kernel.copy() // a fresh instance: its projections are per instance
+    }
+  }
+
+  private def bindKernel(
+      spark: SparkSession,
+      settings: GraphSettings,
+      labels: Seq[(String, DataType)]): GraphKernel = {
     val Seq(order, x) = bind(spark, nodeFields, Seq(GraphConverter.sortValue,
       array(Features.nodeFeatureColumns(settings, Features.defaultNodeFeatures(settings)): _*)))
     val pairFields = Seq("i_", "j_").flatMap(side => nodeFields.map { case (c, t) => (side + c, t) }) :+

@@ -195,7 +195,7 @@ object Bm25 {
     * stop-word-ish term's whole posting list (potentially
     * corpus-sized) in one file — a single-task read, measured 5.8×
     * slower than the range-clustered layout at a 20M-doc hot term
-    * (CurationSoak `bm25_skew_indexed`). Maintenance under corpus
+    * (SCALING.md row `bm25-skew`). Maintenance under corpus
     * growth is increment-ADD ([[indexAdd]]): disjoint new ids
     * contribute disjoint posting rows, and df/avgdl are recomputed
     * from the union at serve time, exactly as a batch rebuild would. */

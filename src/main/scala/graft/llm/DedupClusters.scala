@@ -90,7 +90,7 @@ object DedupClusters {
     * label propagation over the library's edge-partitioned graph).
     *
     * Measured head-to-head on the real minhash near-dup graph
-    * (`graft.tools.CcSoak`, min-of-2 with a stage-metrics listener):
+    * (SCALING.md row `cc-graphx`, min-of-2 with a stage-metrics listener):
     * GraphX wins at both scales — 0.32 s vs 1.12 s at sf0.1 (256
     * pairs) and 0.58 s vs 2.27 s at sf1 (250k pairs, 50k nodes), with
     * 6.6× less shuffle read — Pregel's per-partition routing tables
@@ -143,8 +143,9 @@ object DedupClusters {
   }
 
   /** Connected components by the pair id type: GraphX for integral ids
-    * (CcSoak: 3.4–3.9× faster, ~6× less shuffle on the real near-dup
-    * graphs at both soak scales), the relational loop for any other
+    * (SCALING.md row `cc-graphx`: 3.4–3.9× faster, ~6× less shuffle
+    * on the real near-dup graphs at both soak scales), the relational
+    * loop for any other
     * type, whose ids GraphX's `cast("long")` would reject under ANSI
     * or null out without it. Labels are identical either way
     * (GraphXBridgeSpec), so the oracle replay is

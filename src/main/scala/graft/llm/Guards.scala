@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions.broadcast
   * The knob is read at PLAN-BUILD time from the DataFrame's session,
   * so callers flip it with `spark.conf.set(...)` around the call.
   *
-  * Measured (sf1 soak, r16 — `guard_overcap_{force,auto}` in
-  * CurationSoak): on a 48M-row corpus whose over-cap guard set is 2M
+  * Measured (sf1 soak, r16 — SCALING.md row `guard-force`): on a
+  * 48M-row corpus whose over-cap guard set is 2M
   * (band, key) rows — deliberately ABOVE the 10 MB auto-broadcast
   * threshold — `force` runs 12.9 s vs `auto` 47.6 s (3.7×): past the
   * threshold, auto degrades BOTH anti-joins to shuffles of the

@@ -66,8 +66,8 @@ object Jaccard {
     * next to the shingle index (bucket dfs by h, sizes by the id) and
     * maintain them by ADDING each increment's own aggregates —
     * without them the incremental step pays one linear reduction over
-    * the index per increment for each (measured at sf1; see
-    * SCALING.md). */
+    * the index per increment for each (measured at sf1; SCALING.md
+    * row `jaccard-side`). */
   def indexDfs(index: DataFrame): DataFrame =
     index.toDF("__id", "h").groupBy(col("h")).agg(count(lit(1)).as("df"))
 

@@ -248,7 +248,7 @@ object MinHash {
     * `shNew ∪ shOld` before joining, which discarded the stored
     * layout and shuffled the full index TWICE per step — the last
     * corpus-tracking term in the composed daily journey
-    * (SCALING.md r15).
+    * (SCALING.md row `journey-ladder`).
     *
     * `pairsNO` carries roles — (id_n ∈ new, id_o ∈ old), distinct;
     * `pairsNN` is canonical (id_a < id_b), distinct. Role-disjoint
@@ -453,7 +453,8 @@ object MinHash {
     // them the way it does in the batch arm — each consumer would
     // re-run the upstream batch plan (often score→gate→tokenize).
     // Measured at the sf1 journey soak: the un-persisted form paid the
-    // new-side derivation ~6× (167 s pair stage; see SCALING.md r15).
+    // new-side derivation ~6× (167 s pair stage; SCALING.md row
+    // `journey-fanout`).
     // Increment-sized by contract, so MEMORY_AND_DISK is safe; lazy —
     // fills on the first action, unlike the edge relation's eager
     // checkpoint in DedupClusters (documented there). Registered with

@@ -44,7 +44,7 @@ object Pca {
     * DECIMAL(20,9) before the sum so the result is merge-order-free
     * and bit-replayable; `exact = false` is the production float path
     * (plain double sums — same cells, last-ulp accumulation-order
-    * nondeterminism, measured ~4.5× faster; see SCALING.md). */
+    * nondeterminism, measured ~4.5× faster; SCALING.md row `top-pc-exact`). */
   def covariance(emb: DataFrame, vecCol: String, dim: Int,
       exact: Boolean = true): DataFrame =
     covarianceFrom(emb, vecCol, dim, meanVector(emb, vecCol), exact)

@@ -4,6 +4,7 @@ import graft.SparkTestSession
 import graft.tracking.Cols
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphConverterSpec extends AnyFunSuite {
@@ -208,6 +209,26 @@ class GraphConverterSpec extends AnyFunSuite {
         assert(messages(e).exists(_.contains("graph integrity violation")), s"$settings: ${messages(e)}")
       }
     }
+  }
+
+  test("GraphKernel keeps its last binding until the settings or the conf change") {
+    val labels = Seq(Label -> LongType)
+    def bound(k: GraphKernel) = Seq(k.order, k.nodeFeatures, k.adjacency, k.edgeFeatures)
+    val settings = GraphSettings(pad = false)
+    val first = GraphKernel(spark, settings, labels)
+    val again = GraphKernel(spark, settings, labels)
+    assert(again ne first)
+    assert(bound(again).zip(bound(first)).forall { case (a, b) => a eq b })
+    val other = GraphKernel(spark, settings.copy(adjacencyMatrixType = GraphSettings.Dense), labels)
+    assert(other.adjacency ne first.adjacency)
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", (!ansi.toBoolean).toString)
+    try {
+      val flipped = GraphKernel(spark, settings, labels)
+      assert(bound(flipped).zip(bound(first)).forall { case (a, b) => a ne b })
+      assert(flipped.adjacency != first.adjacency || flipped.edgeFeatures != first.edgeFeatures ||
+        flipped.nodeFeatures != first.nodeFeatures)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("graphFrames: ball_owning_team_id is the frame's minimum owning team") {
