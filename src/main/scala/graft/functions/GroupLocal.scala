@@ -1,17 +1,17 @@
 package graft.functions
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, JoinedRow, SortOrder, SpecificInternalRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, JoinedRow, SortOrder, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.PlanShim
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DataType, StructField}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** What [[GroupLocal]] runs once for each group: the run of rows that
@@ -202,6 +202,49 @@ object GroupLocal {
     val group = new Group(types.indices.toArray, types, Array.empty)
     rows.foreach(group.add)
     kernel.run(group)
+  }
+}
+
+/** Column definitions as expressions a kernel evaluates outside a
+  * plan, one per row it builds. A kernel that evaluates the relational
+  * definitions binds them here rather than restating their semantics. */
+object KernelBinding {
+
+  /** `cols` resolved against a relation of `fields` and bound to their
+    * ordinals, so they evaluate over rows of those fields. */
+  def bind(spark: SparkSession, fields: Seq[(String, DataType)], cols: Seq[Column]): Seq[Expression] = {
+    val schema = StructType(fields.map { case (c, t) => StructField(c, t) })
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema).select(cols: _*)
+      .queryExecution.analyzed match {
+        case Project(list, child) => list.map {
+          case Alias(c, _) => BindReferences.bindReference(c, child.output)
+          case c => BindReferences.bindReference(c: Expression, child.output)
+        }
+      }
+  }
+
+  /** The last binding of one kernel definition, under what it depends
+    * on: the definition's key (its settings or params and input types)
+    * and the session conf (ANSI mode, for one, changes what the Columns
+    * resolve to). Binding analyzes a `select` per row kind, tens of
+    * milliseconds of driver time per query; each kernel definition
+    * keeps its own entry, so two kernels of one job do not evict each
+    * other. */
+  final class Memo[K, V] {
+    private var last: Option[((K, Map[String, String]), V)] = None
+
+    /** The binding under `key` and `spark`'s conf: the last one, or a
+      * fresh one from `bind`. */
+    def apply(spark: SparkSession, key: K)(bind: => V): V = {
+      val full = (key, spark.conf.getAll)
+      synchronized {
+        last.collect { case (k, bound) if k == full => bound }.getOrElse {
+          val bound = bind
+          last = Some(full -> bound)
+          bound
+        }
+      }
+    }
   }
 }
 

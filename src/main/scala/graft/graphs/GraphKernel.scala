@@ -2,12 +2,11 @@ package graft.graphs
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.functions.{Group, GroupGenerator}
+import graft.functions.{Group, GroupGenerator, KernelBinding}
 import graft.tracking.Cols
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, GenericInternalRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.array
 import org.apache.spark.sql.types._
@@ -287,53 +286,25 @@ private[graphs] object GraphKernel {
     var features: ArrayData = null
   }
 
-  private type Key = (GraphSettings, Seq[(String, DataType)], Map[String, String])
-
-  /** The last kernel bound, under what its binding depends on: the
-    * settings, the labels and the session conf (ANSI mode, for one,
-    * changes what the Columns resolve to). Binding analyzes two
-    * `select`s, tens of milliseconds of driver time per query. */
-  private var last: Option[(Key, GraphKernel)] = None
+  private val memo = new KernelBinding.Memo[(GraphSettings, Seq[(String, DataType)]), GraphKernel]
 
   /** The kernel for `settings`, its definitions bound in `spark`, or
     * the last binding under the same settings, labels and conf. */
-  def apply(spark: SparkSession, settings: GraphSettings, labels: Seq[(String, DataType)]): GraphKernel = {
-    val key = (settings, labels, spark.conf.getAll)
-    synchronized {
-      val kernel = last.collect { case (k, bound) if k == key => bound }.getOrElse {
-        val bound = bindKernel(spark, settings, labels)
-        last = Some(key -> bound)
-        bound
-      }
-      kernel.copy() // a fresh instance: its projections are per instance
-    }
-  }
+  def apply(spark: SparkSession, settings: GraphSettings, labels: Seq[(String, DataType)]): GraphKernel =
+    // a fresh instance: its projections are per instance
+    memo(spark, (settings, labels))(bindKernel(spark, settings, labels)).copy()
 
   private def bindKernel(
       spark: SparkSession,
       settings: GraphSettings,
       labels: Seq[(String, DataType)]): GraphKernel = {
-    val Seq(order, x) = bind(spark, nodeFields, Seq(GraphConverter.sortValue,
+    val Seq(order, x) = KernelBinding.bind(spark, nodeFields, Seq(GraphConverter.sortValue,
       array(Features.nodeFeatureColumns(settings, Features.defaultNodeFeatures(settings)): _*)))
     val pairFields = Seq("i_", "j_").flatMap(side => nodeFields.map { case (c, t) => (side + c, t) }) :+
       ("__delaunay" -> BooleanType)
-    val Seq(a, e) = bind(spark, pairFields, Seq(GraphConverter.adjacency(settings),
+    val Seq(a, e) = KernelBinding.bind(spark, pairFields, Seq(GraphConverter.adjacency(settings),
       array(Features.edgeFeatureColumns(settings, Features.defaultEdgeFeatures(settings)): _*)))
     GraphKernel(settings, labels, order, x, a, e)
-  }
-
-  /** `cols` resolved against a relation of `fields` and bound to their
-    * ordinals, so they evaluate over rows of those fields. */
-  private[graphs] def bind(
-      spark: SparkSession, fields: Seq[(String, DataType)], cols: Seq[Column]): Seq[Expression] = {
-    val schema = StructType(fields.map { case (c, t) => StructField(c, t) })
-    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema).select(cols: _*)
-      .queryExecution.analyzed match {
-        case Project(list, child) => list.map {
-          case Alias(c, _) => BindReferences.bindReference(c, child.output)
-          case c => BindReferences.bindReference(c: Expression, child.output)
-        }
-      }
   }
 }
 
@@ -351,7 +322,7 @@ private[graft] final case class NodeOrder(value: Expression) {
 }
 
 private[graft] object NodeOrder {
-  def apply(spark: SparkSession): NodeOrder = NodeOrder(GraphKernel.bind(spark,
+  def apply(spark: SparkSession): NodeOrder = NodeOrder(KernelBinding.bind(spark,
     Seq(Cols.TeamId -> StringType, Cols.BallOwningTeamId -> StringType), Seq(GraphConverter.sortValue)).head)
 
   /** Compares two nodes by their order value, then id. */

@@ -2,11 +2,12 @@ package graft.models
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.functions.{Group, GroupGenerator, GroupLocal}
+import graft.functions.{Group, GroupGenerator, GroupLocal, KernelBinding}
+import graft.graphs.NodeOrder
 import graft.tracking.{Cols, TrackingSettings}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -67,9 +68,10 @@ object PressingIntensity {
     * side ordered players-then-ball by id; defending side by id). This
     * is the scalable core; [[matrices]] folds it to the nested form.
     *
-    * One frame kernel ([[PiPairsKernel]]) does the index assignment, the
-    * pair fan-out, the TTI/PTI arithmetic, the ball merge, masking and
-    * the orientation transpose. Output matches the staged window →
+    * One frame kernel ([[PiPairsKernel]]) scores each frame: it assigns
+    * the indices, fans out the pairs and evaluates the definitions below
+    * (TTI/PTI, the ball merge, masking and the orientation transpose)
+    * on each. Output matches the staged window →
     * self-join → window chain, the test-side reference
     * `PiStagedReference` (six q_pi_* oracle hashes + PiPairsFusedSpec:
     * `tti` bit-exact, `pti` within 4 ULP). */
@@ -79,25 +81,15 @@ object PressingIntensity {
       params: Params = Params()): DataFrame = {
     require(!Set("home_away", "away_home")(params.orient) || settings.homeTeamId.isDefined,
       s"orient='${params.orient}' requires TrackingSettings.homeTeamId to be set")
-    val isBall = col(TeamId) === Ball
-    val isOwning = col(TeamId) === col(BallOwningTeamId)
     // the staged `.filter(colSide || rowSide)` — pre-filter before the
     // kernel so non-member rows are not shuffled (the kernel re-checks
     // membership, so the two are exactly equivalent)
-    val (colSide, rowSide) = params.method match {
-      case "teams" => params.ballMethod match {
-        case "exclude" => (isOwning && !isBall, !isOwning && !isBall)
-        case _         => (isOwning || isBall, !(isOwning || isBall))
-      }
-      case "full" =>
-        val all = if (params.ballMethod == "exclude") !isBall else lit(true)
-        (all, all)
-    }
+    val (colSide, rowSide) = sides(params)
     // a row with a null frame key belongs to no frame: the staged
     // chain's frame-key inner join drops it, so it must not form a group
     val keyed = frameKeys.map(col(_).isNotNull).reduce(_ && _)
     GroupLocal(df.filter(keyed && (colSide || rowSide)), frameKeys, Nil,
-      PiPairsKernel(df.schema(Timestamp).dataType, params, settings))
+      PiPairsKernel(df.sparkSession, df.schema(Timestamp).dataType, params, settings))
   }
 
   /** Nested per-frame output matching the reference schema
@@ -108,27 +100,136 @@ object PressingIntensity {
     // one frame kernel over the pairs; it rides their frame partitioning
     GroupLocal(pairsDf, frameKeys :+ Timestamp, Nil,
       PiMatricesKernel(pairsDf.schema("row_id").dataType))
+
+  // ---- The model's definitions. Over a node row (a tracking row): ----
+
+  /** The ball's row. */
+  private[models] val isBall: Column = col(TeamId) === Ball
+  private val isOwning = col(TeamId) === col(BallOwningTeamId)
+  /** A player of the owning team; the row side's indices start after them. */
+  private[models] val owningPlayer: Column = isOwning && !isBall
+
+  /** Side membership (`pressing_intensity.py:164-251`): the column side
+    * (possession) and the row side (defending). */
+  private[models] def sides(params: Params): (Column, Column) = params.method match {
+    case "teams" => params.ballMethod match {
+      case "exclude" => (isOwning && !isBall, !isOwning && !isBall)
+      case _         => (isOwning || isBall, !(isOwning || isBall))
+    }
+    case "full" =>
+      val all = if (params.ballMethod == "exclude") !isBall else lit(true)
+      (all, all)
+  }
+
+  /** The node order's first key, then the id: the reference's
+    * orient-dependent stable sort (`pressing_intensity.py:520-552`), the
+    * ball always last. For "teams" the owning side comes first in every
+    * orient; for "full" the orient picks the first side. */
+  private[models] def sideRank(settings: TrackingSettings, params: Params): Column = {
+    val isHomeTeam = col(TeamId) === lit(settings.homeTeamId.getOrElse(""))
+    params.method match {
+      case "full" => params.orient match {
+        case "home_away" => when(isBall, 2).when(isHomeTeam, 0).otherwise(1)
+        case "away_home" => when(isBall, 2).when(isHomeTeam, 1).otherwise(0)
+        case "pressing"  => when(isBall, 2).when(isOwning, 1).otherwise(0)
+        case _           => when(isBall, 2).when(isOwning, 0).otherwise(1)
+      }
+      case _ => when(isBall, 2).when(isOwning, 0).otherwise(1)
+    }
+  }
+
+  // ---- Over a pair row: the row object's fields `r_*`, the column
+  // object's `c_*` (`id`, `ball`, `carrier`, `x`..`vz`, `v`, `boti`). ----
+
+  /** TTI of the row object reaching the column object
+    * (`models/utils.py:74-99`, operation for operation). */
+  private[models] def tti(settings: TrackingSettings, params: Params): Column = {
+    val ux = (col("c_x") + col("c_vx")) - col("c_x")
+    val uy = (col("c_y") + col("c_vy")) - col("c_y")
+    val uz = (col("c_z") + col("c_vz")) - col("c_z")
+    val uMag = sqrt(ux * ux + uy * uy + uz * uz)
+    val d2x = col("r_x") + col("r_vx")
+    val d2y = col("r_y") + col("r_vy")
+    val d2z = col("r_z") + col("r_vz")
+    val vxx = d2x - col("c_x"); val vyy = d2y - col("c_y"); val vzz = d2z - col("c_z")
+    val vMag = sqrt(vxx * vxx + vyy * vyy + vzz * vzz)
+    val dot = ux * vxx + uy * vyy + uz * vzz
+    val angle = acos(dot / (uMag * vMag + lit(1e-10)))
+    val rt = lit(params.reactionTime)
+    val dx = d2x - (col("c_x") + col("c_vx") * rt)
+    val dy = d2y - (col("c_y") + col("c_vy") * rt)
+    val dz = d2z - (col("c_z") + col("c_vz") * rt)
+    val dMag = sqrt(dx * dx + dy * dy + dz * dz)
+    uMag * angle / lit(math.Pi) + rt + dMag / lit(settings.maxPlayerSpeed)
+  }
+
+  /** A scored pair, over the pair row plus `ball_tti`, the row object's
+    * largest TTI to a ball: whether the pair is kept, its tti and pti,
+    * and whether it is transposed.
+    *  - ball method "max" folds the ball column into the carrier's
+    *    (elementwise min) and drops the ball column, and in "full" the
+    *    ball row (`pressing_intensity.py:153-160, 279-287`);
+    *  - PTI from the merged TTI (`utils.py:4-14`), then the full-method
+    *    diagonal zeroes tti only (the reference fills it after pti);
+    *  - the speed threshold zeroes pti of slow rows and columns
+    *    (`:299-301`);
+    *  - the orient swaps rows and columns (`:303-326`). */
+  private[models] def scored(settings: TrackingSettings, params: Params): Seq[Column] = {
+    val raw = tti(settings, params)
+    val (merged, kept) = if (params.ballMethod == "max") {
+      (when(col("c_carrier"), least(raw, col("ball_tti"))).otherwise(raw),
+        if (params.method == "full") !col("c_ball") && !col("r_ball") else !col("c_ball"))
+    } else (raw, lit(true))
+    val expArg = lit(-math.Pi) / lit(math.sqrt(3.0)) / lit(params.sigma) *
+      (lit(params.timeThreshold) - merged)
+    val pti = lit(1.0) / (lit(1.0) + exp(least(greatest(expArg, lit(-700.0)), lit(700.0))))
+    val diagonal = if (params.method == "full") when(col("r_id") === col("c_id"), 0.0).otherwise(merged)
+      else merged
+    val masked = params.speedThreshold match {
+      case Some(th) => when(col("r_v") < th || col("c_v") < th, 0.0).otherwise(pti)
+      case None => pti
+    }
+    val home = lit(settings.homeTeamId.getOrElse(""))
+    val transposed = params.orient match {
+      case "pressing" => lit(true)
+      case "home_away" => col("r_boti") === home
+      case "away_home" => col("r_boti") =!= home
+      case _ => lit(false)
+    }
+    Seq(kept, diagonal, masked, transposed)
+  }
 }
 
 /** One frame's rows → its scored PI pairs (ts, row_id, col_id,
   * row_idx, col_idx, tti, pti).
   *
-  * Faithfulness: the kernel transcribes the staged Column tree
-  * operation-for-operation with Catalyst's exact semantics — the
-  * three-valued side masks and the `colSide || rowSide` filter,
-  * `when`'s null-as-false predicate handling, `Greatest`/`Least`/`Max`
-  * null-skipping with Double.compare (NaN-greatest) ordering, null
-  * propagation through the TTI arithmetic (null iff any of the 12
-  * coordinates is null — every coordinate feeds every surviving term),
-  * and UTF8String equality in the diagonal/transpose tests. Output is
-  * bit-identical to the staged path for every column except `pti`,
-  * which can differ by a few ULP on ~0.1% of rows: pti is the only output
-  * through `exp`, and HotSpot's `_dexp` intrinsic differs from the
-  * `StrictMath.exp` fallback by ≤1 ULP on some inputs, so which value
-  * a call site produces depends on its JIT compilation state — the
-  * staged path is itself not bit-reproducible there (verified with a
-  * standalone JVM probe). Every declared query rounds tti/pti to 6
-  * decimals, which absorbs the wobble.
+  * It evaluates the definitions of [[PressingIntensity]], bound by
+  * [[PiPairsKernel.apply]] once per params, settings, timestamp type
+  * and conf, so the kernel and the relational definitions compute the
+  * same values by construction:
+  *  - `node`, over a node row of its inputs: the side masks (`sides`,
+  *    which `pairs` also filters on), `sideRank`, the ball flag and the
+  *    owning-player flag;
+  *  - `tti`, over a pair row (the two node rows as the staged pair
+  *    table's `r_*`/`c_*` fields), for the pairs of a ball column;
+  *  - `scored`, over the pair row plus the row object's ball TTI: the
+  *    ball-method filter, the carrier merge of `tti`, PTI, the
+  *    full-method diagonal, the speed mask and the transpose flag.
+  *
+  * The kernel itself does only what is frame-level: membership (a side
+  * mask TRUE), the node order and each node's matrix index (`gidx`, and
+  * `nOwn` for the teams method), the per-`r_id` ball-TTI maximum
+  * (Catalyst `Max`: nulls skipped, NaN greatest), the pair fan-out and
+  * row packing.
+  *
+  * Output is bit-identical to the staged path (`PiStagedReference`) for
+  * every column except `pti`, which can differ by a few ULP on ~0.1% of
+  * rows: pti is the only output through `exp`, and HotSpot's `_dexp`
+  * intrinsic differs from the `StrictMath.exp` fallback by ≤1 ULP on
+  * some inputs, so which value a call site produces depends on its JIT
+  * compilation state — the staged path is itself not bit-reproducible
+  * there (verified with a standalone JVM probe). Every declared query
+  * rounds tti/pti to 6 decimals, which absorbs the wobble.
   *
   * The same kernel scores the frames of
   * [[graft.streaming.StreamingPressing]], which runs it on each frame
@@ -136,282 +237,157 @@ object PressingIntensity {
 private[graft] final case class PiPairsKernel(
     tsType: DataType,
     params: PressingIntensity.Params,
-    settings: TrackingSettings) extends GroupGenerator {
-  import Cols._
-  import params.{ballMethod, reactionTime, sigma, timeThreshold}
+    node: Seq[Expression],
+    tti: Expression,
+    scored: Seq[Expression]) extends GroupGenerator {
+  import PiPairsKernel._
 
-  override def inputs: Seq[(String, DataType)] = Seq(Timestamp -> tsType,
-    ObjectId -> StringType, TeamId -> StringType, BallOwningTeamId -> StringType,
-    IsBallCarrier -> BooleanType) ++ Seq(X, Y, Z, Vx, Vy, Vz, Speed).map(_ -> DoubleType)
+  override def inputs: Seq[(String, DataType)] = nodeFields(tsType)
   override def output: Seq[StructField] = Seq(
-    StructField(Timestamp, tsType), StructField("row_id", StringType),
+    StructField(Cols.Timestamp, tsType), StructField("row_id", StringType),
     StructField("col_id", StringType), StructField("row_idx", IntegerType),
     StructField("col_idx", IntegerType), StructField("tti", DoubleType),
     StructField("pti", DoubleType))
 
-  private val method = params.method
-  private val orient = params.orient
-  private val hasSpeedThreshold = params.speedThreshold.isDefined
-  private val speedLimit = params.speedThreshold.getOrElse(0.0)
-  private val maxPlayerSpeed = settings.maxPlayerSpeed
-  private val homeTeamId = settings.homeTeamId.getOrElse("")
+  private val teams = params.method == "teams"
+  private val ballMax = params.ballMethod == "max"
 
-  private val BallS = UTF8String.fromString(Ball)
-  private val HomeS = UTF8String.fromString(homeTeamId)
-  /** Catalyst folds lit(-π)/lit(√3)/lit(σ) left-associatively. */
-  private val expK = -math.Pi / math.sqrt(3.0) / sigma
-
-  /** One input row; `tsVal` stays the raw value so any timestamp
-    * column type passes through unchanged. */
-  private final class Nd(
-      val tsVal: Any, val id: UTF8String, val team: UTF8String,
-      val boti: UTF8String, val carrier: java.lang.Boolean,
-      val x: java.lang.Double, val y: java.lang.Double, val z: java.lang.Double,
-      val vx: java.lang.Double, val vy: java.lang.Double, val vz: java.lang.Double,
-      val v: java.lang.Double) {
-    var gidx: Int = -1
-    def isBall: java.lang.Boolean = tEq(team, BallS)
-    def isOwning: java.lang.Boolean = tEq(team, boti)
-  }
-
-  // three-valued boolean algebra (java.lang.Boolean, null = unknown)
-  private def tEq(a: UTF8String, b: UTF8String): java.lang.Boolean =
-    if (a == null || b == null) null else java.lang.Boolean.valueOf(a.equals(b))
-  private def tNot(a: java.lang.Boolean): java.lang.Boolean =
-    if (a == null) null else java.lang.Boolean.valueOf(!a.booleanValue())
-  private def tAnd(a: java.lang.Boolean, b: java.lang.Boolean): java.lang.Boolean =
-    if (a != null && !a.booleanValue()) java.lang.Boolean.FALSE
-    else if (b != null && !b.booleanValue()) java.lang.Boolean.FALSE
-    else if (a == null || b == null) null
-    else java.lang.Boolean.TRUE
-  private def tOr(a: java.lang.Boolean, b: java.lang.Boolean): java.lang.Boolean =
-    if (a != null && a.booleanValue()) java.lang.Boolean.TRUE
-    else if (b != null && b.booleanValue()) java.lang.Boolean.TRUE
-    else if (a == null || b == null) null
-    else java.lang.Boolean.FALSE
-  private def isTrue(a: java.lang.Boolean): Boolean = a != null && a.booleanValue()
-
-  private def readNd(g: Group, i: Int): Nd = {
-    def num(in: Int) = if (g.isNull(i, in)) null else java.lang.Double.valueOf(g.double(i, in))
-    new Nd(g.get(i, 0), g.string(i, 1), g.string(i, 2), g.string(i, 3),
-      if (g.isNull(i, 4)) null else java.lang.Boolean.valueOf(g.boolean(i, 4)),
-      num(5), num(6), num(7), num(8), num(9), num(10), num(11))
-  }
-
-  /** Side membership — the staged chain's indexed base (`PiStagedReference`) transcribed. */
-  private def colSide(nd: Nd): java.lang.Boolean = method match {
-    case "teams" => ballMethod match {
-      case "exclude" => tAnd(nd.isOwning, tNot(nd.isBall))
-      case _         => tOr(nd.isOwning, nd.isBall)
-    }
-    case "full" =>
-      if (ballMethod == "exclude") tNot(nd.isBall) else java.lang.Boolean.TRUE
-  }
-  private def rowSide(nd: Nd): java.lang.Boolean = method match {
-    case "teams" => ballMethod match {
-      case "exclude" => tAnd(tNot(nd.isOwning), tNot(nd.isBall))
-      case _         => tNot(tOr(nd.isOwning, nd.isBall))
-    }
-    case "full" =>
-      if (ballMethod == "exclude") tNot(nd.isBall) else java.lang.Boolean.TRUE
-  }
-
-  /** The window's sort rank: `when` chains treat a null predicate as
-    * false, so the rank itself is never null. */
-  private def sideRank(nd: Nd): Int = {
-    val isBall = nd.isBall
-    method match {
-      case "full" => orient match {
-        case "home_away" =>
-          if (isTrue(isBall)) 2 else if (isTrue(tEq(nd.team, HomeS))) 0 else 1
-        case "away_home" =>
-          if (isTrue(isBall)) 2 else if (isTrue(tEq(nd.team, HomeS))) 1 else 0
-        case "pressing" =>
-          if (isTrue(isBall)) 2 else if (isTrue(nd.isOwning)) 1 else 0
-        case _ =>
-          if (isTrue(isBall)) 2 else if (isTrue(nd.isOwning)) 0 else 1
-      }
-      case _ => if (isTrue(isBall)) 2 else if (isTrue(nd.isOwning)) 0 else 1
-    }
-  }
-
-  /** TTI (`PiStagedReference` scorePairs transcribed): null iff any of the 12 coordinates
-    * is null — every coordinate feeds at least one term of the sum and
-    * SQL nulls propagate through every arithmetic step. */
-  private def ttiOf(r: Nd, c: Nd): java.lang.Double = {
-    if (c.x == null || c.y == null || c.z == null ||
-        c.vx == null || c.vy == null || c.vz == null ||
-        r.x == null || r.y == null || r.z == null ||
-        r.vx == null || r.vy == null || r.vz == null) return null
-    val cx = c.x.doubleValue(); val cy = c.y.doubleValue(); val cz = c.z.doubleValue()
-    val cvx = c.vx.doubleValue(); val cvy = c.vy.doubleValue(); val cvz = c.vz.doubleValue()
-    val rx = r.x.doubleValue(); val ry = r.y.doubleValue(); val rz = r.z.doubleValue()
-    val rvx = r.vx.doubleValue(); val rvy = r.vy.doubleValue(); val rvz = r.vz.doubleValue()
-    val ux = (cx + cvx) - cx
-    val uy = (cy + cvy) - cy
-    val uz = (cz + cvz) - cz
-    val uMag = math.sqrt(ux * ux + uy * uy + uz * uz)
-    val d2x = rx + rvx; val d2y = ry + rvy; val d2z = rz + rvz
-    val vxx = d2x - cx; val vyy = d2y - cy; val vzz = d2z - cz
-    val vMag = math.sqrt(vxx * vxx + vyy * vyy + vzz * vzz)
-    val dot = ux * vxx + uy * vyy + uz * vzz
-    val angle = math.acos(dot / (uMag * vMag + 1e-10))
-    val rt = reactionTime
-    val dx = d2x - (cx + cvx * rt)
-    val dy = d2y - (cy + cvy * rt)
-    val dz = d2z - (cz + cvz * rt)
-    val dMag = math.sqrt(dx * dx + dy * dy + dz * dz)
-    java.lang.Double.valueOf(uMag * angle / math.Pi + rt + dMag / maxPlayerSpeed)
-  }
-
-  /** Catalyst Least on nullable doubles: skips nulls, Double.compare
-    * (NaN-greatest) ordering. */
-  private def cLeast(a: java.lang.Double, b: java.lang.Double): java.lang.Double =
-    if (a == null) b
-    else if (b == null) a
-    else if (java.lang.Double.compare(b.doubleValue(), a.doubleValue()) < 0) b else a
-
-  /** PTI (`PiStagedReference` scorePairs transcribed): greatest/least SKIP a null expArg,
-    * so a null TTI clamps to exp(-700), not null. */
-  private def ptiOf(tti: java.lang.Double): Double = {
-    val expArg: java.lang.Double =
-      if (tti == null) null
-      else java.lang.Double.valueOf(expK * (timeThreshold - tti.doubleValue()))
-    val g: Double =
-      if (expArg == null) -700.0
-      else if (java.lang.Double.compare(expArg.doubleValue(), -700.0) > 0)
-        expArg.doubleValue()
-      else -700.0
-    val l: Double = if (java.lang.Double.compare(700.0, g) < 0) 700.0 else g
-    1.0 / (1.0 + math.exp(l))
-  }
+  // one projection of each kind per task, built on first use
+  @transient private lazy val nodeProj = UnsafeProjection.create(node)
+  @transient private lazy val ttiProj = UnsafeProjection.create(Seq(tti))
+  @transient private lazy val scoreProj = UnsafeProjection.create(scored)
 
   override def run(g: Group): Iterator[InternalRow] = {
-    // read + the staged `.filter(colSide || rowSide)` (keep iff TRUE)
     val nodes = new ArrayBuffer[Nd](g.size)
     var b = 0
     while (b < g.size) {
-      val nd = readNd(g, b)
-      if (isTrue(tOr(colSide(nd), rowSide(nd)))) nodes += nd
+      val v = new Array[Any](Width)
+      var k = 0
+      while (k < InputWidth) { v(k) = g.get(b, k); k += 1 }
+      val o = nodeProj(new GenericInternalRow(v))
+      if (o.getBoolean(0) || o.getBoolean(1)) {
+        v(InputWidth) = if (o.isNullAt(3)) null else o.getBoolean(3)
+        nodes += new Nd(v, o.getBoolean(0), o.getBoolean(1), o.getInt(2), o.getBoolean(4), o.getBoolean(5))
+      }
       b += 1
     }
     if (nodes.isEmpty) return Iterator.empty
 
-    // the window's (sideRank ASC, id ASC NULLS FIRST) order → gidx;
-    // ties are between rows the staged row_number also ordered
-    // arbitrarily (ids are unique per frame in every declared input)
+    // the window's (sideRank, id) order → gidx; ties are between rows
+    // the staged row_number also ordered arbitrarily (ids are unique
+    // per frame in every declared input)
     val arr = nodes.toArray
-    java.util.Arrays.sort(arr, (p: Nd, q: Nd) => {
-      val c = Integer.compare(sideRank(p), sideRank(q))
-      if (c != 0) c
-      else if (p.id == null && q.id == null) 0
-      else if (p.id == null) -1
-      else if (q.id == null) 1
-      else p.id.compareTo(q.id)
-    })
+    java.util.Arrays.sort(arr, (p: Nd, q: Nd) => NodeOrder.compare(p.rank, p.id, q.rank, q.id))
+    var nOwn = 0
     var i = 0
-    var nOwn = 0L
     while (i < arr.length) {
       arr(i).gidx = i
-      if (isTrue(tAnd(arr(i).isOwning, tNot(arr(i).isBall)))) nOwn += 1
+      if (arr(i).owningPlayer) nOwn += 1
       i += 1
     }
+    def cIdx(nd: Nd): Int = if (teams && nd.isBall) nOwn else nd.gidx
+    def rIdx(nd: Nd): Int = if (teams) nd.gidx - nOwn else nd.gidx
 
     // pair fan-out: r side × c side (inner join on the frame key)
-    val cRows = arr.filter(nd => isTrue(colSide(nd)))
-    val rRows = arr.filter(nd => isTrue(rowSide(nd)))
+    val cRows = arr.filter(_.colSide)
+    val rRows = arr.filter(_.rowSide)
     if (cRows.isEmpty || rRows.isEmpty) return Iterator.empty
 
-    def cIdx(nd: Nd): Int = method match {
-      case "teams" => if (isTrue(nd.isBall)) nOwn.toInt else nd.gidx
-      case "full" => nd.gidx
-    }
-    def rIdx(nd: Nd): Int = method match {
-      case "teams" => (nd.gidx - nOwn).toInt
-      case "full" => nd.gidx
-    }
+    // one reused pair row: the r node, the c node, then ball_tti
+    val pv = new Array[Any](2 * Width + 1)
+    val pair = new GenericInternalRow(pv)
 
-    // TTI for every pair, plus (ball_method "max") the per-r_id ball
-    // TTI — the staged window partitions by the r_id VALUE, so the
-    // max is keyed on the id, not the row (null ids pool under a
-    // sentinel exactly like a null window key)
-    val tti0 = Array.ofDim[java.lang.Double](rRows.length, cRows.length)
+    // ball method "max": each r_id's largest TTI to a ball. The staged
+    // window partitions by the r_id VALUE, so the max is keyed on the
+    // id, not the row (null ids pool under a sentinel exactly like a
+    // null window key)
     val ballTti = new java.util.HashMap[Any, java.lang.Double]()
-    val NullKey = new Object
-    var ri = 0
-    while (ri < rRows.length) {
-      val r = rRows(ri)
-      var ci = 0
-      while (ci < cRows.length) {
-        val c = cRows(ci)
-        val t = ttiOf(r, c)
-        tti0(ri)(ci) = t
-        if (ballMethod == "max" && isTrue(c.isBall) && t != null) {
-          val key: Any = if (r.id == null) NullKey else r.id
-          val cur = ballTti.get(key)
-          if (cur == null || java.lang.Double.compare(t.doubleValue(), cur.doubleValue()) > 0)
-            ballTti.put(key, t)
-        }
-        ci += 1
+    def key(r: Nd): Any = if (r.id == null) NullKey else r.id
+    if (ballMax) for (r <- rRows; c <- cRows if c.isBall) {
+      System.arraycopy(r.v, 0, pv, 0, Width)
+      System.arraycopy(c.v, 0, pv, Width, Width)
+      val t = ttiProj(pair)
+      if (!t.isNullAt(0)) {
+        val cur = ballTti.get(key(r))
+        if (cur == null || java.lang.Double.compare(t.getDouble(0), cur) > 0) ballTti.put(key(r), t.getDouble(0))
       }
-      ri += 1
     }
 
     val out = new ArrayBuffer[InternalRow](rRows.length * cRows.length)
-    ri = 0
+    var ri = 0
     while (ri < rRows.length) {
       val r = rRows(ri)
+      System.arraycopy(r.v, 0, pv, 0, Width)
+      pv(2 * Width) = ballTti.get(key(r))
       var ci = 0
       while (ci < cRows.length) {
         val c = cRows(ci)
-        var keep = true
-        var tti: java.lang.Double = tti0(ri)(ci)
-        if (ballMethod == "max") {
-          // merge: when(c_carrier, least(tti, ballTti)).otherwise(tti)
-          if (isTrue(c.carrier)) {
-            val key: Any = if (r.id == null) NullKey else r.id
-            tti = cLeast(tti, ballTti.get(key))
-          }
-          // filter !c_ball (null team ⇒ null predicate ⇒ dropped)
-          if (!isTrue(tNot(c.isBall))) keep = false
-          if (method == "full" && !isTrue(tNot(r.isBall))) keep = false
-        }
-        if (keep) {
-          var pti: java.lang.Double = java.lang.Double.valueOf(ptiOf(tti))
-          // full-method diagonal: tti := 0.0 AFTER pti (reference order)
-          if (method == "full" && isTrue(tEq(r.id, c.id)))
-            tti = java.lang.Double.valueOf(0.0)
-          if (hasSpeedThreshold) {
-            // when(r_v < th || c_v < th, 0.0).otherwise(pti)
-            val rLow: java.lang.Boolean =
-              if (r.v == null) null
-              else java.lang.Boolean.valueOf(r.v.doubleValue() < speedLimit)
-            val cLow: java.lang.Boolean =
-              if (c.v == null) null
-              else java.lang.Boolean.valueOf(c.v.doubleValue() < speedLimit)
-            if (isTrue(tOr(rLow, cLow))) pti = java.lang.Double.valueOf(0.0)
-          }
-          // orientation transpose (null predicate ⇒ not transposed)
-          val transposed: Boolean = orient match {
-            case "pressing" => true
-            case "home_away" => isTrue(tEq(r.boti, HomeS))
-            case "away_home" => isTrue(tNot(tEq(r.boti, HomeS)))
-            case _ => false
-          }
-          val rowId: Any = if (transposed) c.id else r.id
-          val colId: Any = if (transposed) r.id else c.id
-          val rowIdx: Any =
-            Integer.valueOf(if (transposed) cIdx(c) else rIdx(r))
-          val colIdx: Any =
-            Integer.valueOf(if (transposed) rIdx(r) else cIdx(c))
-          out += new GenericInternalRow(Array[Any](
-            c.tsVal, rowId, colId, rowIdx, colIdx, tti, pti))
+        System.arraycopy(c.v, 0, pv, Width, Width)
+        val s = scoreProj(pair)
+        if (s.getBoolean(0)) {
+          val tti: Any = if (s.isNullAt(1)) null else s.getDouble(1)
+          val pti: Any = if (s.isNullAt(2)) null else s.getDouble(2)
+          val transposed = s.getBoolean(3)
+          val (rowNd, colNd) = if (transposed) (c, r) else (r, c)
+          val (rowIdx, colIdx) = if (transposed) (cIdx(c), rIdx(r)) else (rIdx(r), cIdx(c))
+          out += new GenericInternalRow(Array[Any](c.ts, rowNd.id, colNd.id, rowIdx, colIdx, tti, pti))
         }
         ci += 1
       }
       ri += 1
     }
     out.iterator
+  }
+}
+
+private[graft] object PiPairsKernel {
+  import Cols._
+
+  /** A node row: the kernel's inputs. */
+  private def nodeFields(tsType: DataType): Seq[(String, DataType)] = Seq(Timestamp -> tsType,
+    ObjectId -> StringType, TeamId -> StringType, BallOwningTeamId -> StringType,
+    IsBallCarrier -> BooleanType) ++ Seq(X, Y, Z, Vx, Vy, Vz, Speed).map(_ -> DoubleType)
+  private val InputWidth = 12
+  /** One side of a pair row: a node row under the staged pair table's
+    * names, then the node's ball flag. */
+  private val sideNames = Seq("ts", "id", "team", "boti", "carrier", "x", "y", "z", "vx", "vy", "vz", "v", "ball")
+  private val Width = sideNames.length
+
+  private val NullKey = new Object
+
+  /** One member row and what the node definitions say of it. */
+  private final class Nd(val v: Array[Any], val colSide: Boolean, val rowSide: Boolean,
+      val rank: Integer, val isBall: Boolean, val owningPlayer: Boolean) {
+    def ts: Any = v(0)
+    def id: UTF8String = v(1).asInstanceOf[UTF8String]
+    var gidx: Int = -1
+  }
+
+  private val memo = new KernelBinding.Memo[(DataType, PressingIntensity.Params, TrackingSettings), PiPairsKernel]
+
+  /** The kernel for `params`, its definitions bound in `spark`, or the
+    * last binding under the same timestamp type, params, settings and
+    * conf. */
+  def apply(spark: SparkSession, tsType: DataType, params: PressingIntensity.Params,
+      settings: TrackingSettings): PiPairsKernel =
+    // a fresh instance: its projections are per instance
+    memo(spark, (tsType, params, settings))(bindKernel(spark, tsType, params, settings)).copy()
+
+  private def bindKernel(spark: SparkSession, tsType: DataType, params: PressingIntensity.Params,
+      settings: TrackingSettings): PiPairsKernel = {
+    import PressingIntensity._
+    // a filter keeps a row iff its predicate is TRUE: NULL drops it
+    def holds(c: Column): Column = c <=> lit(true)
+    val (colSide, rowSide) = sides(params)
+    val node = KernelBinding.bind(spark, nodeFields(tsType), Seq(holds(colSide), holds(rowSide),
+      sideRank(settings, params), isBall, holds(isBall), holds(owningPlayer)))
+    val side = sideNames.zip(nodeFields(tsType).map(_._2) :+ BooleanType)
+    val pairFields = Seq("r_", "c_").flatMap(p => side.map { case (c, t) => (p + c, t) })
+    val Seq(t) = KernelBinding.bind(spark, pairFields, Seq(PressingIntensity.tti(settings, params)))
+    val Seq(kept, tti, pti, transposed) = scored(settings, params)
+    val score = KernelBinding.bind(spark, pairFields :+ ("ball_tti" -> DoubleType),
+      Seq(holds(kept), tti, pti, holds(transposed)))
+    PiPairsKernel(tsType, params, node, t, score)
   }
 }
 

@@ -56,8 +56,9 @@ object StreamingPressing {
       reactionTime: Double = 0.7,
       timeThreshold: Double = 1.5,
       sigma: Double = 0.45): Dataset[PressPair] = {
-    val kernel = PiPairsKernel(LongType, PressingIntensity.Params(ballMethod = "include",
-      reactionTime = reactionTime, timeThreshold = timeThreshold, sigma = sigma), settings)
+    val kernel = PiPairsKernel(rows.sparkSession, LongType, PressingIntensity.Params(
+      ballMethod = "include", reactionTime = reactionTime, timeThreshold = timeThreshold,
+      sigma = sigma), settings)
     FrameCompletion(rows, lateness, (r: KinRow) => (r.game_id, r.period_id, r.frame_id),
       (r: KinRow) => r.abs_ts) { case ((game, period, frame), buffered) =>
       // kernel rows: (ts, row_id, col_id, row_idx, col_idx, tti, pti)

@@ -231,6 +231,34 @@ class GraphConverterSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
+  test("PI pairs keep their binding across graph kernels until the conf changes") {
+    import graft.functions.GroupLocal
+    import graft.models.{PiPairsKernel, PressingIntensity}
+    def piKernel(df: DataFrame): PiPairsKernel =
+      df.queryExecution.logical.collectFirst { case g: GroupLocal => g.kernel }.get.asInstanceOf[PiPairsKernel]
+    def bound(k: PiPairsKernel) = k.node ++ Seq(k.tti) ++ k.scored
+    def graphBound(k: GraphKernel) = Seq(k.order, k.nodeFeatures, k.adjacency, k.edgeFeatures)
+    def same(a: Seq[AnyRef], b: Seq[AnyRef]) = a.zip(b).forall { case (x, y) => x eq y }
+    val params = PressingIntensity.Params(method = "full", speedThreshold = Some(2.0))
+    def pi() = piKernel(PressingIntensity.pairs(smallFrame, params = params))
+    def graph() = GraphKernel(spark, GraphSettings(pad = false), Seq(Label -> LongType))
+    val (p0, g0) = (pi(), graph())
+    // alternating PI and graph kernels re-bind neither
+    (1 to 2).foreach { _ =>
+      val (p, g) = (pi(), graph())
+      assert((p ne p0) && (g ne g0))
+      assert(same(bound(p), bound(p0)))
+      assert(same(graphBound(g), graphBound(g0)))
+    }
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", (!ansi.toBoolean).toString)
+    try {
+      val flipped = pi()
+      assert(bound(flipped).zip(bound(p0)).forall { case (a, b) => a ne b })
+      assert(bound(flipped) != bound(p0))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("graphFrames: ball_owning_team_id is the frame's minimum owning team") {
     // h1 (a home player) is the one row naming "away", so it sorts among
     // the defenders and is not the frame's first row in node order

@@ -162,6 +162,22 @@ class FrameKernelParitySpec extends AnyFunSuite {
       TrackingSettings() -> PressingIntensity.Params(method = "full", ballMethod = "max"))
   }
 
+  /** Every `Params` arm: method × ball method × orient × speed threshold,
+    * with the home team set for the home/away orients. */
+  private val piGrid: Seq[(graft.tracking.TrackingSettings, PressingIntensity.Params)] = {
+    import graft.tracking.TrackingSettings
+    for {
+      method <- Seq("teams", "full")
+      ballMethod <- Seq("max", "include", "exclude")
+      orient <- Seq("ball_owning", "pressing", "home_away", "away_home")
+      speed <- Seq(None, Some(2.0))
+    } yield {
+      val settings = if (orient.contains("home")) TrackingSettings(homeTeamId = Some("home"))
+        else TrackingSettings()
+      settings -> PressingIntensity.Params(method, ballMethod, orient, speed)
+    }
+  }
+
   /** PI rows keyed by every column but tti/pti, with tti and pti bits. */
   private def piRows(df: DataFrame): Seq[(String, java.lang.Long, java.lang.Long)] = {
     def bits(r: Row, c: String): java.lang.Long = {
@@ -175,10 +191,13 @@ class FrameKernelParitySpec extends AnyFunSuite {
   }
 
   test("pi pair kernel equals the staged pairs: tti bit-exact, pti within 4 ULP") {
-    val cases = draw(table(anyKeys), 12, 5101L)
+    // twelve tables over the hand-picked combos, then one per grid point
+    val combos = Seq.tabulate(12)(i => piCombos(i % piCombos.size)) ++ piGrid
+    assert(piGrid.distinct.size === 48)
+    val cases = draw(table(anyKeys), combos.size, 5101L)
     assertReaches(cases, nullKeys = true)
     cases.zipWithIndex.foreach { case (rows, i) =>
-      val (settings, params) = piCombos(i % piCombos.size)
+      val (settings, params) = combos(i)
       underPartitionings(rows, 5101L + i) { df =>
         val got = PressingIntensity.pairs(df, settings, params)
         val want = PiStagedReference.pairs(df, settings, params)

@@ -8,9 +8,12 @@ import org.apache.spark.sql.functions._
 
 /** The staged Pressing Intensity pipeline that [[PressingIntensity.pairs]]
   * replaced (window → stage-boundary repartition → pair self-join →
-  * ball-merge window), kept as the reference PiPairsFusedSpec compares
-  * the fused aggregate against: `tti` bit-exact, `pti` within 4 ULP.
-  * Same output schema as [[PressingIntensity.pairs]]. */
+  * ball-merge window), kept as the reference PiPairsFusedSpec and
+  * FrameKernelParitySpec compare the frame kernel ([[PiPairsKernel]])
+  * against: `tti` bit-exact, `pti` within 4 ULP. It keeps its own
+  * Column tree rather than the definitions the kernel evaluates, so the
+  * comparison checks them against an independent copy of the
+  * arithmetic. Same output schema as [[PressingIntensity.pairs]]. */
 object PiStagedReference {
   import Cols._
 
